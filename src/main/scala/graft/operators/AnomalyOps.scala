@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.round
+import graft.streaming.AnomalyProcessor
+import graft.streaming.AnomalyProcessor.{MadThreshold, MinSamples, ZThreshold}
 
 /** Batch analog of the reference anomaly-detection job (SURVEY §2.4
   * A6-A8, §2.7 T4-T9): per-source rolling statistics over the last 100
@@ -12,16 +14,11 @@ import graft.functions.Rounding.round
   * (population stddev) and MAD detectors with threshold 3.0, warm-up
   * gate of 10 events, severity classification and anomaly-type tag.
   *
-  * Re-expressed Spark-first as analytic window functions over
+  * Re-expressed Spark-first as a window over
   * `Window.partitionBy(event_type).orderBy(ts, event_id).rowsBetween(-99, 0)`
   * — the exact batch equivalent of the keyed 100-deep ring buffer. The
   * streaming form with identical semantics lives in
   * [[graft.streaming.AnomalyProcessor]] (ValueState per key, SURVEY T3).
-  *
-  * Median/MAD have no built-in frame aggregate in Spark; we collect the
-  * frame (bounded: ≤100 doubles) and compute both with *native* Catalyst
-  * array expressions (`sort_array`/`element_at`/`transform`) — no UDF, so
-  * the whole pipeline stays codegen/optimizer-visible.
   *
   * Scale: one shuffle on event_type (the window partition key), then a
   * linear in-partition pass; frame buffers are O(100) regardless of data
@@ -30,90 +27,29 @@ import graft.functions.Rounding.round
   */
 object AnomalyOps {
 
-  private val ZThreshold = 3.0
-  private val MadThreshold = 3.0
-  private val MinSamples = 10
-
   /** Declarative (stock-Catalyst) formulation of [[anomalyScore]] —
     * kept as a named cross-check query; the default path below uses the
     * custom whole-operator plan, which is bit-identical and ~40% faster.
     *
-    * Plan-shape note: the whole rolling-statistics bundle is ONE custom
-    * Catalyst window aggregate ([[graft.functions.RollingStatsAgg]]):
-    * each frame is traversed once with primitive arrays, the result is a
-    * struct *attribute*, and every downstream consumer (alert filters,
-    * stats, cooldown) references cheap struct fields. The earlier
-    * higher-order-function formulation was correct but interpreted —
-    * and Catalyst's predicate pushdown substituted the non-codegen fold
-    * trees into every consumer, re-evaluating the 100-element folds many
-    * times per row (measured 45× slowdown on the alert queries).
+    * The whole rolling-statistics bundle is ONE window aggregate
+    * ([[graft.functions.RollingStatsAgg]]) whose result is a struct
+    * attribute, so downstream consumers (alert filters, stats, cooldown)
+    * reference cheap struct fields; an expression-valued bundle would be
+    * substituted into every consumer by predicate pushdown and re-folded
+    * per reference.
     */
   def anomalyScoreWindow(spark: SparkSession, dir: String): DataFrame = {
     val w = Window
       .partitionBy(col("event_type"))
       .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(-99, 0)
+      .rowsBetween(-(AnomalyProcessor.Window - 1), 0)
 
-    val scored = Tables
+    val withStats = Tables
       .events(spark, dir)
       .filter(col("value") > 0) // P3 validity filter (AnomalyDetectionJob.java:81-83)
       .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-      // reference RollingStats semantics in one pass: mean = sum/n,
-      // stddev = sqrt(max(0, sumSq/n - mean^2)) (population variance,
-      // AnomalyDetectionJob.java:191-213), midpoint median, MAD
       .withColumn("st", graft.functions.RollingStatsAgg(col("value")).over(w))
-      .withColumn("n_samples", col("st.n"))
-      .withColumn("mean_value", col("st.mean"))
-      .withColumn("stddev_value", col("st.stddev"))
-      .withColumn("median_value", col("st.median"))
-      .withColumn("mad_value", col("st.mad"))
-      .withColumn(
-        "z_score",
-        round(when(col("stddev_value") > 0,
-                   (col("value") - col("mean_value")) / col("stddev_value"))
-                .otherwise(0.0),
-              4))
-      .withColumn(
-        "mad_score",
-        round(when(col("mad_value") > 0,
-                   abs(col("value") - col("median_value")) / col("mad_value"))
-                .otherwise(0.0),
-              4))
-
-    scored
-      .filter(col("n_samples") >= MinSamples) // warm-up gate (T4)
-      .withColumn("z_anomaly", abs(col("z_score")) > ZThreshold)
-      .withColumn("mad_anomaly", col("mad_score") > MadThreshold)
-      .withColumn("is_anomaly", col("z_anomaly") || col("mad_anomaly"))
-      // severity classifier, AnomalyDetectionJob.java:327-337 (T7)
-      .withColumn(
-        "severity",
-        when(col("is_anomaly") && (abs(col("z_score")) > 4 || col("mad_score") > 4),
-             "critical")
-          .when(col("is_anomaly") && (abs(col("z_score")) > 3.5 || col("mad_score") > 3.5),
-                "warning")
-          .otherwise("info"))
-      // anomaly type: z-score takes precedence (AnomalyDetectionJob.java:344, T8)
-      .withColumn("anomaly_type",
-                  when(col("z_anomaly"), "z-score")
-                    .when(col("mad_anomaly"), "mad")
-                    .otherwise("normal"))
-      .select(
-        col("event_id"),
-        col("event_type"),
-        col("ts"),
-        col("value"),
-        col("n_samples"),
-        round(col("mean_value"), 4).as("mean_value"),
-        round(col("stddev_value"), 4).as("stddev_value"),
-        round(col("median_value"), 4).as("median_value"),
-        round(col("mad_value"), 4).as("mad_value"),
-        col("z_score"),
-        col("mad_score"),
-        col("is_anomaly"),
-        col("severity"),
-        col("anomaly_type")
-      )
+    scoreFromStats(withStats)
       .orderBy(col("event_type"), col("ts"), col("event_id"))
   }
 
@@ -157,7 +93,7 @@ object AnomalyOps {
         org.apache.spark.sql.catalyst.expressions.SortOrder(
           resolve("event_id"), org.apache.spark.sql.catalyst.expressions.Ascending)),
       value = resolve("value"),
-      windowSize = 100,
+      windowSize = AnomalyProcessor.Window,
       statsAttr = RollingStatsPlan.newStatsAttr("st"),
       child = child
     )
@@ -184,10 +120,11 @@ object AnomalyOps {
                    abs(col("value") - col("median_value")) / col("mad_value"))
                 .otherwise(0.0),
               4))
-      .filter(col("n_samples") >= MinSamples)
+      .filter(col("n_samples") >= MinSamples) // warm-up gate (T4)
       .withColumn("z_anomaly", abs(col("z_score")) > ZThreshold)
       .withColumn("mad_anomaly", col("mad_score") > MadThreshold)
       .withColumn("is_anomaly", col("z_anomaly") || col("mad_anomaly"))
+      // severity classifier, AnomalyDetectionJob.java:327-337 (T7)
       .withColumn(
         "severity",
         when(col("is_anomaly") && (abs(col("z_score")) > 4 || col("mad_score") > 4),
@@ -195,6 +132,7 @@ object AnomalyOps {
           .when(col("is_anomaly") && (abs(col("z_score")) > 3.5 || col("mad_score") > 3.5),
                 "warning")
           .otherwise("info"))
+      // anomaly type: z-score takes precedence (AnomalyDetectionJob.java:344, T8)
       .withColumn("anomaly_type",
                   when(col("z_anomaly"), "z-score")
                     .when(col("mad_anomaly"), "mad")

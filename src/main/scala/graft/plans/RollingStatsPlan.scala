@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 
+import graft.functions.RollingWindow
 
 /** Whole-operator form of keyed rolling statistics (SURVEY §2.7 T3 /
   * §2.4 A6-A8): for each row, the (n, mean, stddev, median, mad) of the
@@ -20,14 +21,10 @@ import org.apache.spark.sql.types._
   * sliding frame, which re-accumulates the whole frame through the
   * aggregate-buffer machinery for every output row. This operator makes
   * the same single demand on the planner (hash distribution +
-  * in-partition sort) and then streams each partition once, maintaining
-  * a primitive circular buffer per key and evaluating each frame with
-  * flat double arrays, with no aggregate-buffer serialization in the
-  * loop. Per-row cost is O(w) with small constants: the window multiset
-  * rides an incrementally-maintained sorted array (median is a direct
-  * order-statistics read), and the MAD streams deviations in ascending
-  * order via an outward two-pointer merge from the median's split point
-  * — no per-row comparison sort anywhere.
+  * in-partition sort) and then streams each partition once through one
+  * [[graft.functions.RollingWindow]] per live key: O(w) per row with
+  * primitive arrays, no aggregate-buffer serialization and no per-row
+  * sort.
   *
   * Frame evaluation uses the same sequential folds and midpoint-median
   * rules as [[graft.functions.RollingStatsAggExpr]], so results are
@@ -69,8 +66,8 @@ object RollingStatsPlan {
 }
 
 /** Physical operator: demands clustering on the key and a per-partition
-  * sort, then one streaming pass per partition with per-key ring
-  * buffers. State is O(windowSize × live keys in partition).
+  * sort, then one streaming pass per partition. Rows arrive clustered by
+  * key, so one window of O(windowSize) is live at a time.
   */
 case class RollingStatsExec(
     partitionKey: Expression,
@@ -110,112 +107,27 @@ case class RollingStatsExec(
       val joined = new JoinedRow
       val statsRow = new GenericInternalRow(5)
       val statsHolder = new GenericInternalRow(1)
-      // rows arrive key-clustered and key-sorted: one live buffer at a time.
-      // Primitive circular buffer for arrival order; `sorted` holds the
-      // SAME window multiset in ascending order, maintained
-      // incrementally — insert/evict are a binary search plus one
-      // arraycopy (memmove intrinsic), replacing the former per-row
-      // O(w log w) comparison sorts. sum/sumSq still fold the frame
-      // afresh IN ARRIVAL ORDER (incremental sum maintenance would
-      // drift in the last ulps vs the WindowExec form); the median
-      // reads the maintained order statistics directly, and the MAD
-      // comes from the outward two-pointer merge below. All values are
-      // bit-identical to WindowExec/RollingStatsAggExpr and the DuckDB
-      // oracle (asserted in CustomPlanSpec).
+      // rows arrive key-clustered and key-sorted: one live window at a time
       var currentKey: org.apache.spark.sql.catalyst.expressions.UnsafeRow = null
-      val ring = new Array[Double](w)
-      val frame = new Array[Double](w)
-      val sorted = new Array[Double](w)
-      var start = 0
-      var size = 0
-      def insertSorted(x: Double, n: Int): Unit = {
-        var i = java.util.Arrays.binarySearch(sorted, 0, n, x)
-        if (i < 0) i = -i - 1
-        System.arraycopy(sorted, i, sorted, i + 1, n - i)
-        sorted(i) = x
-      }
-      def removeSorted(x: Double, n: Int): Unit = {
-        // x was previously inserted, so it is present; binarySearch on
-        // double[] uses the same total order insertion used
-        val i = java.util.Arrays.binarySearch(sorted, 0, n, x)
-        System.arraycopy(sorted, i + 1, sorted, i, n - i - 1)
-      }
+      val window = new RollingWindow(w)
       rows.map { row =>
         val k = keyProj(row)
         if (currentKey == null || k != currentKey) {
           currentKey = k.copy()
-          start = 0
-          size = 0
+          window.clear()
         }
         val v = boundValue.eval(row)
         if (v != null) {
-          val x = v.asInstanceOf[Double]
-          if (size < w) {
-            ring((start + size) % w) = x
-            insertSorted(x, size)
-            size += 1
-          } else {
-            val evicted = ring(start)
-            ring(start) = x
-            start = (start + 1) % w
-            removeSorted(evicted, size)
-            insertSorted(x, size - 1)
-          }
+          window.add(v.asInstanceOf[Double])
+          // WindowExec and the oracle sum each frame afresh in arrival
+          // order; incremental moments would drift in the last ulps
+          window.refold()
         }
-        var i = 0
-        while (i < size) { frame(i) = ring((start + i) % w); i += 1 }
-        var sum = 0.0
-        var sumSq = 0.0
-        i = 0
-        while (i < size) { val x = frame(i); sum += x; sumSq += x * x; i += 1 }
-        val mean = if (size == 0) 0.0 else sum / size
-        val stddev =
-          if (size == 0) 0.0
-          else math.sqrt(math.max(0.0, sumSq / size - mean * mean))
-        val median =
-          if (size == 0) 0.0
-          else (sorted((size + 1) / 2 - 1) + sorted(size / 2)) / 2.0
-        // MAD without sorting deviations: |x − median| is decreasing as
-        // x walks left of the median and increasing as it walks right,
-        // so merging the two runs outward from the split point streams
-        // the deviations in ascending order — rank selection in O(w)
-        // (the offset-window trick). `m − x` for x ≤ m and `x − m` for
-        // x > m are bit-equal to the former `math.abs(x − m)` (IEEE
-        // negation is exact), so the selected deviations are the same
-        // doubles the sort-based form produced.
-        val mad =
-          if (size == 0) 0.0
-          else {
-            var lo0 = 0
-            var hi0 = size
-            while (lo0 < hi0) {
-              val mid = (lo0 + hi0) >>> 1
-              if (sorted(mid) <= median) lo0 = mid + 1 else hi0 = mid
-            }
-            val r1 = (size + 1) / 2 - 1
-            val r2 = size / 2
-            var lo = lo0 - 1
-            var hi = lo0
-            var rank = 0
-            var d1 = 0.0
-            var d2 = 0.0
-            while (rank <= r2) {
-              val dl =
-                if (lo >= 0) median - sorted(lo) else Double.PositiveInfinity
-              val dr =
-                if (hi < size) sorted(hi) - median else Double.PositiveInfinity
-              val d = if (dl <= dr) { lo -= 1; dl } else { hi += 1; dr }
-              if (rank == r1) d1 = d
-              if (rank == r2) d2 = d
-              rank += 1
-            }
-            (d1 + d2) / 2.0
-          }
-        statsRow.update(0, size.toLong)
-        statsRow.update(1, mean)
-        statsRow.update(2, stddev)
-        statsRow.update(3, median)
-        statsRow.update(4, mad)
+        statsRow.update(0, window.size.toLong)
+        statsRow.update(1, window.mean)
+        statsRow.update(2, window.stddev)
+        statsRow.update(3, window.median)
+        statsRow.update(4, window.mad)
         statsHolder.update(0, statsRow)
         outProj(joined(row, statsHolder))
       }

@@ -1,64 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-
-/** Spark-4-native form of the anomaly detector: a `StatefulProcessor`
-  * with explicit `ValueState[RollingStats]` — the 1:1 mapping of the
-  * reference's `RichFlatMapFunction` + `ValueState<RollingStats>`
-  * (`AnomalyDetectionJob.java:279-368`, SURVEY §2.7 T3).
-  *
-  * Functionally identical to [[AnomalyProcessor.detect]]
-  * (flatMapGroupsWithState); this variant uses the
-  * `transformWithState` API, which adds typed state handles, timers and
-  * TTL, and requires the RocksDB state store provider
-  * ([[AnomalyStatefulProcessor.rocksdbConf]]).
+/** The state-store provider setting every `transformWithState` processor
+  * needs ([[TypedStatefulProcessors]]; the anomaly detector's form is
+  * [[AnomalyListStateProcessor]]).
   */
-class AnomalyStatefulProcessor
-    extends StatefulProcessor[String, Event, AnomalyAlert] {
-
-  @transient private var stats: ValueState[RollingStats] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    stats = getHandle.getValueState[RollingStats](
-      "rollingStats", Encoders.product[RollingStats], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: String,
-      inputRows: Iterator[Event],
-      timerValues: TimerValues): Iterator[AnomalyAlert] = {
-    var st = Option(stats.get()).getOrElse(RollingStats())
-    val out = inputRows.toSeq
-      .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-      .flatMap { e =>
-        st = st.add(e.value)
-        if (st.size >= AnomalyProcessor.MinSamples)
-          Some(AnomalyProcessor.score(e, st))
-        else None
-      }
-    stats.update(st)
-    out.iterator
-  }
-}
-
 object AnomalyStatefulProcessor {
 
   /** transformWithState requires the RocksDB state store provider. */
   val rocksdbConf: (String, String) =
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** events → alerts via the native transformWithState operator. */
-  def anomalyStream(spark: SparkSession,
-                    events: Dataset[Event]): Dataset[AnomalyAlert] = {
-    import spark.implicits._
-    events
-      .filter(_.value > 0)
-      .groupByKey(_.event_type)
-      .transformWithState(new AnomalyStatefulProcessor,
-                          TimeMode.None(),
-                          OutputMode.Update())
-  }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.RollingWindow
 import org.apache.spark.sql.streaming.GroupState
 
 /** FUSED detector + cooldown — the single-query form of the full alert
@@ -12,7 +13,7 @@ import org.apache.spark.sql.streaming.GroupState
   * flatMapGroupsWithState stages in one query, but it never needs two —
   * the cooldown key `(source, severity)` NESTS under the detector key
   * `source`, so one processor keyed by `event_type` can carry both the
-  * rolling-stats ring buffer and the per-severity `lastFired` map, and
+  * rolling window and the per-severity `lastFired` map, and
   * gate each alert inline the instant it is scored. No second shuffle,
   * no second state commit, no second trigger interval.
   *
@@ -39,44 +40,36 @@ import org.apache.spark.sql.streaming.GroupState
   */
 object FusedAlertProcessor {
 
-  /** Both stages' state under the detector's key: the ring-buffer stats
+  /** Both stages' state under the detector's key: the rolling window
     * plus the per-severity last-FIRED epoch-ms map (≤3 entries — the
     * severity alphabet), exactly the union of the two queries' stores.
     */
-  case class FusedState(stats: RollingStats, lastFired: Map[String, Long])
+  case class FusedState(window: RollingWindow.State, lastFired: Map[String, Long])
 
-  /** flatMapGroupsWithState handler: score each event against the
-    * updated rolling stats ([[AnomalyProcessor.score]] — identical
-    * thresholds/severity/type), then apply the chained cooldown rule
-    * ([[CooldownProcessor]] semantics: fire only if ≥ cooldown since the
-    * last alert that actually FIRED for this (source, severity); firing
-    * updates the state).
+  /** flatMapGroupsWithState handler: score the batch with the plain
+    * detector's fold ([[AnomalyProcessor.scoreBatch]]), then apply the
+    * chained cooldown rule ([[CooldownProcessor]] semantics: fire only if
+    * ≥ cooldown since the last alert that actually FIRED for this
+    * (source, severity); firing updates the state).
     */
   def detectAndGate(
       key: String,
       events: Iterator[Event],
       state: GroupState[FusedState]): Iterator[CooldownProcessor.FiredAlert] = {
-    val init = state.getOption.getOrElse(FusedState(RollingStats(), Map.empty))
-    var stats = init.stats
-    var lastFired = init.lastFired
-    val out = events.toSeq
-      .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-      .flatMap { e =>
-        stats = stats.add(e.value)
-        if (stats.size < AnomalyProcessor.MinSamples) None
-        else {
-          val a = AnomalyProcessor.score(e, stats)
-          val t = a.ts.getTime
-          if (a.is_anomaly &&
-              lastFired.get(a.severity)
-                .forall(l => t - l >= CooldownProcessor.CooldownMillis)) {
-            lastFired = lastFired.updated(a.severity, t)
-            Some(CooldownProcessor.FiredAlert(a.event_id, a.event_type,
-                                              a.severity, a.ts))
-          } else None
-        }
-      }
-    state.update(FusedState(stats, lastFired))
+    val init = state.getOption
+    val window = AnomalyProcessor.restore(init.map(_.window))
+    var lastFired = init.fold(Map.empty[String, Long])(_.lastFired)
+    val out = AnomalyProcessor.scoreBatch(window, events.toSeq).flatMap { a =>
+      val t = a.ts.getTime
+      if (a.is_anomaly &&
+          lastFired.get(a.severity)
+            .forall(l => t - l >= CooldownProcessor.CooldownMillis)) {
+        lastFired = lastFired.updated(a.severity, t)
+        Some(CooldownProcessor.FiredAlert(a.event_id, a.event_type,
+                                          a.severity, a.ts))
+      } else None
+    }
+    state.update(FusedState(window.snapshot, lastFired))
     out.iterator
   }
 }

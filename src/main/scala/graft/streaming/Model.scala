@@ -5,8 +5,8 @@ import java.sql.Timestamp
 /** Typed in-flight records for the streaming pipeline — the analog of the
   * reference's Flink POJOs (SURVEY §1.1 item 4):
   * EventData (`EventAggregationJob.java:129-152`), AnomalyAlert
-  * (`AnomalyDetectionJob.java:160-175`), RollingStats
-  * (`AnomalyDetectionJob.java:178-251`).
+  * (`AnomalyDetectionJob.java:160-175`). The reference's RollingStats
+  * (`AnomalyDetectionJob.java:178-251`) is [[graft.functions.RollingWindow]].
   */
 case class Event(
     event_id: Long,
@@ -30,53 +30,3 @@ case class AnomalyAlert(
     is_anomaly: Boolean,
     severity: String,
     anomaly_type: String)
-
-/** Ring buffer of the last `maxSize` metric values with O(1) incremental
-  * sum / sumSquares maintenance — the same state shape and update rule as
-  * the reference RollingStats (`AnomalyDetectionJob.java:178-251`):
-  * population variance clamped at 0, median = midpoint (avg of two
-  * middles when even), MAD = median of absolute deviations.
-  *
-  * Kept as an immutable case class so it can live in Spark streaming
-  * state (`GroupState` / value state) with a product encoder.
-  */
-case class RollingStats(
-    values: Vector[Double] = Vector.empty,
-    sum: Double = 0.0,
-    sumSquares: Double = 0.0,
-    maxSize: Int = 100) {
-
-  def add(x: Double): RollingStats =
-    if (values.size >= maxSize) {
-      val evicted = values.head
-      copy(values = values.tail :+ x,
-           sum = sum - evicted + x,
-           sumSquares = sumSquares - evicted * evicted + x * x)
-    } else {
-      copy(values = values :+ x, sum = sum + x, sumSquares = sumSquares + x * x)
-    }
-
-  def size: Int = values.size
-
-  def mean: Double = if (values.isEmpty) 0.0 else sum / size
-
-  /** Population standard deviation, clamped ≥ 0 before the sqrt —
-    * reference `AnomalyDetectionJob.java:205-213`.
-    */
-  def stddev: Double =
-    if (values.isEmpty) 0.0
-    else math.sqrt(math.max(0.0, sumSquares / size - mean * mean))
-
-  private def medianOf(sorted: IndexedSeq[Double]): Double = {
-    val n = sorted.size
-    if (n == 0) 0.0
-    else (sorted((n + 1) / 2 - 1) + sorted(n / 2)) / 2.0
-  }
-
-  def median: Double = medianOf(values.sorted)
-
-  def mad: Double = {
-    val m = median
-    medianOf(values.map(x => math.abs(x - m)).sorted)
-  }
-}

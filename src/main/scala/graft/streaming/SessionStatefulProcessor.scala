@@ -30,7 +30,7 @@ case class SessionClosed(user_id: Long,
 
 /** Gap-based sessionization as a transformWithState processor with
   * EVENT-TIME TIMERS — the piece of the transformWithState API surface
-  * ([[AnomalyStatefulProcessor]] and friends use none of): a session
+  * ([[AnomalyListStateProcessor]] and friends use none of): a session
   * closes either when a same-key event arrives past the 30-minute gap
   * (emitted inline) or when the WATERMARK passes `last event + gap`
   * with no further events — which only a registered timer can observe

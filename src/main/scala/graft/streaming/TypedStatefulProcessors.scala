@@ -1,17 +1,18 @@
 package graft.streaming
 
+import graft.functions.RollingWindow
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** transformWithState (Spark 4 StatefulProcessor) forms of the remaining
-  * keyed stages — EWMA smoothing, event transitions, and the cooldown
-  * gate — completing the T3 migration started by
-  * [[AnomalyStatefulProcessor]] (SURVEY §2.7 names transformWithState as
-  * the 1:1 mapping of the reference's Flink `RichFlatMapFunction` +
+/** transformWithState (Spark 4 StatefulProcessor) forms of the keyed
+  * stages — the anomaly detector, EWMA smoothing, event transitions, the
+  * cooldown gate and more (SURVEY §2.7 names transformWithState as the
+  * 1:1 mapping of the reference's Flink `RichFlatMapFunction` +
   * `ValueState`, `AnomalyDetectionJob.java:279-368`).
   *
-  * Each processor delegates to the SAME pure `advance` core its
-  * flatMapGroupsWithState twin uses, so the two APIs cannot diverge;
+  * Each processor delegates to the SAME pure fold its
+  * flatMapGroupsWithState twin uses (an `advance` core, or
+  * [[AnomalyProcessor.scoreBatch]]), so the two APIs cannot diverge;
   * StreamingParitySpec still asserts end-to-end equality on multi-batch
   * splits. All require the RocksDB state store provider
   * ([[AnomalyStatefulProcessor.rocksdbConf]]).
@@ -398,16 +399,17 @@ class DocDedupStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE)
   */
 case class BufferMoments(sum: Double, sumSquares: Double)
 
-/** The anomaly detector with its value buffer in LIST state — the state
-  * shape a 100-TB deployment wants: [[AnomalyStatefulProcessor]] stores
-  * the whole [[RollingStats]] case class in one ValueState cell, so
-  * every update rewrites all ~100 buffered doubles; a `ListState` keeps
-  * per-element rows in RocksDB, where `appendValue`/`appendList` is an
-  * O(new) write and only eviction compacts. The running moments ride a
-  * tiny companion ValueState cell rather than being recomputed from the
-  * buffer — recomputation would change the float accumulation order and
-  * break BIT parity with the other two detector forms
-  * (StatefulProcessorSpec asserts all three emit identical alerts).
+/** The transformWithState form of the anomaly detector, with its value
+  * buffer in LIST state — the state shape a 100-TB deployment wants: a
+  * single value cell rewrites all ~100 buffered doubles on every update,
+  * while a `ListState` keeps per-element rows in RocksDB, where
+  * `appendList` is an O(new) write and only eviction compacts. The
+  * running moments ride a tiny companion ValueState cell rather than
+  * being recomputed from the buffer — recomputation would change the
+  * float accumulation order and break BIT parity with
+  * [[EventPipeline.anomalyStream]] (StatefulProcessorSpec asserts both
+  * emit identical alerts). The fold itself is the shared
+  * [[AnomalyProcessor.scoreBatch]].
   */
 class AnomalyListStateProcessor(ttl: TTLConfig = TTLConfig.NONE)
     extends StatefulProcessor[String, Event, AnomalyAlert] {
@@ -426,26 +428,19 @@ class AnomalyListStateProcessor(ttl: TTLConfig = TTLConfig.NONE)
       key: String,
       inputRows: Iterator[Event],
       timerValues: TimerValues): Iterator[AnomalyAlert] = {
-    val prior = if (buffer.exists()) buffer.get().toVector else Vector.empty
+    val prior = if (buffer.exists()) buffer.get().toArray else Array.emptyDoubleArray
     val mom = Option(moments.get()).getOrElse(BufferMoments(0.0, 0.0))
-    var st = RollingStats(prior, mom.sum, mom.sumSquares)
-    val newValues = Vector.newBuilder[Double]
-    val out = inputRows.toSeq
-      .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-      .flatMap { e =>
-        st = st.add(e.value)
-        newValues += e.value
-        if (st.size >= AnomalyProcessor.MinSamples)
-          Some(AnomalyProcessor.score(e, st))
-        else None
-      }
-    val appended = newValues.result()
-    if (prior.size + appended.size <= st.maxSize) {
+    val window = new RollingWindow(AnomalyProcessor.Window)
+      .restore(RollingWindow.State(prior, mom.sum, mom.sumSquares))
+    val batch = inputRows.toSeq
+    val out = AnomalyProcessor.scoreBatch(window, batch)
+    val st = window.snapshot
+    if (prior.length + batch.size <= window.capacity) {
       // no eviction yet: pure append writes
-      buffer.appendList(appended.toArray)
+      buffer.appendList(st.values.drop(prior.length))
     } else {
-      // eviction compaction: rewrite the ≤maxSize tail
-      buffer.put(st.values.toArray)
+      // eviction compaction: rewrite the window
+      buffer.put(st.values)
     }
     moments.update(BufferMoments(st.sum, st.sumSquares))
     out.iterator

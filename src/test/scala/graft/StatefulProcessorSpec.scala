@@ -37,7 +37,7 @@ class StatefulProcessorSpec extends AnyFunSuite {
       .sortBy(e => (e.ts.getTime, e.event_id))
 
     val input = MemoryStream[Event](spark, 2)
-    val alerts = AnomalyStatefulProcessor.anomalyStream(spark, input.toDS())
+    val alerts = TypedStatefulProcessors.anomalyListStream(spark, input.toDS())
     val q = alerts.writeStream
       .format("memory")
       .queryName("tws_alerts")
@@ -174,24 +174,23 @@ class StatefulProcessorSpec extends AnyFunSuite {
     assert(histWithZero == batch)
   }
 
-  test("ListState-buffered detector emits exactly the ValueState detector's alerts") {
+  test("ListState-buffered detector emits exactly the anomalyStream detector's alerts") {
     val session = spark
     import session.implicits._
     val events = sortedEvents()
 
-    def alerts(df: org.apache.spark.sql.DataFrame): Set[(Long, Double, Double, String)] =
-      df.as[AnomalyAlert].collect()
-        .map(a => (a.event_id, a.z_score, a.mad_score, a.severity)).toSet
+    def alerts(df: org.apache.spark.sql.DataFrame): Set[AnomalyAlert] =
+      df.as[AnomalyAlert].collect().toSet
 
     val list = alerts(runStream[Event, AnomalyAlert](
       "ls_alerts", events.toSeq,
       in => TypedStatefulProcessors.anomalyListStream(spark, in.toDS())))
-    val value = alerts(runStream[Event, AnomalyAlert](
-      "vs_alerts", events.toSeq,
-      in => AnomalyStatefulProcessor.anomalyStream(spark, in.toDS())))
+    val grouped = alerts(runStream[Event, AnomalyAlert](
+      "fmgws_alerts", events.toSeq,
+      in => EventPipeline.anomalyStream(spark, in.toDF())))
 
     assert(list.nonEmpty)
-    assert(list == value)
+    assert(list == grouped)
   }
 
   test("EWMA transformWithState matches flatMapGroupsWithState final levels") {
@@ -324,11 +323,11 @@ class StatefulProcessorSpec extends AnyFunSuite {
       .groupBy(_.event_type)
       .values.toSeq
       .flatMap { es =>
-        var stats = RollingStats()
+        val window = new graft.functions.RollingWindow(AnomalyProcessor.Window)
         es.sortBy(e => (EventTime.micros(e.ts), e.event_id)).flatMap { e =>
-          stats = stats.add(e.value)
-          if (stats.size >= AnomalyProcessor.MinSamples)
-            Some(AnomalyProcessor.score(e, stats))
+          window.add(e.value)
+          if (window.size >= AnomalyProcessor.MinSamples)
+            Some(AnomalyProcessor.score(e, window))
           else None
         }
       }
@@ -354,7 +353,7 @@ class StatefulProcessorSpec extends AnyFunSuite {
     val df = runStream[Event, CooldownProcessor.FiredAlert](
       "tws_chain", events.toSeq,
       in => TypedStatefulProcessors.cooldownStream(
-        spark, AnomalyStatefulProcessor.anomalyStream(spark, in.toDS())))
+        spark, TypedStatefulProcessors.anomalyListStream(spark, in.toDS())))
     assert(df.count() > 0)
   }
 
