@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Paths
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times the HEADLINE query set — the
@@ -27,34 +31,23 @@ object Bench {
     "anomaly_score", "anomaly_alerts", "alerts_filter", "alerts_stats",
     "events_last_hour", "q1_pricing")
 
+  /** Unbilled JIT + whole-stage-codegen warmup: each query once on the
+    * smallest fixture (`sf0.001`, next to `sfDir`), so no measured run
+    * pays Janino compilation (~0.1-0.3s/stage).
+    */
+  def warmup(spark: SparkSession, sfDir: String,
+             queries: Seq[String]): Unit = {
+    val dir = Paths.get(sfDir).resolveSibling("sf0.001").toString
+    for (q <- queries)
+      try SparkEntry.queries(q)(spark, dir).count()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[warmup] $q failed: ${e.getMessage}")
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Local-bench shuffle sizing, measured at sf0.1 (best-of-3 over the
-      // six slowest queries): 8 post-shuffle partitions beat 32 (task
-      // overhead dominates sub-megabyte shuffles), and AQE's query-stage
-      // materialization costs ~0.3-0.8s per exchange at this scale with
-      // nothing to re-plan — together 9.45s -> 7.05s on the probe set.
-      // These are BENCH-ONLY settings: the library sessions (Verify,
-      // StreamJob, tests) keep AQE on with 32 partitions, which is the
-      // posture that matters on a real cluster (skew joins, runtime
-      // coalescing); a 600k-row local[32] run is where AQE has no upside.
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Leak guard, both directions: this must be a FRESH session (an
-    // already-running library session would make getOrCreate ignore the
-    // bench configs and mislabel the numbers), and library sessions must
-    // never inherit these configs (GateInvariantSpec scans for that).
-    require(spark.conf.get("spark.sql.adaptive.enabled") == "false" &&
-              spark.conf.get("spark.sql.shuffle.partitions") == "8",
-            "Bench requires its own JVM/session: bench-only configs were " +
-              "not applied, so an existing session would be mismeasured")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.bench()
 
     def readLoadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -77,14 +70,7 @@ object Bench {
     val hostCpu = HostCalib.cpuModel
     val calibSec = HostCalib.calibrate()
 
-    // JIT + whole-stage-codegen warmup on the smallest fixture (not
-    // billed): every query once, so no measured run pays Janino
-    // compilation (~0.1-0.3s/stage) — the baseline's numbers are
-    // steady-state, so ours are too.
-    val warmupDir = "/root/testdata/sf0.001"
-    for (q <- SparkEntry.queries.keys.toSeq.sorted)
-      try SparkEntry.queries(q)(spark, warmupDir).count()
-      catch { case _: Throwable => }
+    warmup(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
 
     // min of three runs per query: single-shot numbers at this scale
     // swing ±2s from GC/JIT transients (a first-execution Janino compile

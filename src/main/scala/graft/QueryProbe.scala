@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only measurement harness for the optimization rounds (guide §1):
-  * times individual declared queries under the EXACT Bench session
-  * posture (same master, shuffle partitions, AQE setting) so per-query
-  * iteration doesn't need a 35-minute full bench, and captures
+  * times individual declared queries under Bench's session posture
+  * ([[Posture.bench]]) so per-query iteration doesn't need a 35-minute
+  * full bench, and captures
   * `.explain("formatted")` for the plan-evidence files under plans/.
   *
   * Usage: runMain graft.QueryProbe <time|explain|noop> <sfDir> <outDirOrRuns> <q1,q2,...>
   *  - time:    min-of-N (N = arg3) wall seconds per query via .count(),
-  *             after one unbilled warmup pass at sf0.001 (JIT/codegen).
+  *             after one unbilled [[Bench.warmup]] pass (JIT/codegen).
   *  - noop:    same, but the timed action is a noop-sink write (computes
   *             every column of every row — guide §1.4); bench continuity
   *             keeps .count() as the shipped metric, this mode is for
@@ -21,15 +19,7 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.bench()
     val names = args(3).split(",").toSeq
 
     mode match {
@@ -86,8 +76,7 @@ object QueryProbe {
         // so nothing is memoized across runs.
         val n = args(2).toInt
         for (q <- names) {
-          try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-          catch { case _: Throwable => }
+          Bench.warmup(spark, sfDir, Seq(q))
           val runs = (1 to n).map { _ =>
             val t0 = System.nanoTime()
             val df = SparkEntry.queries(q)(spark, sfDir)
@@ -99,9 +88,7 @@ object QueryProbe {
         }
       case "time" | "noop" =>
         val n = args(2).toInt
-        for (q <- names)
-          try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-          catch { case _: Throwable => }
+        Bench.warmup(spark, sfDir, names)
         val results = names.map { q =>
           val runs = (1 to n).map { _ =>
             val t0 = System.nanoTime()

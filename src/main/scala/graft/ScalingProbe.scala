@@ -205,24 +205,13 @@ object ScalingProbe {
                   "typo would otherwise run an empty probe that exits 0")
         probes.filter(want.contains)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Bench's tuned session (8 post-shuffle partitions, AQE off) so the
-    // base-scale numbers are comparable to BENCH_RUNS.json
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, so the base-scale numbers are comparable to
+    // BENCH_RUNS.json
+    val spark = Posture.bench()
 
     buildScaled(spark, base, out, copies)
 
-    // JIT/codegen warmup, not billed
-    for (q <- selected)
-      try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => }
+    Bench.warmup(spark, base, selected.filter(SparkEntry.queries.contains))
 
     def fmt(r: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(r))

@@ -105,30 +105,7 @@ object ThroughputProbe {
   private val SettleMs = 60000L
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // stateful-streaming latency posture: shuffle partitions = state
-      // store partitions = per-trigger commit fan-out; 8 quarters the
-      // fixed per-trigger state-commit overhead vs the library's batch
-      // default of 32 while still spreading the 6 detector keys (16
-      // passed on the round-11 box; the round-12 container's slower
-      // fsync pushed the p95 tail over the interval until the fan-out
-      // came down — measured, not guessed). A real low-latency
-      // deployment pins this at the job's FIRST run (state partitioning
-      // is frozen into the checkpoint thereafter).
-      .config("spark.sql.shuffle.partitions", 8)
-      // RocksDB low-latency posture: changelog checkpointing uploads
-      // per-commit DELTAS instead of full snapshots, cutting the
-      // per-trigger commit tail — the documented production setting for
-      // sub-second RocksDB triggers (harmless under the HDFS provider,
-      // which ignores it)
-      .config("spark.sql.streaming.stateStore.rocksdb" +
-                ".changelogCheckpointing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Posture.streamingLatency()
 
     val providerKey = graft.streaming.AnomalyStatefulProcessor.rocksdbConf._1
     val rocksClass = graft.streaming.AnomalyStatefulProcessor.rocksdbConf._2
@@ -144,10 +121,6 @@ object ThroughputProbe {
     val providers = sys.env.get("SPARK_GRAFT_PROBE_PROVIDER")
       .fold(allProviders)(w => allProviders.filter(_._1 == w))
     require(providers.nonEmpty, "SPARK_GRAFT_PROBE_PROVIDER matched none")
-    def setProvider(cls: Option[String]): Unit = cls match {
-      case Some(c) => spark.conf.set(providerKey, c)
-      case None    => spark.conf.unset(providerKey)
-    }
 
     // SPARK_GRAFT_PROBE subsets the measurement families for a dev
     // loop ("reference_rate,chained"); the committed artifact is always
@@ -178,8 +151,7 @@ object ThroughputProbe {
       }
     }
     var kneeSeed: Option[(Long, Result)] = None
-    for ((psName, cls) <- providers) {
-      setProvider(cls)
+    for ((psName, cls) <- providers) Posture.withConf(spark, providerKey -> cls) {
       // unbilled warmup (same rationale as Bench's): a short paced run
       // so JIT/codegen compilation and provider init are not billed to
       // the first measured config's tail — the baseline's numbers are
@@ -211,8 +183,9 @@ object ThroughputProbe {
     // seeded with that provider's measured headroom row so the knee
     // line can never contradict the artifact's own 50k verdict
     if (wanted("knee")) {
-      setProvider(providers.head._2)
-      record(findKnee(spark, providers.head._1, kneeSeed))
+      Posture.withConf(spark, providerKey -> providers.head._2) {
+        record(findKnee(spark, providers.head._1, kneeSeed))
+      }
     }
 
     lines.foreach(println)
@@ -463,27 +436,27 @@ object ThroughputProbe {
     // the consumer's keyed state is (source, severity) — ≤18 keys — so
     // 2 state partitions carry it; at a 250 ms trigger the per-trigger
     // state-commit fan-out IS the latency floor, so don't pay 8.
-    // shuffle.partitions is captured per query at start: set before the
-    // consumer starts, restored before the detector starts.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", 2)
-    val consumer = routed.writeStream
-      .queryName("graft_chain_consumer")
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", s"$work/ckpt_consumer")
-      .trigger(Trigger.ProcessingTime(s"$consumerIntervalMs milliseconds"))
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val pb = b.persist()
-        val n = pb.count() // materialize BEFORE stamping: the stamp is
-        // post-compute, pre-write — the gap can only over-state, never
-        // hide, the consumer's work
-        if (n > 0)
-          pb.withColumn("routed_wall_ms", lit(System.currentTimeMillis()))
-            .write.mode("overwrite").parquet(s"$routedDir/b$id")
-        pb.unpersist(); ()
-      }
-      .start()
-    spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // shuffle.partitions is captured per query at start, so scoping it
+    // to the consumer's start leaves the detector's 8.
+    val consumer = Posture.withConf(
+        spark, "spark.sql.shuffle.partitions" -> Some("2")) {
+      routed.writeStream
+        .queryName("graft_chain_consumer")
+        .outputMode(OutputMode.Update)
+        .option("checkpointLocation", s"$work/ckpt_consumer")
+        .trigger(Trigger.ProcessingTime(s"$consumerIntervalMs milliseconds"))
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val pb = b.persist()
+          val n = pb.count() // materialize BEFORE stamping: the stamp is
+          // post-compute, pre-write — the gap can only over-state, never
+          // hide, the consumer's work
+          if (n > 0)
+            pb.withColumn("routed_wall_ms", lit(System.currentTimeMillis()))
+              .write.mode("overwrite").parquet(s"$routedDir/b$id")
+          pb.unpersist(); ()
+        }
+        .start()
+    }
 
     // detector: same topology as the single-query configs, with the
     // wall-clock detect stamp taken at sink-write start (early =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,40 +9,13 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_AQE=1 → the CLUSTER-DEFAULT planner posture: Spark's
-    // default 200 shuffle partitions with AQE (on by default in every
-    // library session, never disabled here) free to coalesce partitions
-    // and re-plan joins at runtime. The config-robustness gate pass runs
-    // the full oracle compare under it — every query ends in a total
-    // orderBy, so hashes must hold under ANY partitioning the adaptive
-    // planner picks; a query that flips is a real determinism bug.
-    val shufflePartitions =
-      if (sys.env.get("SPARK_GRAFT_AQE").contains("1")) "200" else cpus
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_ROCKSDB=1 → force the RocksDB state-store provider
-    // SESSION-WIDE (the provider a production cluster deploys): the
-    // windowed-agg, session-window, and stream-stream-join drains then
-    // run the full gate on RocksDB instead of the default HDFS-backed
-    // provider. The transformWithState legs already force RocksDB
-    // locally (StreamDrain.withRocksDb), so this posture covers the
-    // remaining three state families — a hash flip under it would be a
-    // provider-semantics bug worth finding before a cluster does.
-    val spark = (if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-                   builder.config(
-                     graft.streaming.AnomalyStatefulProcessor.rocksdbConf._1,
-                     graft.streaming.AnomalyStatefulProcessor.rocksdbConf._2)
-                 else builder)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_AQE / SPARK_GRAFT_ROCKSDB toggles: see Posture.library
+    val spark = Posture.library()
     // posture line: lets a gate log prove WHICH planner/provider posture
     // produced it (stderr, like the per-query failure lines)
     System.err.println(
-      s"[verify] posture: shuffle_partitions=$shufflePartitions " +
+      s"[verify] posture: shuffle_partitions=" +
+        s"${spark.conf.get("spark.sql.shuffle.partitions")} " +
         s"state_store=${spark.conf.getOption(
           graft.streaming.AnomalyStatefulProcessor.rocksdbConf._1)
           .map(_.split('.').last).getOrElse("default(hdfs)")}")

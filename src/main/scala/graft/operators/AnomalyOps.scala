@@ -60,7 +60,8 @@ object AnomalyOps {
     * per-row frame re-accumulation. Bit-identical to
     * [[anomalyScoreWindow]] (asserted in CustomPlanSpec and by both
     * sharing one DuckDB oracle); registered via
-    * `experimental.extraStrategies` so it works on any session.
+    * [[graft.plans.GraftExtensions.useStrategy]] so it works on any
+    * session.
     */
   def anomalyScore(spark: SparkSession, dir: String): DataFrame =
     scored(spark, dir)
@@ -74,10 +75,8 @@ object AnomalyOps {
     */
   private def scored(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
-    import graft.plans.{RollingStatsPlan, RollingStatsStrategy}
-    if (!spark.experimental.extraStrategies.contains(RollingStatsStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RollingStatsStrategy
+    import graft.plans.{GraftExtensions, RollingStatsPlan, RollingStatsStrategy}
+    GraftExtensions.useStrategy(spark, RollingStatsStrategy)
 
     val base = Tables
       .events(spark, dir)

@@ -393,6 +393,28 @@ object DedupOps {
     */
   private[operators] val SsjoinThreshold = 0.6
 
+  /** The MEASURED corpus-size gate for [[ssjoinPrefix]]'s verification
+    * join, its only consumer (`graft.ssjoin.broadcast` =
+    * auto|force|never): one cheap single-column sum(n_chars) probe of
+    * the corpus (the shingle frame's size is ~linear in chars) decides;
+    * under broadcastMaxChars (default 5×10⁷ ≈ a 100-200 MB broadcast)
+    * the broadcast applies, above it the join stays shuffle-shaped.
+    * AQE-style runtime statistics, paid once per call — unlike a static
+    * hint, the decision REVERSES itself at scale.
+    */
+  private def ssjoinBroadcastCorpus(spark: SparkSession,
+                                    dir: String): Boolean =
+    spark.conf.get("graft.ssjoin.broadcast", "auto") match {
+      case "force" => true
+      case "never" => false
+      case _ =>
+        val maxChars = spark.conf
+          .get("graft.ssjoin.broadcastMaxChars", "50000000").toLong
+        val totalChars = Tables.documents(spark, dir)
+          .agg(coalesce(sum(col("n_chars")), lit(0L))).head().getLong(0)
+        totalChars <= maxChars
+    }
+
   /** Candidate pairs for [[ssjoinPrefix]] via PREFIX FILTERING
     * (SSJoin, Chaudhuri et al. ICDE'06; AllPairs, Bayardo et al.
     * WWW'07) — the EXACT-join complement to MinHash LSH: instead of
@@ -420,29 +442,6 @@ object DedupOps {
     * a doc consists almost entirely of hot shingles — the corpus state
     * `dedup_exact`/`strip_dup_spans` exist to clean up upstream.
     */
-  /** The MEASURED corpus-size gate shared by [[ssjoinPrefix]]'s
-    * verification join and [[ssjoinPrefixCandidates]]' df side
-    * (`graft.ssjoin.broadcast` = auto|force|never): one cheap
-    * single-column sum(n_chars) probe of the corpus (the shingle
-    * frame's size is ~linear in chars) decides; under broadcastMaxChars
-    * (default 5×10⁷ ≈ a 100-200 MB broadcast) the broadcast applies,
-    * above it the plans stay shuffle-shaped. AQE-style runtime
-    * statistics, paid once per call — unlike a static hint, the
-    * decision REVERSES itself at scale.
-    */
-  private def ssjoinBroadcastCorpus(spark: SparkSession,
-                                    dir: String): Boolean =
-    spark.conf.get("graft.ssjoin.broadcast", "auto") match {
-      case "force" => true
-      case "never" => false
-      case _ =>
-        val maxChars = spark.conf
-          .get("graft.ssjoin.broadcastMaxChars", "50000000").toLong
-        val totalChars = Tables.documents(spark, dir)
-          .agg(coalesce(sum(col("n_chars")), lit(0L))).head().getLong(0)
-        totalChars <= maxChars
-    }
-
   private[graft] def ssjoinPrefixCandidates(spark: SparkSession,
                                             dir: String): DataFrame = {
     val t = SsjoinThreshold

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.{HammingHexExpr, MinHashSigExpr, PolyHashExpr, RollingStatsAggExpr, ShinglesExpr, SimHashExpr, TokenCountsExpr, WinnowFingerprintExpr}
@@ -27,22 +28,19 @@ import graft.functions.{HammingHexExpr, MinHashSigExpr, PolyHashExpr, RollingSta
   * construction — `getOrCreate` on a live session silently ignores
   * `withExtensions`), use [[GraftExtensions.registerOn]] instead.
   *
-  * Injected planner strategies cover the two whole custom operators
-  * ([[RollingStatsPlan]], [[TopKPerKeyPlan]]). No custom optimizer
-  * `Rule`s are injected: SURVEY §4's conclusion stands — everything the
-  * reference computes optimizes fine under stock Catalyst; our
-  * extension points are expressions and physical operators.
+  * The planner strategies for the two whole custom operators
+  * ([[RollingStatsPlan]], [[TopKPerKeyPlan]]) are not injected here:
+  * the DataFrame entry points that build those nodes register their
+  * strategy on the session they run in ([[GraftExtensions.useStrategy]]),
+  * which covers extension-built and plain sessions alike. No custom
+  * optimizer `Rule`s are injected: SURVEY §4's conclusion stands —
+  * everything the reference computes optimizes fine under stock
+  * Catalyst; our extension points are expressions and physical
+  * operators.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // whole-operator strategies: extension-built sessions plan
-    // RollingStatsPlan / TopKPerKeyPlan without use-site registration
-    // (operators also self-register via experimental.extraStrategies, so
-    // plain sessions work too)
-    ext.injectPlannerStrategy(_ => RollingStatsStrategy)
-    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-  }
 }
 
 object GraftExtensions {
@@ -114,6 +112,14 @@ object GraftExtensions {
        (args: Seq[Expression]) =>
          graft.functions.VecQuantStatsExpr(args.head))
     )
+
+  /** Plan `strategy`'s custom operator on `spark` (idempotent): the one
+    * registration path for the engine's planner strategies.
+    */
+  def useStrategy(spark: SparkSession, strategy: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ strategy
 
   /** Register the function surface on a live session (idempotent). */
   def registerOn(spark: SparkSession): Unit =

@@ -138,8 +138,8 @@ case class RollingStatsExec(
     copy(child = newChild)
 }
 
-/** Planner strategy mapping the logical node to the exec. Injected via
-  * [[GraftExtensions]] (`injectPlannerStrategy`).
+/** Planner strategy mapping the logical node to the exec. Registered by
+  * its one builder, `AnomalyOps.scored` ([[GraftExtensions.useStrategy]]).
   */
 object RollingStatsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

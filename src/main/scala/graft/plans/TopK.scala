@@ -17,9 +17,7 @@ object TopK {
              k: Int,
              rankName: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    GraftExtensions.useStrategy(spark, TopKPerKeyStrategy)
     val child = GraftSqlBridge.logicalPlan(df)
     val byName = child.output.map(a => a.name -> a).toMap
     val plan = TopKPerKeyPlan(

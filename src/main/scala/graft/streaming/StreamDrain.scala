@@ -679,21 +679,8 @@ object StreamDrain {
     * a new leg whose lazy read depends on the LIVE session conf must
     * not rely on this wrapper.
     */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val (providerKey, rocksdb) = AnomalyStatefulProcessor.rocksdbConf
-    val prev = spark.conf.getOption(providerKey)
-    val prevTtl = spark.conf.getOption(StateTtl.Key)
-    spark.conf.set(providerKey, rocksdb)
-    spark.conf.unset(StateTtl.Key)
-    try body
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      prevTtl.foreach(spark.conf.set(StateTtl.Key, _))
-    }
-  }
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    graft.Posture.withConf(spark, graft.Posture.rocksDb, StateTtl.Key -> None)(body)
 
   /** The session legs' shared staging: the events table plus one
     * SENTINEL row (user −1) two hours past the data horizon, chunked by
@@ -2165,12 +2152,8 @@ object StreamDrain {
     */
   def lshTtlStateProbe(spark: SparkSession, dir: String, liveDir: String,
                        ttlMs: Long = 4000L): Map[String, Long] = {
-    val (providerKey, rocksdb) = AnomalyStatefulProcessor.rocksdbConf
-    val prevProvider = spark.conf.getOption(providerKey)
-    val prevTtl = spark.conf.getOption(StateTtl.Key)
-    spark.conf.set(providerKey, rocksdb) // transformWithState requires it
-    spark.conf.set(StateTtl.Key, ttlMs.toString)
-    try {
+    graft.Posture.withConf(spark, graft.Posture.rocksDb,
+                           StateTtl.Key -> Some(ttlMs.toString)) {
       val work = tempWorkDir("graft_lshttl_probe")
       val stage = s"$work/stage"
       stageChunked(graft.operators.DedupOps.defaultLshBands(spark, dir),
@@ -2247,15 +2230,6 @@ object StreamDrain {
           "live_band_rows" -> liveRows,
           "ttl_removed_rows" -> removedSum,
           "state_rows_final" -> finalRows)
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      prevTtl match {
-        case Some(v) => spark.conf.set(StateTtl.Key, v)
-        case None    => spark.conf.unset(StateTtl.Key)
-      }
     }
   }
 

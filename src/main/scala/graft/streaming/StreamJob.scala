@@ -23,22 +23,12 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 object StreamJob {
 
-  def run(spark: SparkSession, sfDir: String, outDir: String): Map[String, Long] = {
+  def run(spark: SparkSession, sfDir: String, outDir: String): Map[String, Long] =
     // the transformWithState session store requires RocksDB; queries
-    // capture this at start, so setting it here covers every caller
-    // (the default HDFS-backed provider cannot host the multiple
-    // column families transformWithState creates). Scoped: restored on
-    // exit so a shared session's other checkpointed queries don't
-    // silently resume under a different provider.
-    val providerKey = AnomalyStatefulProcessor.rocksdbConf._1
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, AnomalyStatefulProcessor.rocksdbConf._2)
-    try runImpl(spark, sfDir, outDir)
-    finally prevProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
+    // capture this at start, so scoping it here covers every caller
+    graft.Posture.withConf(spark, graft.Posture.rocksDb) {
+      runImpl(spark, sfDir, outDir)
     }
-  }
 
   private def runImpl(spark: SparkSession, sfDir: String,
                       outDir: String): Map[String, Long] = {
@@ -392,9 +382,7 @@ object StreamJob {
     import session0.implicits._
     val ttlDir = s"$outDir/staged_events_ttl"
     spark.read.parquet(stageDir).write.mode("overwrite").parquet(ttlDir)
-    val prevTtl = spark.conf.getOption(StateTtl.Key)
-    spark.conf.set(StateTtl.Key, TtlMillis.toString)
-    try {
+    graft.Posture.withConf(spark, StateTtl.Key -> Some(TtlMillis.toString)) {
       // NOT AvailableNow, and NOT processAllAvailable(): the TTL forces
       // TimeMode.ProcessingTime, under which the transformWithState
       // operator answers shouldRunAnotherBatch=true on every batch (it
@@ -489,9 +477,6 @@ object StreamJob {
       // pass 2: expired state swept, replays re-admitted
       val evicted = drain(2 * n, awaitEviction = true)
       (evicted, outputCount() - n)
-    } finally prevTtl match {
-      case Some(v) => spark.conf.set(StateTtl.Key, v)
-      case None    => spark.conf.unset(StateTtl.Key)
     }
   }
 
@@ -499,17 +484,7 @@ object StreamJob {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft_stream").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // transformWithState stages require the RocksDB state store
-      .config(AnomalyStatefulProcessor.rocksdbConf._1,
-              AnomalyStatefulProcessor.rocksdbConf._2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Posture.library()
     val t0 = System.nanoTime()
     val counts = run(spark, sfDir, outDir)
     val secs = (System.nanoTime() - t0) / 1e9

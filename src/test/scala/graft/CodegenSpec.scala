@@ -14,13 +14,10 @@ import org.apache.spark.sql.functions._
   */
 class CodegenSpec extends SparkSpec {
 
-  private def withNoFallback[A](body: => A): A = {
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    // CODEGEN_ONLY would fail on genuinely interpreted-only built-ins
-    // elsewhere; fallback=false is the per-plan guard for these tests
-    try body
-    finally spark.conf.unset("spark.sql.codegen.fallback")
-  }
+  // CODEGEN_ONLY would fail on genuinely interpreted-only built-ins
+  // elsewhere; fallback=false is the per-plan guard for these tests
+  private def withNoFallback[A](body: => A): A =
+    Posture.withConf(spark, "spark.sql.codegen.fallback" -> Some("false"))(body)
 
   test("text expressions evaluate under codegen with fallback disabled") {
     val session = spark

@@ -111,11 +111,10 @@ class CustomPlanSpec extends SparkSpec {
     // cap of 7 rows forces hundreds of mid-partition flushes: the partial
     // stage degrades to a weaker prefilter but the final stage must still
     // produce the exact answer
-    spark.conf.set("graft.topk.maxPartialBufferedRows", "7")
-    try {
+    Posture.withConf(spark, "graft.topk.maxPartialBufferedRows" -> Some("7")) {
       val flushed = run()
       assert(flushed.length == normal.length && flushed.sameElements(normal))
-    } finally spark.conf.unset("graft.topk.maxPartialBufferedRows")
+    }
   }
 
   test("per-key buffers reset between adjacent keys in a partition") {

@@ -2,27 +2,16 @@ package graft
 
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
-/** The SparkSessionExtensions registration: custom expressions usable
-  * from plain SQL in an extended session.
+/** The engine's SQL function surface on a live session
+  * ([[GraftExtensions.registerOn]]): custom expressions usable from plain
+  * SQL.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends SparkSpec {
 
   private lazy val extended: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("ExtensionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // suites share one JVM: if another spec created the session first,
-    // withExtensions was a no-op — register on the live session too
-    GraftExtensions.registerOn(s)
-    s
+    GraftExtensions.registerOn(spark)
+    spark
   }
 
   test("word_shingles and minhash_signature are SQL-callable") {

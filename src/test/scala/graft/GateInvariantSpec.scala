@@ -32,33 +32,28 @@ class GateInvariantSpec extends SparkSpec {
   }
 
   test("bench-only session config cannot leak into library code") {
-    // Bench.scala deliberately disables AQE and shrinks shuffle
-    // partitions for the local micro-bench; a cluster session must never
-    // inherit that posture. Guard: no file in the library surface may
-    // set either knob, and the running test session — built the way
-    // Verify builds its session — still has AQE on. Allowlisted mains
-    // (each its own JVM, never a library entry point): Bench.scala,
-    // ScalingProbe.scala (mirrors Bench's session so its 1× times are
-    // comparable to BENCH_RUNS.json), and ThroughputProbe.scala (the
-    // sustained-latency probe, whose measured stateful-streaming
-    // posture pins shuffle partitions = state commit fan-out — a
-    // documented per-deployment latency setting, not library default),
-    // and QueryProbe.scala (the optimization-round dev harness that
-    // must reproduce Bench's exact session posture to be comparable).
+    // Posture.bench disables AQE and shrinks shuffle partitions for the
+    // local micro-bench; a cluster session must never inherit that
+    // posture. Guard: no file but Posture.scala (the one place sessions
+    // are built) may set either knob; both patterns do match inside
+    // Posture.scala, so the scan cannot pass vacuously; and the running
+    // test session still has AQE on.
     import scala.jdk.CollectionConverters._
+    val patterns = Seq("spark.sql.adaptive.enabled",
+                       """config("spark.sql.shuffle.partitions", 8)""")
+    def src(p: java.nio.file.Path): String =
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.endsWith("Bench.scala") && !p.endsWith("ScalingProbe.scala") &&
-        !p.endsWith("ThroughputProbe.scala") && !p.endsWith("QueryProbe.scala"))
-      .filter { p =>
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        src.contains("spark.sql.adaptive.enabled") ||
-        src.contains("""config("spark.sql.shuffle.partitions", 8)""")
-      }
+    val (posture, library) = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .partition(_.endsWith("Posture.scala"))
+    assert(posture.size == 1, s"expected one Posture.scala: $posture")
+    assert(patterns.forall(src(posture.head).contains),
+           "guard patterns no longer match Posture.scala: the scan is vacuous")
+    val offenders = library
+      .filter(p => patterns.exists(src(p).contains))
       .map(_.toString)
-      .toList
-    assert(offenders.isEmpty, s"bench-only config set outside Bench.scala: $offenders")
+    assert(offenders.isEmpty, s"bench-only config set outside Posture.scala: $offenders")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 

@@ -592,8 +592,7 @@ class OperatorSpec extends SparkSpec {
       .map(r => r.getAs[Int]("depth") ->
         (r.getAs[Long]("n_users"), r.getAs[Long]("n_at_cap"))).toMap
     assert(full == Map(2 -> ((1L, 0L)), 3 -> ((1L, 0L))))
-    spark.conf.set("graft.funnel.maxEvents", "8")
-    try {
+    Posture.withConf(spark, "graft.funnel.maxEvents" -> Some("8")) {
       // cap=8 keeps user 1's latest 8 purchases only (view+click gone)
       // → depth 1 is impossible (no view): depth 0, flagged at-cap;
       // user 2 (2 events) is untouched
@@ -601,7 +600,7 @@ class OperatorSpec extends SparkSpec {
         .map(r => r.getAs[Int]("depth") ->
           (r.getAs[Long]("n_users"), r.getAs[Long]("n_at_cap"))).toMap
       assert(capped == Map(0 -> ((1L, 1L)), 2 -> ((1L, 0L))))
-    } finally spark.conf.unset("graft.funnel.maxEvents")
+    }
   }
 
   test("anomaly_regions: partitions alerts into gap-separated incidents") {
@@ -704,11 +703,10 @@ class OperatorSpec extends SparkSpec {
       assert(r.getAs[Boolean]("l_ok") == (r.getAs[Long]("n_bands") >= 3L))
     }
     // raising l to an impossible level flags every group
-    spark.conf.set("graft.privacy.l", "1000")
-    try {
+    Posture.withConf(spark, "graft.privacy.l" -> Some("1000")) {
       assert(PrivacyOps.lDiversity(spark, sf("sf0.001")).collect()
         .forall(!_.getAs[Boolean]("l_ok")))
-    } finally spark.conf.unset("graft.privacy.l")
+    }
   }
 
   test("t_closeness: EMD bounded in [0,1], verdict matches the integer gate") {
@@ -761,14 +759,13 @@ class OperatorSpec extends SparkSpec {
       assert(t.contains(r.getAs[Long]("noise_millis")))
     }
     // a new release epoch (salt) redraws noise but never touches counts
-    spark.conf.set("graft.privacy.salt", "epoch1")
-    try {
+    Posture.withConf(spark, "graft.privacy.salt" -> Some("epoch1")) {
       val redrawn = PrivacyOps.dpCounts(spark, dir).collect()
       assert(redrawn.map(_.getAs[Long]("n_orders")).toSeq ==
         out.map(_.getAs[Long]("n_orders")).toSeq)
       assert(redrawn.map(_.getAs[Long]("noise_millis")).toSeq !=
         out.map(_.getAs[Long]("noise_millis")).toSeq)
-    } finally spark.conf.unset("graft.privacy.salt")
+    }
   }
 
   test("pagerank_types: mass bounded, teleport floor held, deterministic") {
@@ -826,12 +823,11 @@ class OperatorSpec extends SparkSpec {
         assert(sorted.length <= bytes / 4096 + 1)
     }
     // a huge target packs each day into a single bin
-    spark.conf.set("graft.compact.target", (1L << 40).toString)
-    try {
+    Posture.withConf(spark, "graft.compact.target" -> Some((1L << 40).toString)) {
       val one = LayoutOps.compactionPlan(spark, dir).collect()
       assert(one.forall(_.getAs[Long]("bin_id") == 0L))
       assert(one.map(_.getAs[Long]("n_rows")).sum == nEvents)
-    } finally spark.conf.unset("graft.compact.target")
+    }
   }
 
   test("theta_overlap: set algebra reconciles and all sketch gates hold") {
@@ -912,10 +908,9 @@ class OperatorSpec extends SparkSpec {
     assert(df.filter(!col("kept")).count() > 0) // non-degenerate at default τ
     df.unpersist()
     // τ = 1.0 keeps everything (no identical vectors in the corpus)
-    spark.conf.set("graft.ann.cosine", "1.0")
-    try assert(VectorOps.semdedup(spark, sf("sf0.001"))
-      .filter(!col("kept")).isEmpty)
-    finally spark.conf.unset("graft.ann.cosine")
+    Posture.withConf(spark, "graft.ann.cosine" -> Some("1.0"))(
+      assert(VectorOps.semdedup(spark, sf("sf0.001"))
+        .filter(!col("kept")).isEmpty))
   }
 
   test("bloom_semi_join: equals the plain semi-join; bloom prunes at the scan") {

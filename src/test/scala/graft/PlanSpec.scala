@@ -549,17 +549,15 @@ class PlanSpec extends SparkSpec {
     assert(hints().nonEmpty, "auto gate should broadcast a tiny corpus")
     // auto + (simulated) huge corpus: threshold 0 → measurement exceeds
     // it → the SAME auto path must drop the hint
-    spark.conf.set("graft.ssjoin.broadcastMaxChars", "0")
-    try assert(hints().isEmpty,
-               "auto gate must not broadcast above the size threshold")
-    finally spark.conf.unset("graft.ssjoin.broadcastMaxChars")
+    Posture.withConf(spark, "graft.ssjoin.broadcastMaxChars" -> Some("0")) {
+      assert(hints().isEmpty,
+             "auto gate must not broadcast above the size threshold")
+    }
     // explicit overrides
-    spark.conf.set("graft.ssjoin.broadcast", "never")
-    try assert(hints().isEmpty)
-    finally spark.conf.unset("graft.ssjoin.broadcast")
-    spark.conf.set("graft.ssjoin.broadcast", "force")
-    try assert(hints().nonEmpty)
-    finally spark.conf.unset("graft.ssjoin.broadcast")
+    Posture.withConf(spark, "graft.ssjoin.broadcast" -> Some("never"))(
+      assert(hints().isEmpty))
+    Posture.withConf(spark, "graft.ssjoin.broadcast" -> Some("force"))(
+      assert(hints().nonEmpty))
   }
 
   test("SF-scaling dim broadcasts go through the measured Dims gate") {
@@ -584,8 +582,7 @@ class PlanSpec extends SparkSpec {
     assert(hintCount(OlapOps.q5LocalSupplier(spark, d)) == 4)
     // auto + (simulated) huge dims: threshold 0 → measurement exceeds
     // it → only the fixed-cardinality hints survive
-    spark.conf.set("graft.dims.broadcastMaxRows", "0")
-    try {
+    Posture.withConf(spark, "graft.dims.broadcastMaxRows" -> Some("0")) {
       assert(hintCount(OlapOps.q3Shipping(spark, d)) == 0)
       assert(hintCount(PrivacyOps.piiScrub(spark, d)) == 0)
       assert(hintCount(OlapOps.basketPairs(spark, d)) == 0)
@@ -596,14 +593,12 @@ class PlanSpec extends SparkSpec {
       // the un-hinted q3 still plans as a sound shuffled join
       val p = planOf(OlapOps.q3Shipping(spark, d))
       assert(!p.contains("CartesianProduct"))
-    } finally spark.conf.unset("graft.dims.broadcastMaxRows")
+    }
     // explicit overrides
-    spark.conf.set("graft.dims.broadcast", "never")
-    try assert(hintCount(OlapOps.q3Shipping(spark, d)) == 0)
-    finally spark.conf.unset("graft.dims.broadcast")
-    spark.conf.set("graft.dims.broadcast", "force")
-    try assert(hintCount(OlapOps.q3Shipping(spark, d)) == 1)
-    finally spark.conf.unset("graft.dims.broadcast")
+    Posture.withConf(spark, "graft.dims.broadcast" -> Some("never"))(
+      assert(hintCount(OlapOps.q3Shipping(spark, d)) == 0))
+    Posture.withConf(spark, "graft.dims.broadcast" -> Some("force"))(
+      assert(hintCount(OlapOps.q3Shipping(spark, d)) == 1))
   }
 
   test("q21 stacks semi + anti joins on one order-key partitioning") {

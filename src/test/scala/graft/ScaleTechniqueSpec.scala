@@ -129,23 +129,15 @@ class ScaleTechniqueSpec extends SparkSpec {
     // skew-join splits the oversized partition at runtime; this pins the
     // behavior (and the thresholds that trigger it) so the scale path
     // stays exercised.
-    val prev = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    Posture.withConf(spark,
+      "spark.sql.adaptive.skewJoin.enabled" -> Some("true"),
       // scaled-down thresholds so a test-sized hot key trips the same
       // machinery a 256MB-default cluster partition would
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> Some("16KB"),
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> Some("2"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> Some("8KB"),
+      "spark.sql.adaptive.coalescePartitions.enabled" -> Some("false"),
+      "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
       val hot = (1 to 20000).map(i => (1L, 100000L + i))
       val tail = (1 to 2000).map(i => (i.toLong + 1, 200000L + i))
       val cand = (hot ++ tail).toDF("doc1", "doc2").repartition(8)
@@ -157,9 +149,6 @@ class ScaleTechniqueSpec extends SparkSpec {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
              s"expected a skew-split join in:\n${plan.take(1500)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

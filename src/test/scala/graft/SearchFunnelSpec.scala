@@ -76,8 +76,7 @@ class SearchFunnelSpec extends SparkSpec {
     // the conf-gated swap r14 wired. Default stays exact (the oracle
     // hash gates that branch); this exercises the approx branch.
     val exact = SearchOps.perplexityBuckets(spark, sf("sf0.001"))
-    spark.conf.set("graft.perplexity.cutoffs", "approx")
-    try {
+    Posture.withConf(spark, "graft.perplexity.cutoffs" -> Some("approx")) {
       val df = SearchOps.perplexityBuckets(spark, sf("sf0.001")).cache()
       // identical schema, and still a partition of the corpus
       assert(df.schema == exact.schema)
@@ -97,7 +96,7 @@ class SearchFunnelSpec extends SparkSpec {
         assert(Set("head", "middle", "tail")(r.getAs[String]("bucket")))
       }
       df.unpersist()
-    } finally spark.conf.unset("graft.perplexity.cutoffs")
+    }
   }
 
   test("funnel_conversion: counts shrink down the funnel, head rate is 1") {

@@ -4,24 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, UTC, small
-  * shuffle parallelism for test speed).
+/** The spec session ([[Posture.test]]), shared by every suite in the
+  * test JVM — never stopped, and never reconfigured except through
+  * [[Posture.withConf]].
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
-
-  override def afterAll(): Unit = {
-    // shared across suites in one JVM — do not stop
-    super.afterAll()
-  }
+  lazy val spark: SparkSession = Posture.test(getClass.getSimpleName)
 
   def sf(name: String): String = s"/root/testdata/$name"
 }

@@ -2,28 +2,20 @@ package graft
 
 import java.nio.file.Files
 import graft.streaming._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
-import org.scalatest.funsuite.AnyFunSuite
 
 /** transformWithState (Spark 4 StatefulProcessor + RocksDB state store)
   * parity with the flatMapGroupsWithState processor, and checkpointed
   * exactly-once recovery of the KPI sink (T11).
   */
-class StatefulProcessorSpec extends AnyFunSuite {
+class StatefulProcessorSpec extends SparkSpec {
 
-  private lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("StatefulProcessorSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(AnomalyStatefulProcessor.rocksdbConf._1,
-            AnomalyStatefulProcessor.rocksdbConf._2)
-    .getOrCreate()
+  // transformWithState needs RocksDB; scoped per test so the shared
+  // session's later suites keep the default provider
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    Posture.withConf(spark, Posture.rocksDb)(super.withFixture(test))
 
   test("transformWithState produces the same alerts as flatMapGroupsWithState") {
     val session = spark
@@ -566,14 +558,13 @@ class StatefulProcessorSpec extends AnyFunSuite {
     // a TTL forces processing-time mode where transformWithState always
     // requests another batch — AvailableNow would hang; the drain
     // wrapper must scope graft.state.ttl OFF (and restore it after)
-    spark.conf.set(graft.streaming.StateTtl.Key, "60000")
-    try {
+    Posture.withConf(spark, StateTtl.Key -> Some("60000")) {
       val out = StreamDrain
         .streamSnapshotDrain(spark, "/root/testdata/sf0.001")
         .collect()
       assert(out.length > 0)
-      assert(spark.conf.get(graft.streaming.StateTtl.Key) == "60000")
-    } finally spark.conf.unset(graft.streaming.StateTtl.Key)
+      assert(spark.conf.get(StateTtl.Key) == "60000")
+    }
   }
 
   test("online LSH buckets: exact-once pair discovery, megabucket poisoned") {
@@ -675,8 +666,7 @@ class StatefulProcessorSpec extends AnyFunSuite {
     // sink for it, which proves batch 2 is fully processed, then stops
     // the query and inspects user 1's rows.
     def user1Pairs(name: String, ttlMs: Option[Long]): Long = {
-      ttlMs.foreach(ms => spark.conf.set("graft.state.ttl", ms.toString))
-      try {
+      Posture.withConf(spark, StateTtl.Key -> ttlMs.map(_.toString)) {
         val input = MemoryStream[Event](spark, 2)
         val q = TypedStatefulProcessors.transitionStream(spark, input.toDS())
           .writeStream.format("memory").queryName(name)
@@ -697,15 +687,14 @@ class StatefulProcessorSpec extends AnyFunSuite {
         } finally q.stop()
         assert(spark.table(name).filter(col("user_id") === 2L).count() == 1L)
         spark.table(name).filter(col("user_id") === 1L).count()
-      } finally spark.conf.unset("graft.state.ttl")
+      }
     }
 
     assert(user1Pairs("ttl_none", None) == 1L) // parity default: pairs
     assert(user1Pairs("ttl_on", Some(400L)) == 0L) // state expired: no pair
     // validation mirrors the other knobs
-    spark.conf.set("graft.state.ttl", "junk")
-    try intercept[IllegalArgumentException](StateTtl.of(spark))
-    finally spark.conf.unset("graft.state.ttl")
+    Posture.withConf(spark, StateTtl.Key -> Some("junk"))(
+      intercept[IllegalArgumentException](StateTtl.of(spark)))
   }
 
   test("cooldown timers clear state once the watermark passes the gate") {

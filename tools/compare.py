@@ -3,7 +3,11 @@
 scale factor, then execute each oracle_sql.json query in DuckDB over the
 same parquet tables and diff against the Spark parquet output.
 
-Usage: python3 tools/compare.py [sfdir] [outdir] [--skip-verify]
+Usage: python3 tools/compare.py [sfdir] [outdir] [q1,q2,...] [--skip-verify]
+
+With a query list, Verify runs only those queries (its third argument)
+and only those are diffed: the inner loop for re-gating one changed
+operator. Exit 0 iff every diffed query passes.
 """
 import json, math, os, subprocess, sys
 from pathlib import Path
@@ -11,11 +15,14 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
+SKIP_VERIFY = "--skip-verify" in sys.argv
+sys.argv = [a for a in sys.argv if a != "--skip-verify"]
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out")
+ONLY = sys.argv[3] if len(sys.argv) > 3 else None
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-if "--skip-verify" not in sys.argv:
+if not SKIP_VERIFY:
     # Default covers the single-posture gates; the COMBINED posture
     # (SPARK_GRAFT_AQE=1 SPARK_GRAFT_ROCKSDB=1 — 200 state partitions,
     # each a RocksDB instance per drain) legitimately needs ~2x, so the
@@ -23,8 +30,9 @@ if "--skip-verify" not in sys.argv:
     # normal gate sit twice as long before surfacing.
     verify_timeout = int(os.environ.get("GRAFT_VERIFY_TIMEOUT", "1800"))
     r = subprocess.run(
-        ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True,
+        ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}" + (f" {ONLY}" if ONLY else "")],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True,
         timeout=verify_timeout)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
@@ -62,7 +70,9 @@ def values_equal(a, b) -> bool:
     return a == b
 
 n_pass = n_fail = 0
-for name in sorted(set(list(oracle.keys()) + [p.name for p in OUT.iterdir() if p.is_dir()])):
+names = (ONLY.split(",") if ONLY else
+         sorted(set(list(oracle.keys()) + [p.name for p in OUT.iterdir() if p.is_dir()])))
+for name in names:
     spark_dir = OUT / name
     if not spark_dir.is_dir():
         print(f"FAIL {name}: no spark output"); n_fail += 1; continue
