@@ -52,7 +52,7 @@ object Bench {
     def readLoadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
+      catch { case NonFatal(_) => "" }
     // AMBIENT load, captured before the bench's own 32-thread execution
     // inflates the 1-minute average — the number load adjudication needs
     // (the end-of-run reading always carries ~2 of self-load)
@@ -79,15 +79,23 @@ object Bench {
     // sustained-throughput thresholds describe. All three raw runs ship
     // in the "runs" field so round-over-round comparisons can see the
     // variance instead of guessing whether a delta is noise.
+    // A query that throws gets no time: it is listed in "failed" and
+    // left out of every total.
+    val failed = Seq.newBuilder[String]
     def time(names: Seq[String]): Seq[(String, Double, Seq[Double])] =
-      names.map { name =>
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(name)(spark, sfDir).count() }
-          catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
+      names.flatMap { name =>
+        try {
+          val runs = (1 to 3).map { _ =>
+            val t0 = System.nanoTime()
+            SparkEntry.queries(name)(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }
+          Some((name, runs.min, runs))
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          None
         }
-        (name, runs.min, runs)
       }
 
     val headlineTimes = time(headline)
@@ -107,10 +115,11 @@ object Bench {
 
     val events =
       try spark.read.parquet(s"$sfDir/events.parquet").count()
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
     val headlineTotal = headlineTimes.map(_._2).sum
     val eventsPerSec =
-      if (headlineTotal > 0) events * headline.size / headlineTotal else 0.0
+      if (headlineTotal > 0) events * headlineTimes.size / headlineTotal
+      else 0.0
 
     val all = headlineTimes ++ extendedTimes
     def fmt(r: Double): String =
@@ -151,6 +160,8 @@ object Bench {
     val hostCpuJson = hostCpu.replace("\\", "\\\\").replace("\"", "\\\"")
     val hostFields =
       s""""host_cpu":"$hostCpuJson","calib_sec":${fmt(calibSec)},"""
+    val failedJson =
+      failed.result().map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val runsLine =
       s"""{"metric":"bench_runs","runs":$rs,"loadavg":"$loadavg",""" +
         s""""loadavg_start":"$loadavgStart","load_hot":$loadHot,""" +
@@ -160,11 +171,12 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_RUNS.json"),
       runsLine.getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     println(runsLine)
     println(
       s"""{"metric":"headline_total","unit":"sec","sf":"$sfDir",""" +
         s""""queries":$qs,""" +
+        s""""failed":$failedJson,""" +
         s""""events_rows":$events,"loadavg":"$loadavg",""" +
         s""""loadavg_start":"$loadavgStart","load_hot":$loadHot,""" +
         s""""load_limit":$loadLimit,""" +

@@ -1,12 +1,28 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.plans.{GraftExtensions, SmallSortStrategy}
 
 /** Loaders for the driver-generated parquet tables (`/root/testdata/sf*`).
   *
-  * All schemas are fixed and known (see TESTDATA.md); we never use
-  * `inferSchema`. The only normalization applied at load time is the
+  * Every loader reads through one private `parquet(spark, path)`, which
+  * resolves a table's schema once per file version: it lists the path
+  * (name, length and modification time of every file), infers the schema
+  * from the parquet footers the first time a session sees that listing,
+  * and reads with the resolved schema from then on. A later read of the
+  * same files therefore starts no footer job, while a file rewritten in
+  * place changes the listing and is inferred again. The memo is keyed
+  * weakly by session and holds schemas only, never data. The loaders also
+  * register [[graft.plans.SmallSortStrategy]], so a result's small
+  * presentation sort runs in one task.
+  *
+  * The only normalization applied at load time is the
   * `events.ts` column: the parquet files store µs timestamps WITHOUT the
   * UTC-adjusted flag, which Spark reads as `TIMESTAMP_NTZ`; every session
   * here pins `spark.sql.session.timeZone=UTC`, so casting to the session
@@ -22,13 +38,48 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** (file, length, modification time) of every file under a path. */
+  private type Listing = Seq[(String, Long, Long)]
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, Map[String, (Listing, StructType)]]
+
+  private def listing(spark: SparkSession, path: String): Listing = {
+    val p = new Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: FileNotFoundException => } // inference reports it
+    files.result().sorted
+  }
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    GraftExtensions.useStrategy(spark, SmallSortStrategy)
+    val files = listing(spark, path)
+    val known = schemas.synchronized(
+      Option(schemas.get(spark)).flatMap(_.get(path)))
+    val schema = known.collect { case (`files`, s) => s }.getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.synchronized {
+        val paths = Option(schemas.get(spark)).getOrElse(Map.empty)
+        schemas.put(spark, paths.updated(path, (files, inferred)))
+      }
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Event stream table — the analog of the reference's `events.v1` topic
     * (reference: `ingestors/kafka-producer/event_producer.py:47-103`).
     * Columns: event_id, ts (µs), user_id, event_type, value, props(JSON).
     */
   def events(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
 
   /** Events restricted to a time range, with the predicate applied to the
@@ -45,7 +96,7 @@ object Tables {
                       dir: String,
                       fromIso: String,
                       toIso: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val litType = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.TimestampNTZType => "timestamp_ntz"
       case _                                           => "timestamp"
@@ -78,29 +129,29 @@ object Tables {
     "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events"
 
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    parquet(spark, s"$dir/documents.parquet")
 
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    parquet(spark, s"$dir/embeddings.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    parquet(spark, s"$dir/lineitem.parquet")
 
   def orders(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    parquet(spark, s"$dir/orders.parquet")
 
   def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/customer.parquet")
+    parquet(spark, s"$dir/customer.parquet")
 
   def supplier(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/supplier.parquet")
+    parquet(spark, s"$dir/supplier.parquet")
 
   def part(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/part.parquet")
+    parquet(spark, s"$dir/part.parquet")
 
   def nation(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/nation.parquet")
+    parquet(spark, s"$dir/nation.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/region.parquet")
+    parquet(spark, s"$dir/region.parquet")
 }

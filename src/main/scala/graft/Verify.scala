@@ -1,7 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Queries that
+  * throw are listed in failures.json (name → message) and make the run
+  * exit 1 after every other query has been written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query-name filter (dev only;
@@ -20,15 +25,20 @@ object Verify {
           graft.streaming.AnomalyStatefulProcessor.rocksdbConf._1)
           .map(_.split('.').last).getOrElse("default(hdfs)")}")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // a query that throws is reported and the others still run; the
+    // failures go to failures.json and the exit status after the loop
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,6 +54,15 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(
+      Paths.get(s"$outDir/failures.json"),
+      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+        .mkString("{", ",", "}"))
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failures.size} queries failed: ${failures.map(_._1).mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -28,13 +28,18 @@ import graft.functions.{HammingHexExpr, MinHashSigExpr, PolyHashExpr, RollingSta
   * construction — `getOrCreate` on a live session silently ignores
   * `withExtensions`), use [[GraftExtensions.registerOn]] instead.
   *
-  * The planner strategies for the two whole custom operators
-  * ([[RollingStatsPlan]], [[TopKPerKeyPlan]]) are not injected here:
-  * the DataFrame entry points that build those nodes register their
-  * strategy on the session they run in ([[GraftExtensions.useStrategy]]),
-  * which covers extension-built and plain sessions alike. No custom
-  * optimizer `Rule`s are injected: SURVEY §4's conclusion stands —
-  * everything the reference computes optimizes fine under stock
+  * The engine's three planner strategies are not injected here. The
+  * DataFrame entry points that need one register it on the session they
+  * run in ([[GraftExtensions.useStrategy]]), which covers extension-built
+  * and plain sessions alike:
+  *   - `RollingStatsStrategy` ([[RollingStatsPlan]]), from
+  *     `AnomalyOps.scored`;
+  *   - `TopKPerKeyStrategy` ([[TopKPerKeyPlan]]), from `TopK.perKey`;
+  *   - [[SmallSortStrategy]] (a small global sort in one task), from the
+  *     `graft.Tables` loaders.
+  *
+  * No custom optimizer `Rule`s are injected: SURVEY §4's conclusion
+  * stands — everything the reference computes optimizes fine under stock
   * Catalyst; our extension points are expressions and physical
   * operators.
   */

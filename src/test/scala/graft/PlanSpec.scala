@@ -239,6 +239,40 @@ class PlanSpec extends SparkSpec {
     assert("minhash_signature".r.findAllIn(op).length == 1)
   }
 
+  test("dedup_minhash_lsh evaluates the minhash signature once") {
+    // the default pipeline is FrameStore-persisted: count signature
+    // evaluations in its cached relation's plan, descending into query
+    // stages (a materialized cache's plan is AQE's final plan) and once
+    // into every distinct nested cache (the signature frame is one)
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val seen = scala.collection.mutable.Set[Int]()
+    def sigs(p: SparkPlan): Int = {
+      val own = p.expressions.map(_.collect {
+        case m: graft.functions.MinHashSigExpr => m
+      }.size).sum
+      own + (p match {
+        case a: AdaptiveSparkPlanExec => sigs(a.executedPlan)
+        case q: QueryStageExec => sigs(q.plan)
+        case s: InMemoryTableScanExec =>
+          if (seen.add(System.identityHashCode(s.relation.cacheBuilder)))
+            sigs(s.relation.cachedPlan)
+          else 0
+        case _ => p.children.map(sigs).sum
+      })
+    }
+    val lsh = DedupOps.dedupMinhashLsh(spark, sf("sf0.001"))
+    lsh.count() // materialized, as any earlier consumer leaves it
+    val plan = lsh.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val cached = plan.collectFirst { case s: InMemoryTableScanExec => s }
+    assert(cached.isDefined, s"dedup_minhash_lsh is not a cached relation: $plan")
+    assert(sigs(cached.get.relation.cachedPlan) == 1)
+  }
+
   test("winnowing and shingling evaluate once per row (with_size barrier)") {
     val w = TextOps.textWinnow(spark, sf("sf0.001"))
       .queryExecution.optimizedPlan.toString
@@ -285,12 +319,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stratified sample: pure map pass, filter before any exchange") {
-    val plan = PipelineOps.stratifiedSample(spark, sf("sf0.001"))
-      .queryExecution.executedPlan
-    // the sample predicate must run scan-side: the only exchange in the
-    // whole plan is the final presentation sort's range partitioning
-    val s = plan.toString
-    assert("Exchange".r.findAllIn(s).length == 1 && s.contains("rangepartitioning"))
+    def sample() = PipelineOps.stratifiedSample(spark, sf("sf0.001"))
+    // with small-sort planning off (as for an input too big to ship to
+    // one task), the sample predicate must run scan-side: the only
+    // exchange in the whole plan is the final presentation sort's range
+    // partitioning
+    Posture.withConf(spark,
+                     "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
+      val plan = sample().queryExecution.executedPlan
+      val s = plan.toString
+      assert("Exchange".r.findAllIn(s).length == 1 && s.contains("rangepartitioning"))
+    }
+    // small input: no exchange at all, the global sort runs in one task
+    val small = sample()
+    assert(!planOf(small).contains("Exchange"), planOf(small))
+    import org.apache.spark.sql.execution.{CoalesceExec, SortExec}
+    assert(small.queryExecution.sparkPlan.exists {
+      case SortExec(_, true, CoalesceExec(1, _), _) => true
+      case _ => false
+    }, small.queryExecution.sparkPlan)
   }
 
   test("vocab top-k: single token shuffle with map-side partial aggregation") {

@@ -29,6 +29,7 @@ if not SKIP_VERIFY:
     # knob exists rather than a blanket doubling that would let a hung
     # normal gate sit twice as long before surfacing.
     verify_timeout = int(os.environ.get("GRAFT_VERIFY_TIMEOUT", "1800"))
+    (OUT / "failures.json").unlink(missing_ok=True)
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}" + (f" {ONLY}" if ONLY else "")],
         cwd=Path(__file__).resolve().parent.parent,
@@ -36,7 +37,11 @@ if not SKIP_VERIFY:
         timeout=verify_timeout)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
-        print("VERIFY FAILED:\n", tail)
+        print(f"VERIFY FAILED (exit {r.returncode}):\n", tail)
+        failures = OUT / "failures.json"
+        if failures.exists():
+            for name, msg in json.loads(failures.read_text()).items():
+                print(f"FAIL {name}: verify error: {(msg.splitlines() or [''])[0][:200]}")
         sys.exit(1)
     for line in (r.stdout + r.stderr).splitlines():
         if "[verify]" in line:
