@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Host fingerprint + single-thread speed calibration, shared by
   * [[Bench]] (per-snapshot, for bench_diff's HOST VERDICT) and
   * [[ThroughputProbe]] (per-config, so a latency line carries the
@@ -23,7 +25,7 @@ object HostCalib {
       .collectFirst { case l if l.startsWith("model name") =>
         l.split(":", 2)(1).trim }
       .getOrElse("")
-    catch { case _: Throwable => "" }
+    catch { case NonFatal(_) => "" }
 
   private def pass(): Double = {
     val t0 = System.nanoTime()

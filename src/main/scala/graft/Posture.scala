@@ -6,8 +6,9 @@ import graft.streaming.AnomalyStatefulProcessor.rocksdbConf
 
 /** Session posture: the one place a `SparkSession` is built, and the one
   * way code changes a session conf for a bounded scope. Every posture
-  * runs `local[cpus]` (tests: `local[4]`) in UTC with the UI off and WARN
-  * logging, plus only the confs its callers measured or need.
+  * runs `local[cpus]` (tests: `local[4]`) in UTC with the UI off, WARN
+  * logging and the fork-free local file system (`graft.io.LocalFs`) for
+  * both Hadoop APIs, plus only the confs its callers measured or need.
   */
 object Posture {
 
@@ -22,11 +23,12 @@ object Posture {
 
   private def build(master: String)(
       tune: SparkSession.Builder => SparkSession.Builder): SparkSession = {
-    val spark = tune(SparkSession.builder()
+    val common = SparkSession.builder()
       .master(master)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")
+    graft.io.LocalFs.settings.foreach { case (k, v) => common.config(s"spark.hadoop.$k", v) }
+    val spark = tune(common).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -79,11 +81,13 @@ object Posture {
   def streamingLatency(): SparkSession = build(s"local[$cpus]")(_
     // shuffle partitions = state store partitions = per-trigger commit
     // fan-out; 8 quarters the fixed per-trigger state-commit overhead vs
-    // 32 while still spreading the 6 detector keys (16 passed on one
-    // box; a slower-fsync box pushed the p95 tail over the interval
-    // until the fan-out came down — measured, not guessed). A real
-    // low-latency deployment pins this at the job's FIRST run (state
-    // partitioning is frozen into the checkpoint thereafter).
+    // 32 while still spreading the 6 detector keys. Measured, that
+    // overhead was one process start per checkpoint file op (Hadoop's
+    // forked `readlink`/`chmod` without native libhadoop, ~20 per
+    // partition commit), which the session's graft.io.LocalFs removes;
+    // each partition still pays its own commit. A real low-latency
+    // deployment pins this at the job's FIRST run (state partitioning
+    // is frozen into the checkpoint thereafter).
     .config("spark.sql.shuffle.partitions", 8)
     // changelog checkpointing uploads per-commit DELTAS instead of full
     // RocksDB snapshots, cutting the per-trigger commit tail — the

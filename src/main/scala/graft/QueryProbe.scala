@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dev-only measurement harness for the optimization rounds (guide §1):
   * times individual declared queries under Bench's session posture
   * ([[Posture.bench]]) so per-query iteration doesn't need a 35-minute
@@ -56,17 +58,12 @@ object QueryProbe {
           })
         val n = args(2).toInt
         for (q <- names) {
-          val runs = (1 to n).map { _ =>
-            val t0 = System.nanoTime()
-            try SparkEntry.queries(q)(spark, sfDir).count()
-            catch { case e: Throwable =>
-              println(s"[probe] $q FAILED: ${e.getMessage.take(200)}")
-            }
-            val dt = (System.nanoTime() - t0) / 1e9
-            println(f"[probe] $q run done in $dt%.3f s")
+          val runs = (1 to n).flatMap { _ =>
+            val dt = timed(q)(SparkEntry.queries(q)(spark, sfDir).count())
+            dt.foreach(t => println(f"[probe] $q run done in $t%.3f s"))
             dt
           }
-          println(f"[probe] $q%-32s min=${runs.min}%7.3f")
+          println(summary(q, runs))
         }
       case "plantime" =>
         // r14: splits DRIVER planning cost (analysis + optimization +
@@ -90,26 +87,38 @@ object QueryProbe {
         val n = args(2).toInt
         Bench.warmup(spark, sfDir, names)
         val results = names.map { q =>
-          val runs = (1 to n).map { _ =>
-            val t0 = System.nanoTime()
+          val runs = (1 to n).flatMap { _ =>
             spark.sparkContext.setJobDescription(s"probe: $q")
-            try {
+            timed(q) {
               val df = SparkEntry.queries(q)(spark, sfDir)
               if (mode == "noop")
                 df.write.format("noop").mode("overwrite").save()
               else df.count()
-            } catch { case e: Throwable =>
-              println(s"[probe] $q FAILED: ${e.getMessage.take(200)}")
             }
-            (System.nanoTime() - t0) / 1e9
           }
           (q, runs)
         }
         for ((q, runs) <- results)
-          println(f"[probe] $q%-32s min=${runs.min}%7.3f  runs=" +
-            runs.map(r => f"$r%.3f").mkString(","))
+          println(summary(q, runs) + "  runs=" + runs.map(r => f"$r%.3f").mkString(","))
       case other => sys.error(s"unknown mode $other")
     }
     spark.stop()
   }
+
+  /** Wall seconds of `body`; a run that throws gets no time and prints
+    * `FAILED`.
+    */
+  private def timed(q: String)(body: => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) =>
+      println(s"[probe] $q FAILED: ${String.valueOf(e.getMessage).take(200)}")
+      None
+    }
+  }
+
+  /** The min over the runs that finished, or `FAILED` when none did. */
+  private def summary(q: String, runs: Seq[Double]): String =
+    if (runs.isEmpty) f"[probe] $q%-32s FAILED"
+    else f"[probe] $q%-32s min=${runs.min}%7.3f"
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress, Trigger}
@@ -147,7 +149,7 @@ object ThroughputProbe {
           java.nio.file.Paths.get(out), (line + "\n").getBytes("UTF-8"),
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
-        catch { case _: Throwable => }
+        catch { case NonFatal(e) => System.err.println(s"[probe] cannot append to $out: $e") }
       }
     }
     var kneeSeed: Option[(Long, Result)] = None
@@ -200,7 +202,7 @@ object ThroughputProbe {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("THROUGHPUT.json"),
         (lines.mkString("", "\n", "\n")).getBytes("UTF-8"))
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => System.err.println(s"[probe] cannot write THROUGHPUT.json: $e") }
     spark.stop()
   }
 
@@ -333,7 +335,7 @@ object ThroughputProbe {
     val totalRows = data.map(_.numInputRows).sum
     val alerts =
       try spark.read.parquet(s"$work/store").count()
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
     if (failFast) require(alerts > 0,
       s"${cfg.name}: the alert sink stayed empty — the topology " +
         "under measurement never detected anything")

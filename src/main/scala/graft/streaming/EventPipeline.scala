@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.io.LocalFs
+
 /** Structured Streaming wrappers (SURVEY §7 phase 4): the two reference
   * Flink jobs re-expressed as incremental queries over the SAME column
   * expressions the batch analogs use (`readStream → withWatermark →
@@ -50,11 +52,13 @@ object EventPipeline {
   /** File-based event stream: each parquet file dropped into `dir` is a
     * micro-batch (the test/dev stand-in for the Kafka topic).
     */
-  def readEventFileStream(spark: SparkSession, dir: String): DataFrame =
+  def readEventFileStream(spark: SparkSession, dir: String): DataFrame = {
+    LocalFs.use(spark)
     spark.readStream
       .schema(eventSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
+  }
 
   /** Sliding-window KPI aggregation (W1/A1): 1-minute windows every 10 s
     * keyed by event_type, with the derived status error rate — the same
@@ -133,6 +137,7 @@ object EventPipeline {
     * ValueState).
     */
   def anomalyStream(spark: SparkSession, events: DataFrame): Dataset[AnomalyAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -150,6 +155,7 @@ object EventPipeline {
     */
   def ewmaStream(spark: SparkSession,
                  events: DataFrame): Dataset[EwmaProcessor.EwmaLevel] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -166,6 +172,7 @@ object EventPipeline {
   def cusumStream(spark: SparkSession, events: DataFrame,
                   baselines: Map[String, CusumProcessor.Baseline])
       : Dataset[CusumProcessor.CusumCounts] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -182,6 +189,7 @@ object EventPipeline {
   def transitionStream(
       spark: SparkSession,
       events: DataFrame): Dataset[TransitionProcessor.Transition] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -196,6 +204,7 @@ object EventPipeline {
   def cooldownStream(
       spark: SparkSession,
       alerts: Dataset[AnomalyAlert]): Dataset[CooldownProcessor.FiredAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     alerts
       .filter(_.is_anomaly) // P4 anomaly-only filter
@@ -217,6 +226,7 @@ object EventPipeline {
   def fusedAlertStream(
       spark: SparkSession,
       events: DataFrame): Dataset[CooldownProcessor.FiredAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,7 +108,7 @@ object StreamDrain {
     if (Files.exists(root)) {
       val s = Files.walk(root)
       try s.iterator().asScala.toSeq.reverse
-        .foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => })
+        .foreach(p => try Files.deleteIfExists(p) catch { case NonFatal(_) => })
       finally s.close()
     }
   }
@@ -2106,7 +2108,7 @@ object StreamDrain {
       val ckpt = s"$dir/ckpt"
       val counts = readers.map { opts =>
         try spark.read.format("statestore").options(opts).load(ckpt).count()
-        catch { case _: Throwable => -1L }
+        catch { case NonFatal(_) => -1L }
       }
       val rows = if (counts.exists(_ < 0)) -1L else counts.sum
       val stateDir = java.nio.file.Paths.get(s"$ckpt/state")

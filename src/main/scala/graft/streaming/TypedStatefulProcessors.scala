@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.RollingWindow
+import graft.io.LocalFs
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -726,6 +727,7 @@ object TypedStatefulProcessors {
     */
   def hllDayStream(spark: SparkSession,
                    events: Dataset[Event]): Dataset[DayUsers] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -740,6 +742,7 @@ object TypedStatefulProcessors {
     */
   def topTokensStream(spark: SparkSession,
                       docs: Dataset[DocTokens]): Dataset[LangTokenEst] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     docs
@@ -754,6 +757,7 @@ object TypedStatefulProcessors {
     */
   def lshCandidateStream(spark: SparkSession,
                          bands: Dataset[BandKeyRow]): Dataset[LshCandidate] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     bands
@@ -768,6 +772,7 @@ object TypedStatefulProcessors {
     */
   def driftStream(spark: SparkSession,
                   events: Dataset[Event]): Dataset[DriftSnapshot] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -780,6 +785,7 @@ object TypedStatefulProcessors {
   /** events → alerts with the ListState-buffered detector. */
   def anomalyListStream(spark: SparkSession,
                         events: Dataset[Event]): Dataset[AnomalyAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -795,6 +801,7 @@ object TypedStatefulProcessors {
     */
   def funnelStream(spark: SparkSession,
                    events: Dataset[Event]): Dataset[FunnelProgress] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -811,6 +818,7 @@ object TypedStatefulProcessors {
     */
   def userSnapshotStream(spark: SparkSession,
                          events: Dataset[Event]): Dataset[UserSnapshot] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -827,6 +835,7 @@ object TypedStatefulProcessors {
       spark: SparkSession,
       events: Dataset[Event],
       initial: Dataset[UserSnapshot]): Dataset[UserSnapshot] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -842,6 +851,7 @@ object TypedStatefulProcessors {
     */
   def dedupStream(spark: SparkSession,
                   events: Dataset[Event]): Dataset[Event] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -856,6 +866,7 @@ object TypedStatefulProcessors {
     */
   def docDedupStream(spark: SparkSession,
                      docs: Dataset[IngestDoc]): Dataset[IngestDoc] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     docs
@@ -868,6 +879,7 @@ object TypedStatefulProcessors {
   /** events → EWMA levels via the native transformWithState operator. */
   def ewmaStream(spark: SparkSession,
                  events: Dataset[Event]): Dataset[EwmaProcessor.EwmaLevel] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -881,6 +893,7 @@ object TypedStatefulProcessors {
   def cusumStream(spark: SparkSession, events: Dataset[Event],
                   baselines: Map[String, CusumProcessor.Baseline])
       : Dataset[CusumProcessor.CusumCounts] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -894,6 +907,7 @@ object TypedStatefulProcessors {
   def transitionStream(
       spark: SparkSession,
       events: Dataset[Event]): Dataset[TransitionProcessor.Transition] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     events
@@ -907,6 +921,7 @@ object TypedStatefulProcessors {
   def cooldownStream(
       spark: SparkSession,
       alerts: Dataset[AnomalyAlert]): Dataset[CooldownProcessor.FiredAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     val ttl = StateTtl.of(spark)
     alerts
@@ -926,6 +941,7 @@ object TypedStatefulProcessors {
   def cooldownStreamWithExpiry(
       spark: SparkSession,
       alerts: Dataset[AnomalyAlert]): Dataset[CooldownProcessor.FiredAlert] = {
+    LocalFs.use(spark)
     import spark.implicits._
     alerts
       .filter(_.is_anomaly)
