@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.round
@@ -117,14 +116,11 @@ object CalibrationOps {
           DedupOps.expectedRecall(col("ps"), col("n_true_pairs"), b, k / b)
             .as("expected_recall"))
     }
-    val (truth, emb, queries) = signTruth(spark, dir)
+    val truth = signTruth(spark, dir)
     val signRows = SignGrid.map { case (bits, probe) =>
-      val maxProbe = SignGrid.collect { case (b, p) if b == bits => p }.max
-      signLshRow(truth,
-                 signScored(spark, dir, emb, queries, bits, maxProbe),
-                 bits, probe)
+      signLshRow(truth, signScored(spark, dir, bits), bits, probe)
     }
-    (minhashRows ++ signRows ++ ivfRows(spark, dir, truth, emb))
+    (minhashRows ++ signRows ++ ivfRows(spark, dir, truth))
       .reduce(_ unionByName _)
       .orderBy(col("family"), col("param_a"), col("param_b"))
   }
@@ -137,8 +133,8 @@ object CalibrationOps {
     * nearest cell, queries probe their `nprobe` nearest.
     */
   private def ivfRows(spark: SparkSession, dir: String,
-                      truth: DataFrame, emb: DataFrame): Seq[DataFrame] = {
-    val ranked = VectorOps.ivfRanked(spark, dir, emb)
+                      truth: DataFrame): Seq[DataFrame] = {
+    val ranked = VectorOps.ivfRanked(spark, dir)
     val assigned = ranked
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("label").as("cell"), col("v"), col("nrm"))
@@ -178,27 +174,19 @@ object CalibrationOps {
   private val cosine =
     round(VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
 
-  /** Exact cosine top-5 truth (+ the frames it derives from) — built
-    * ONCE and shared by every `sign_lsh` grid row; only the bucketed
-    * candidate side depends on (bits, probe).
+  /** Exact cosine top-5 truth — built ONCE and shared by every
+    * `sign_lsh` and `ivf` grid row; only the candidate side depends on
+    * the row's parameters.
     */
-  private def signTruth(spark: SparkSession,
-                        dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val emb = Tables
-      .embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-    val queries = emb
-      .filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("nrm").as("qn"))
-    val truth = signTruthStore.getOrBuild(spark, dir)(
+  private def signTruth(spark: SparkSession, dir: String): DataFrame =
+    signTruthStore.getOrBuild(spark, dir) {
+      val emb = VectorOps.normed(spark, dir)
       top5(
         emb
-          .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-          .withColumn("cosine", cosine)))
-    (truth, emb, queries)
-  }
+          .join(broadcast(VectorOps.queryVecs(emb)),
+                col("vec_id") =!= col("query_id"))
+          .withColumn("cosine", cosine))
+    }
 
   /** The scored sign-LSH candidate pass at `bits`, cut at the grid's
     * WIDEST probe radius and persisted per (dataset, bits): Hamming ≤
@@ -209,14 +197,15 @@ object CalibrationOps {
     * exactly the old per-row join condition (the maxProbe cut is a
     * superset and hamming rides along), so match sets are unchanged
     * while the corpus-side BNL pass runs once per bits value instead
-    * of once per (bits, probe) row (§1.2, §5).
+    * of once per (bits, probe) row (§1.2, §5). Every input derives
+    * from `(spark, dir)`, which with `bits` is the whole store key.
     */
-  private def signScored(spark: SparkSession, dir: String,
-                         emb: DataFrame, queries: DataFrame,
-                         bits: Int, maxProbe: Int): DataFrame =
+  private def signScored(spark: SparkSession, dir: String, bits: Int): DataFrame =
     signScoredStore.getOrBuild(spark, s"$dir#sign_bits=$bits") {
-      val qb =
-        queries.withColumn("qbucket", VectorOps.bucketCode(col("qv"), bits))
+      val maxProbe = SignGrid.collect { case (b, p) if b == bits => p }.max
+      val emb = VectorOps.normed(spark, dir)
+      val qb = VectorOps.queryVecs(emb)
+        .withColumn("qbucket", VectorOps.bucketCode(col("qv"), bits))
       val cb = emb.withColumn("bucket", VectorOps.bucketCode(col("v"), bits))
       val hamming = (1 to bits)
         .map(i =>

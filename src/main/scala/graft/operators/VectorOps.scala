@@ -34,17 +34,29 @@ object VectorOps {
   private[operators] def norm(c: Column): Column =
     graft.functions.VectorExprs.vecNorm(c)
 
+  /** The canonical embedding projection (vec_id, embedding AS v,
+    * nrm = norm(v)) every cosine search scores over.
+    */
+  private[operators] def normed(spark: SparkSession, dir: String): DataFrame =
+    Tables
+      .embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("nrm", norm(col("v")))
+
+  /** The query side of [[normed]]: vectors with vec_id < 20 as
+    * (query_id, qv, qn).
+    */
+  private[operators] def queryVecs(emb: DataFrame): DataFrame =
+    emb
+      .filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+
   /** Brute-force cosine top-10 neighbors for query vectors (vec_id < 20)
     * against all other vectors — the exact ANN baseline.
     */
   def annTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables
-      .embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val queries = emb
-      .filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val emb = normed(spark, dir)
+    val queries = queryVecs(emb)
     val scored = emb
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .withColumn("cosine",
@@ -141,10 +153,7 @@ object VectorOps {
     */
   private[operators] def annLshBucketedAt(spark: SparkSession, dir: String,
                                           bits: Int, flips: Int): DataFrame = {
-    val emb = Tables
-      .embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val emb = normed(spark, dir)
       .withColumn("bucket", bucketCode(col("v"), bits))
     // query side probes its own bucket (+ Hamming-1 codes under
     // multi-probe); candidates stay in exactly their own bucket
@@ -179,10 +188,7 @@ object VectorOps {
     * (cosine ≥ [[cosineThreshold]]).
     */
   def embedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables
-      .embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val emb = normed(spark, dir)
       .withColumn("bucket", bucketCode(col("v"), signBits(spark)))
     val right = emb.select(col("bucket"), col("vec_id").as("vec2"),
                            col("v").as("v2"), col("nrm").as("n2"))
@@ -194,6 +200,48 @@ object VectorOps {
       .filter(col("cosine") >= cosineThreshold(spark))
       .select(col("vec_id").as("vec1"), col("vec2"), col("cosine"))
       .orderBy(col("vec1"), col("vec2"))
+  }
+
+  /** Coarse-quantizer cell ranking shared by [[annIvf]] and
+    * `CalibrationOps.ivfRows`: label-mean centroids, broadcast
+    * crossJoin, per-vector `row_number` over (round(d2,6), label).
+    * ONE definition so a tie-break or rounding change cannot
+    * desynchronize the recall calibration from the operator it
+    * measures (the minhashSigFrame convention). Rows are [[normed]]'s
+    * (vec_id, v, nrm) plus the cell `label`, `d2` and `rn`.
+    *
+    * Persisted per dataset (r14, §5): the centroid aggregate +
+    * crossJoin + window subtree was re-derived by EVERY consumer
+    * subtree — `recall_matrix`'s three ivf grid rows each reference it
+    * twice (member assignment + query probes, different filters, so
+    * ReuseExchange cannot share them) and `ann_ivf`/`ann_ivf_probed`
+    * once more — six-plus evaluations per bench pass for one
+    * |corpus|×|labels| frame. Keyed on `dir` alone: the builder derives
+    * every input from `(spark, dir)`, so no caller can hand it a frame
+    * the key does not name.
+    */
+  private val ivfRankStore = new FrameStore(2)
+
+  private[operators] def ivfRanked(spark: SparkSession, dir: String): DataFrame =
+    ivfRankStore.getOrBuild(spark, s"$dir#ivfranked")(ivfRankedPlan(spark, dir))
+
+  private def ivfRankedPlan(spark: SparkSession, dir: String): DataFrame = {
+    val centroids = Tables
+      .embeddings(spark, dir)
+      .select(col("label"), posexplode(asDouble(col("embedding"))))
+      .groupBy(col("label"), col("pos"))
+      .agg(round(avg(col("col")), 6).as("c"))
+      .groupBy(col("label"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
+        .getField("c").as("centroid"))
+    val wCell = Window.partitionBy(col("vec_id"))
+      .orderBy(round(col("d2"), 6), col("label"))
+    normed(spark, dir)
+      .crossJoin(broadcast(centroids))
+      .withColumn("d2",
+                  graft.functions.VectorExprs.vecDist2(col("v"),
+                                                       col("centroid")))
+      .withColumn("rn", row_number().over(wCell))
   }
 
   /** IVF (inverted-file) ANN: coarse cells are per-label centroids
@@ -208,52 +256,6 @@ object VectorOps {
     * both engines measure against identical cell centers; cell argmin
     * ties break on label, rank ties on neighbor id.
     */
-  /** Coarse-quantizer cell ranking shared by [[annIvf]] and
-    * `CalibrationOps.ivfRows`: label-mean centroids, broadcast
-    * crossJoin, per-vector `row_number` over (round(d2,6), label).
-    * ONE definition so a tie-break or rounding change cannot
-    * desynchronize the recall calibration from the operator it
-    * measures (the minhashSigFrame convention). `emb` must carry
-    * (vec_id, v, nrm).
-    *
-    * Persisted per dataset (r14, §5): the centroid aggregate +
-    * crossJoin + window subtree was re-derived by EVERY consumer
-    * subtree — `recall_matrix`'s three ivf grid rows each reference it
-    * twice (member assignment + query probes, different filters, so
-    * ReuseExchange cannot share them) and `ann_ivf`/`ann_ivf_probed`
-    * once more — six-plus evaluations per bench pass for one
-    * |corpus|×|labels| frame. Keying on `dir` alone is sound because
-    * every caller passes the SAME canonical emb projection
-    * (vec_id, embedding AS v, nrm = norm(v)); the store returns the
-    * identical plan, so results are bit-identical.
-    */
-  private val ivfRankStore = new FrameStore(2)
-
-  private[operators] def ivfRanked(spark: SparkSession, dir: String,
-                                   emb: DataFrame): DataFrame =
-    ivfRankStore.getOrBuild(spark, s"$dir#ivfranked")(
-      ivfRankedPlan(spark, dir, emb))
-
-  private def ivfRankedPlan(spark: SparkSession, dir: String,
-                            emb: DataFrame): DataFrame = {
-    val centroids = Tables
-      .embeddings(spark, dir)
-      .select(col("label"), posexplode(asDouble(col("embedding"))))
-      .groupBy(col("label"), col("pos"))
-      .agg(round(avg(col("col")), 6).as("c"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-        .getField("c").as("centroid"))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(round(col("d2"), 6), col("label"))
-    emb
-      .crossJoin(broadcast(centroids))
-      .withColumn("d2",
-                  graft.functions.VectorExprs.vecDist2(col("v"),
-                                                       col("centroid")))
-      .withColumn("rn", row_number().over(wCell))
-  }
-
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfAt(spark, dir, ivfProbes(spark))
 
@@ -263,12 +265,7 @@ object VectorOps {
     */
   private[operators] def annIvfAt(spark: SparkSession, dir: String,
                                   nprobe: Int): DataFrame = {
-    val emb = Tables
-      .embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", norm(col("v")))
-
-    val ranked = ivfRanked(spark, dir, emb)
+    val ranked = ivfRanked(spark, dir)
 
     // members live in exactly their nearest cell; QUERIES probe their
     // `nprobe` nearest cells (default 1, the oracle form) — the

@@ -23,8 +23,8 @@ object CooldownProcessor {
 
   case class LastFired(tsMillis: Long)
 
-  /** Pure gating core shared by the flatMapGroupsWithState handler and
-    * the transformWithState [[CooldownStatefulProcessor]].
+  /** Pure gating core shared by [[gate]] and the event-time-expiry
+    * [[CooldownStatefulProcessor]].
     */
   def advance(init: Option[Long],
               alerts: Iterator[AnomalyAlert]): (Option[Long], Seq[FiredAlert]) = {

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{GroupState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming two-sided CUSUM — the incremental form of
   * [[graft.operators.SeriesOps.cusumChangepoints]]: the batch query is
@@ -67,8 +66,8 @@ object CusumProcessor {
     Math.floorDiv(2L * sumMicro + count * 10000L, 2L * count * 10000L)
       .toDouble
 
-  /** Pure fold core shared by the flatMapGroupsWithState handler and
-    * the transformWithState processor.
+  /** Pure fold core of [[detect]], also driven directly by the
+    * split-invariance properties.
     */
   def advance(baselines: Map[String, Baseline], key: String,
               init: CusumState, events: Iterator[Event]): CusumState = {
@@ -118,29 +117,6 @@ object CusumProcessor {
       state: GroupState[CusumState]): Iterator[CusumCounts] = {
     val s = advance(baselines, key, state.getOption.getOrElse(EmptyState),
                     events)
-    state.update(s)
-    emit(baselines, key, s)
-  }
-}
-
-/** transformWithState form — same pure core, ValueState row per key. */
-class CusumStatefulProcessor(baselines: Map[String, CusumProcessor.Baseline],
-                             ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, Event, CusumProcessor.CusumCounts] {
-  import CusumProcessor._
-
-  @transient private var state: ValueState[CusumState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[CusumState](
-      "cusumState", Encoders.product[CusumState], ttl)
-
-  override def handleInputRows(
-      key: String,
-      inputRows: Iterator[Event],
-      timerValues: TimerValues): Iterator[CusumCounts] = {
-    val s = advance(baselines, key, Option(state.get()).getOrElse(EmptyState),
-                    inputRows)
     state.update(s)
     emit(baselines, key, s)
   }

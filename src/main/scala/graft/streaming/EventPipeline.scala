@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.io.LocalFs
@@ -131,86 +131,77 @@ object EventPipeline {
                 .round(col("sum_micro").cast("double") / lit(1000000.0), 4)
                 .as("sum_value"))
 
-  /** Keyed stateful anomaly detection (T3): groupByKey(event_type) →
-    * flatMapGroupsWithState(AnomalyProcessor.detect). Update-mode output,
-    * no timeout (state lives for the key's lifetime, like Flink
-    * ValueState).
+  /** The five event columns as a typed `Dataset[Event]`: the input
+    * projection of every keyed stage.
     */
-  def anomalyStream(spark: SparkSession, events: DataFrame): Dataset[AnomalyAlert] = {
-    LocalFs.use(spark)
-    import spark.implicits._
+  def typedEvents(events: DataFrame): Dataset[Event] = {
+    import events.sparkSession.implicits._
     events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
               col("value"))
       .as[Event]
-      .filter(_.value > 0) // P3 validity filter
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        AnomalyProcessor.detect)
+  }
+
+  /** The one flatMapGroupsWithState builder: `groupByKey(key)`, then
+    * `fn` over each key's rows in Update mode with no timeout (state
+    * lives for the key's lifetime, like Flink ValueState).
+    */
+  private def keyedUpdate[I, K: Encoder, S: Encoder, O: Encoder](
+      spark: SparkSession, in: Dataset[I])(key: I => K)(
+      fn: (K, Iterator[I], GroupState[S]) => Iterator[O]): Dataset[O] = {
+    LocalFs.use(spark)
+    in.groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(fn)
+  }
+
+  /** Keyed stateful anomaly detection (T3): groupByKey(event_type) →
+    * [[AnomalyProcessor.detect]].
+    */
+  def anomalyStream(spark: SparkSession, events: DataFrame): Dataset[AnomalyAlert] = {
+    import spark.implicits._
+    val valid = typedEvents(events).filter(_.value > 0) // P3 validity filter
+    keyedUpdate(spark, valid)(_.event_type)(AnomalyProcessor.detect)
   }
 
   /** Keyed EWMA smoothing of the per-minute KPI level — the incremental
     * form of the `series_ewma` batch query (four numbers of state per
-    * key; update mode, provisional panes).
+    * key; provisional panes).
     */
   def ewmaStream(spark: SparkSession,
                  events: DataFrame): Dataset[EwmaProcessor.EwmaLevel] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-              col("value"))
-      .as[Event]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        EwmaProcessor.smooth)
+    keyedUpdate(spark, typedEvents(events))(_.event_type)(EwmaProcessor.smooth)
   }
 
   /** Streaming CUSUM change-point counts per event type — offline-learned
-    * baselines, online fold (see [[CusumProcessor]]); update mode.
+    * baselines, online fold (see [[CusumProcessor]]).
     */
   def cusumStream(spark: SparkSession, events: DataFrame,
                   baselines: Map[String, CusumProcessor.Baseline])
       : Dataset[CusumProcessor.CusumCounts] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-              col("value"))
-      .as[Event]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        CusumProcessor.detect(baselines))
+    keyedUpdate(spark, typedEvents(events))(_.event_type)(
+      CusumProcessor.detect(baselines))
   }
 
   /** Per-user event-transition stream — the incremental `lead` window
-    * (one last-event record of state per user; update mode).
+    * (one last-event record of state per user).
     */
   def transitionStream(
       spark: SparkSession,
       events: DataFrame): Dataset[TransitionProcessor.Transition] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-              col("value"))
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        TransitionProcessor.track)
+    keyedUpdate(spark, typedEvents(events))(_.user_id)(TransitionProcessor.track)
   }
 
   /** Second keyed stage: cooldown gate per (source, severity) (T10). */
   def cooldownStream(
       spark: SparkSession,
       alerts: Dataset[AnomalyAlert]): Dataset[CooldownProcessor.FiredAlert] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    alerts
-      .filter(_.is_anomaly) // P4 anomaly-only filter
-      .groupByKey(a => (a.event_type, a.severity))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        CooldownProcessor.gate)
+    val anomalies = alerts.filter(_.is_anomaly) // P4 anomaly-only filter
+    keyedUpdate(spark, anomalies)(a => (a.event_type, a.severity))(
+      CooldownProcessor.gate)
   }
 
   /** FUSED detector + cooldown in ONE keyed stage
@@ -226,16 +217,9 @@ object EventPipeline {
   def fusedAlertStream(
       spark: SparkSession,
       events: DataFrame): Dataset[CooldownProcessor.FiredAlert] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-              col("value"))
-      .as[Event]
-      .filter(_.value > 0) // P3 validity filter, same as anomalyStream
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        FusedAlertProcessor.detectAndGate)
+    val valid = typedEvents(events).filter(_.value > 0) // same as anomalyStream
+    keyedUpdate(spark, valid)(_.event_type)(FusedAlertProcessor.detectAndGate)
   }
 
   /** Stream–stream interval join (Flink `intervalJoin` ≙ Spark's

@@ -51,9 +51,8 @@ object EwmaProcessor {
   val EmptyState: EwmaState =
     EwmaState(hasLevel = false, 0.0, Long.MinValue, 0L, 0L, 0L)
 
-  /** Pure fold core shared by the flatMapGroupsWithState handler and the
-    * transformWithState [[EwmaStatefulProcessor]] — one code path, so
-    * parity between the two APIs is structural, not tested-into.
+  /** Pure fold core of [[smooth]], also driven directly by the
+    * split-invariance properties.
     */
   def advance(init: EwmaState, events: Iterator[Event]): EwmaState = {
     var s = init

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.io.LocalFs
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -138,6 +139,7 @@ object SessionStatefulProcessor {
     */
   def sessionStream(spark: SparkSession,
                     events: Dataset[Event]): Dataset[SessionClosed] = {
+    LocalFs.use(spark)
     import spark.implicits._
     events
       .withWatermark("ts", "10 seconds")

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{TTLConfig, TimeMode}
   * Default `none` is REFERENCE PARITY: the Flink jobs keep their keyed
   * `ValueState` forever (`AnomalyDetectionJob.java:279-305` configures
   * no StateTtlConfig), and the parity specs hold at the default. But
-  * per-user state (transitions) and per-(source,severity) state
-  * (cooldown) are unbounded in KEY CARDINALITY — a 100 TB deployment
+  * per-user state (snapshots, funnels) and per-event-id state (ingest
+  * dedup) are unbounded in KEY CARDINALITY — a 100 TB deployment
   * with churning users must bound the store, and processing-time TTL is
   * the standard Flink/Spark answer (`StateTtlConfig` there,
   * `TTLConfig` here). Same validate-and-default pattern as the
@@ -19,9 +19,9 @@ import org.apache.spark.sql.streaming.{TTLConfig, TimeMode}
   * TTL requires `TimeMode.ProcessingTime` in transformWithState, so the
   * stream builders derive the time mode from the resolved config —
   * `TimeMode.None` at the parity default, ProcessingTime when a TTL is
-  * set. [[SessionStatefulProcessor]] is exempt: it runs event-time
-  * timers and clears its own state at session close, so its store is
-  * already bounded by the watermark.
+  * set. [[SessionStatefulProcessor]] and [[CooldownStatefulProcessor]]
+  * are exempt: they run event-time timers that clear a key's state once
+  * the watermark closes it, so their stores are already bounded.
   */
 object StateTtl {
 

@@ -69,7 +69,7 @@ object StreamDrain {
   private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => liveDirs.values().forEach(deleteTree(_))))
 
-  /** Base dir for all drain work/staging state (r13, guide §6): the
+  /** Base dir for all drain work/staging state: the
     * drains' checkpoints, staged chunk files and stores are THROWAWAY
     * verification state re-derived per run, but each micro-batch pays
     * real file I/O for them (offset/commit WAL, 8 state-store deltas,
@@ -151,8 +151,8 @@ object StreamDrain {
     * filter/write Spark job chain, ×2 passes ×3 bench runs) is pure
     * re-computation of an immutable artifact; building each pass's
     * files once per (dataset, recipe) in the staged cache and copying
-    * them in (metadata-scale, tmpfs) replaces those jobs (r13, guide
-    * §1.2: don't recompute what you throw away).
+    * them in (metadata-scale, tmpfs) replaces those jobs (don't
+    * recompute what you throw away).
     */
   private def copyCachedChunks(dir: String, variant: String, chunks: Int,
                                stage: String)(build: String => Unit): Unit = {
@@ -318,15 +318,15 @@ object StreamDrain {
       .start()
     q.awaitTermination()
     // Unload this JVM's state-store providers before handing the store
-    // back — the round-10 dirty-restart forensics applied to EVERY
+    // back — the dirty-restart drain's provider unload applied to EVERY
     // drain: the ~39 drains run back-to-back in Bench/Verify, each
     // leaving its checkpoint's providers loaded, so the 60 s
     // maintenance tick sweeps an ever-growing provider set (snapshot
     // consolidation per partition, against work dirs the next
     // allocation may already have deleted) and bills the cost to
-    // whichever unrelated query happens to be running — measured in
-    // round 11 as a uniform drag on every drain plus 3-5x spikes on
-    // the bench's alphabetical tail. Safe: the returned frame reads
+    // whichever unrelated query happens to be running — measured as a
+    // uniform drag on every drain plus 3-5x spikes on the bench's
+    // alphabetical tail. Safe: the returned frame reads
     // the parquet store (the statestore legs build batch state-source
     // reads that create fresh read-only providers at scan time), the
     // checkpoints are throwaway verification state, and the next
@@ -351,7 +351,7 @@ object StreamDrain {
   /** Read a drained store back: partition discovery restores `batch_id`
     * from the per-batch subdirectories the idempotent sink wrote; cast
     * to long (directory inference types small ids as int) so downstream
-    * batch-id arithmetic keeps the pre-r10 column type.
+    * batch-id arithmetic keeps a long column.
     */
   private def readStore(spark: SparkSession, store: String): DataFrame =
     spark.read.parquet(store)
@@ -565,7 +565,7 @@ object StreamDrain {
     // plant bounds are a 1-row probe, cached per dataset (cachedProbe);
     // the staged file set is static for a dataset and visible from the
     // start, so the drain streams DIRECTLY from the shared immutable
-    // staging cache instead of re-staging per run (r13)
+    // staging cache instead of re-staging per run
     val (lateBase, sentinelTs) =
       cachedProbe[(java.lang.Long, java.sql.Timestamp)](
         s"latedrop_bounds|$dir") {
@@ -1874,7 +1874,7 @@ object StreamDrain {
     // the whole file set is visible from the start (the crash is
     // injected in foreachBatch, not via file visibility), so the drain
     // streams DIRECTLY from the shared immutable staging cache — no
-    // per-run staging jobs (r13)
+    // per-run staging jobs
     val stage = stagedPath(dir, "dirty_session", 3) { d =>
       stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 1,
                    Seq(col("ts"), col("event_id")))
@@ -1964,7 +1964,7 @@ object StreamDrain {
     // purchase — its match is IN the orphaned sink output and must be
     // re-derived from rolled-back buffers). The whole file set is
     // visible from the start (crash injected in foreachBatch), so the
-    // drain streams DIRECTLY from the shared staging cache (r13).
+    // drain streams DIRECTLY from the shared staging cache.
     val stage = stagedPath(dir, "dirty_join", 5) { d =>
       stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2,
                    Seq(col("ts"), col("event_id")))
@@ -2049,8 +2049,8 @@ object StreamDrain {
     // maintenance path: a query that dies mid-run leaves its providers
     // deactivated-but-loaded, and the maintenance thread's final
     // consolidation (a full snapshot write per partition) otherwise
-    // lands 1-2 maintenance intervals LATER — measured in round 10 as a
-    // silent multi-minute drag smeared over whatever unrelated queries
+    // lands 1-2 maintenance intervals LATER — measured as a silent
+    // multi-minute drag smeared over whatever unrelated queries
     // the bench happened to be timing then. The checkpoint is throwaway
     // verification state, so dropping it without a final snapshot is
     // correct; the next streaming query restarts maintenance lazily.

@@ -74,8 +74,7 @@ object StreamJob {
       .foreachBatch(EventPipeline.idempotentBatchWriter(s"$outDir/sessions"))
       .start()
 
-    // smoothed-KPI store (EWMA levels per key) and per-user transition
-    // stream — the round-3 incremental operators, same job graph
+    // smoothed-KPI store: EWMA levels per key over closed minute buckets
     val ewmaQuery = EventPipeline
       .ewmaStream(spark, events)
       .toDF()
@@ -89,13 +88,9 @@ object StreamJob {
     // timer-closed sessions (transformWithState + event-time timers) —
     // the same gap semantics as the session_window store above, closed
     // explicitly by watermark timers; both stores should agree
-    val session0 = spark
-    import session0.implicits._
+    val typed = EventPipeline.typedEvents(events)
     val timerSessionQuery = SessionStatefulProcessor
-      .sessionStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .sessionStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Append)
@@ -108,10 +103,7 @@ object StreamJob {
     // window, folded online in MapState (streaming twin of batch
     // drift_tv — parity spec'd in StatefulProcessorSpec)
     val driftQuery = TypedStatefulProcessors
-      .driftStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .driftStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -124,12 +116,9 @@ object StreamJob {
     // from the same dataset (the standard deployment split), the
     // two-sided fold online per type — final counts equal the batch
     // cusum_changepoints (parity spec'd in StreamingParitySpec)
-    val cusumQuery = TypedStatefulProcessors
-      .cusumStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event],
-        graft.operators.SeriesOps.cusumBaselines(spark, sfDir))
+    val cusumQuery = EventPipeline
+      .cusumStream(spark, events,
+                   graft.operators.SeriesOps.cusumBaselines(spark, sfDir))
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -153,10 +142,7 @@ object StreamJob {
     // (the fixture has no replays, so the count equals events; the
     // replay path is spec-exercised in StatefulProcessorSpec)
     val dedupQuery = TypedStatefulProcessors
-      .dedupStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .dedupStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -169,10 +155,7 @@ object StreamJob {
     // (streaming twin of the batch hll_by_day rollup; register-identical
     // to hll_sketch_agg — parity spec'd in StatefulProcessorSpec)
     val hllQuery = TypedStatefulProcessors
-      .hllDayStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .hllDayStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -186,10 +169,7 @@ object StreamJob {
     // spec'd in StatefulProcessorSpec); the store's latest row per user
     // IS the materialized view
     val snapQuery = TypedStatefulProcessors
-      .userSnapshotStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .userSnapshotStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -202,10 +182,7 @@ object StreamJob {
     // transformWithState twin of batch window_funnel — histogram parity
     // spec'd in StatefulProcessorSpec)
     val funnelQuery = TypedStatefulProcessors
-      .funnelStream(spark, events
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-                col("value"))
-        .as[Event])
+      .funnelStream(spark, typed)
       .toDF()
       .writeStream
       .outputMode(OutputMode.Update)
@@ -218,6 +195,8 @@ object StreamJob {
     // (≙ a crawler/mirror feed), online exact dedup by content hash —
     // the count equals the batch dedup_exact distinct-hash count
     // (first-occurrence semantics spec'd in StatefulProcessorSpec)
+    val session0 = spark
+    import session0.implicits._
     val stageDocs = s"$outDir/staged_docs"
     graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"),
@@ -378,8 +357,6 @@ object StreamJob {
     */
   private def ttlDrain(spark: SparkSession, stageDir: String,
                        outDir: String): (Long, Long) = {
-    val session0 = spark
-    import session0.implicits._
     val ttlDir = s"$outDir/staged_events_ttl"
     spark.read.parquet(stageDir).write.mode("overwrite").parquet(ttlDir)
     graft.Posture.withConf(spark, StateTtl.Key -> Some(TtlMillis.toString)) {
@@ -399,12 +376,9 @@ object StreamJob {
         catch { case _: org.apache.spark.sql.AnalysisException => 0L }
       def drain(expectTotal: Long, awaitEviction: Boolean): Long = {
         val q = TypedStatefulProcessors
-          .dedupStream(spark, spark.readStream
+          .dedupStream(spark, EventPipeline.typedEvents(spark.readStream
             .schema(EventPipeline.eventSchema)
-            .parquet(ttlDir)
-            .select(col("event_id"), col("ts"), col("user_id"),
-                    col("event_type"), col("value"))
-            .as[Event])
+            .parquet(ttlDir)))
           .toDF()
           .writeStream
           .outputMode(OutputMode.Update)

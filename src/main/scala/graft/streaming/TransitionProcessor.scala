@@ -16,8 +16,8 @@ object TransitionProcessor {
 
   case class Transition(user_id: Long, prev_type: String, next_type: String)
 
-  /** Pure pairing core shared by the flatMapGroupsWithState handler and
-    * the transformWithState [[TransitionStatefulProcessor]].
+  /** Pure pairing core of [[track]], also driven directly by the
+    * split-invariance properties.
     */
   def advance(key: Long,
               init: Option[LastEvent],

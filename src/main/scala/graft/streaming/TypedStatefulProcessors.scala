@@ -2,94 +2,30 @@ package graft.streaming
 
 import graft.functions.RollingWindow
 import graft.io.LocalFs
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** transformWithState (Spark 4 StatefulProcessor) forms of the keyed
-  * stages — the anomaly detector, EWMA smoothing, event transitions, the
-  * cooldown gate and more (SURVEY §2.7 names transformWithState as the
-  * 1:1 mapping of the reference's Flink `RichFlatMapFunction` +
-  * `ValueState`, `AnomalyDetectionJob.java:279-368`).
-  *
-  * Each processor delegates to the SAME pure fold its
-  * flatMapGroupsWithState twin uses (an `advance` core, or
-  * [[AnomalyProcessor.scoreBatch]]), so the two APIs cannot diverge;
-  * StreamingParitySpec still asserts end-to-end equality on multi-batch
-  * splits. All require the RocksDB state store provider
-  * ([[AnomalyStatefulProcessor.rocksdbConf]]).
-  *
-  * State lifetime is a constructor knob resolved from `graft.state.ttl`
-  * by the stream builders ([[StateTtl]]); the default is the
-  * reference-parity `TTLConfig.NONE`.
+/** Cooldown gate per (source, severity) with event-time state expiry
+  * ([[TypedStatefulProcessors.cooldownStreamWithExpiry]]): the gate is
+  * [[CooldownProcessor.advance]], and each firing registers one timer
+  * per key at `lastFired + CooldownMillis` that CLEARS the key's state
+  * when the watermark passes it — at that point the gate is provably
+  * open (any in-watermark alert has `ts − lastFired ≥ cooldown`, and an
+  * absent lastFired fires too), so dropping the state cannot change any
+  * future verdict while keeping the store O(keys alerting within one
+  * cooldown window) instead of O(every (source, severity) ever seen).
+  * Same one-live-timer-per-key discipline as [[SessionStatefulProcessor]].
   */
-class EwmaStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, Event, EwmaProcessor.EwmaLevel] {
-  import EwmaProcessor._
-
-  @transient private var level: ValueState[EwmaState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    level = getHandle.getValueState[EwmaState](
-      "ewmaLevel", Encoders.product[EwmaState], ttl)
-
-  override def handleInputRows(
-      key: String,
-      inputRows: Iterator[Event],
-      timerValues: TimerValues): Iterator[EwmaLevel] = {
-    val s = advance(Option(level.get()).getOrElse(EmptyState), inputRows)
-    level.update(s)
-    emit(key, s)
-  }
-}
-
-/** Per-user transition pairing as a StatefulProcessor (one LastEvent of
-  * state per user, exactly the Flink ValueState shape).
-  */
-class TransitionStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[Long, Event, TransitionProcessor.Transition] {
-  import TransitionProcessor._
-
-  @transient private var last: ValueState[LastEvent] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[LastEvent](
-      "lastEvent", Encoders.product[LastEvent], ttl)
-
-  override def handleInputRows(
-      key: Long,
-      inputRows: Iterator[Event],
-      timerValues: TimerValues): Iterator[Transition] = {
-    val (prev, out) = advance(key, Option(last.get()), inputRows)
-    prev.foreach(last.update)
-    out.iterator
-  }
-}
-
-/** Cooldown gate per (source, severity) as a StatefulProcessor.
-  *
-  * Under event-time mode ([[TypedStatefulProcessors.cooldownStreamWithExpiry]])
-  * the processor also registers one timer per key at `lastFired +
-  * CooldownMillis` and CLEARS the key's state when the watermark passes
-  * it — at that point the gate is provably open (any in-watermark alert
-  * has `ts − lastFired ≥ cooldown`, and an absent lastFired fires too),
-  * so dropping the state cannot change any future verdict while keeping
-  * the store O(keys alerting within one cooldown window) instead of
-  * O(every (source, severity) ever seen). Same one-live-timer-per-key
-  * discipline as [[SessionStatefulProcessor]].
-  */
-class CooldownStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE)
+class CooldownStatefulProcessor
     extends StatefulProcessor[(String, String), AnomalyAlert,
                               CooldownProcessor.FiredAlert] {
   import CooldownProcessor._
 
   @transient private var lastFired: ValueState[LastFired] = _
-  @transient private var useTimers: Boolean = false
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     lastFired = getHandle.getValueState[LastFired](
-      "lastFired", Encoders.product[LastFired], ttl)
-    useTimers = timeMode == TimeMode.EventTime()
-  }
+      "lastFired", Encoders.product[LastFired], TTLConfig.NONE)
 
   override def handleInputRows(
       key: (String, String),
@@ -98,10 +34,8 @@ class CooldownStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE)
     val (last, out) = advance(Option(lastFired.get()).map(_.tsMillis), inputRows)
     last.foreach { l =>
       lastFired.update(LastFired(l))
-      if (useTimers) {
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(l + CooldownMillis)
-      }
+      getHandle.listTimers().foreach(getHandle.deleteTimer)
+      getHandle.registerTimer(l + CooldownMillis)
     }
     out.iterator
   }
@@ -714,6 +648,20 @@ class TopTokensStatefulProcessor(k: Int = 64,
   }
 }
 
+/** transformWithState (Spark 4 StatefulProcessor) processors: the keyed
+  * stages whose state is a list, a map, a sketch, a timer or a TTL'd
+  * key space (SURVEY §2.7 names transformWithState as the 1:1 mapping of
+  * the reference's Flink `RichFlatMapFunction` + `ValueState`,
+  * `AnomalyDetectionJob.java:279-368`). The stages whose state is one
+  * fixed-size row per key (detector, EWMA, CUSUM, transitions, the
+  * cooldown gate) run on flatMapGroupsWithState in [[EventPipeline]].
+  * All require the RocksDB state store provider
+  * ([[AnomalyStatefulProcessor.rocksdbConf]]).
+  *
+  * State lifetime is a constructor knob resolved from `graft.state.ttl`
+  * by the stream builders ([[StateTtl]]); the default is the
+  * reference-parity `TTLConfig.NONE`.
+  */
 object TypedStatefulProcessors {
 
   /** Milliseconds per UTC day — [[hllDayStream]]'s key derivation
@@ -722,19 +670,27 @@ object TypedStatefulProcessors {
     */
   private val MillisPerDay = 86400000L
 
+  /** The one transformWithState builder for the TTL-resolved stages:
+    * `graft.state.ttl` picks the processor's TTL and the time mode
+    * ([[StateTtl]]), output is Update mode.
+    */
+  private def withState[K, I, O: Encoder](
+      spark: SparkSession, grouped: KeyValueGroupedDataset[K, I])(
+      processor: TTLConfig => StatefulProcessor[K, I, O]): Dataset[O] = {
+    LocalFs.use(spark)
+    val ttl = StateTtl.of(spark)
+    grouped.transformWithState(processor(ttl), StateTtl.timeMode(ttl),
+                               OutputMode.Update())
+  }
+
   /** events → per-day (cumulative count, live distinct-user estimate)
     * via the sketch-folding processor; see [[HllStatefulProcessor]].
     */
   def hllDayStream(spark: SparkSession,
                    events: Dataset[Event]): Dataset[DayUsers] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(e => Math.floorDiv(e.ts.getTime, MillisPerDay))
-      .transformWithState(new HllStatefulProcessor(ttl = ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, events.groupByKey(e => Math.floorDiv(e.ts.getTime, MillisPerDay)))(
+      ttl => new HllStatefulProcessor(ttl = ttl))
   }
 
   /** tokenized docs → per-language live top-token estimates via the
@@ -742,14 +698,9 @@ object TypedStatefulProcessors {
     */
   def topTokensStream(spark: SparkSession,
                       docs: Dataset[DocTokens]): Dataset[LangTokenEst] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    docs
-      .groupByKey(_.lang)
-      .transformWithState(new TopTokensStatefulProcessor(ttl = ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, docs.groupByKey(_.lang))(
+      ttl => new TopTokensStatefulProcessor(ttl = ttl))
   }
 
   /** banded signature keys → online candidate near-dup pairs via the
@@ -757,14 +708,9 @@ object TypedStatefulProcessors {
     */
   def lshCandidateStream(spark: SparkSession,
                          bands: Dataset[BandKeyRow]): Dataset[LshCandidate] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    bands
-      .groupByKey(r => s"${r.band}:${r.band_hash}")
-      .transformWithState(new LshBucketProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, bands.groupByKey(r => s"${r.band}:${r.band_hash}"))(
+      new LshBucketProcessor(_))
   }
 
   /** events → live per-type drift estimates via the MapState histogram
@@ -772,28 +718,16 @@ object TypedStatefulProcessors {
     */
   def driftStream(spark: SparkSession,
                   events: Dataset[Event]): Dataset[DriftSnapshot] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new DriftStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, events.groupByKey(_.event_type))(new DriftStatefulProcessor(_))
   }
 
   /** events → alerts with the ListState-buffered detector. */
   def anomalyListStream(spark: SparkSession,
                         events: Dataset[Event]): Dataset[AnomalyAlert] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .filter(_.value > 0)
-      .groupByKey(_.event_type)
-      .transformWithState(new AnomalyListStateProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, events.filter(_.value > 0).groupByKey(_.event_type))(
+      new AnomalyListStateProcessor(_))
   }
 
   /** events → per-user live funnel progress (streaming windowed-funnel
@@ -801,16 +735,11 @@ object TypedStatefulProcessors {
     */
   def funnelStream(spark: SparkSession,
                    events: Dataset[Event]): Dataset[FunnelProgress] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
+    withState(spark, events
       .filter(e => e.event_type == "view" || e.event_type == "click" ||
         e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+      .groupByKey(_.user_id))(new FunnelStatefulProcessor(_))
   }
 
   /** events → per-user running snapshots (streaming incremental view
@@ -818,14 +747,8 @@ object TypedStatefulProcessors {
     */
   def userSnapshotStream(spark: SparkSession,
                          events: Dataset[Event]): Dataset[UserSnapshot] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new UserSnapshotStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, events.groupByKey(_.user_id))(new UserSnapshotStatefulProcessor(_))
   }
 
   /** delta events → per-user running snapshots, WARM-STARTED from a
@@ -851,14 +774,8 @@ object TypedStatefulProcessors {
     */
   def dedupStream(spark: SparkSession,
                   events: Dataset[Event]): Dataset[Event] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.event_id)
-      .transformWithState(new DedupStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, events.groupByKey(_.event_id))(new DedupStatefulProcessor(_))
   }
 
   /** document stream → first occurrence per content hash (streaming
@@ -866,77 +783,16 @@ object TypedStatefulProcessors {
     */
   def docDedupStream(spark: SparkSession,
                      docs: Dataset[IngestDoc]): Dataset[IngestDoc] = {
-    LocalFs.use(spark)
     import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    docs
-      .groupByKey(_.content_hash)
-      .transformWithState(new DocDedupStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
-  }
-
-  /** events → EWMA levels via the native transformWithState operator. */
-  def ewmaStream(spark: SparkSession,
-                 events: Dataset[Event]): Dataset[EwmaProcessor.EwmaLevel] = {
-    LocalFs.use(spark)
-    import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new EwmaStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
-  }
-
-  /** events → per-type CUSUM shift counts via transformWithState. */
-  def cusumStream(spark: SparkSession, events: Dataset[Event],
-                  baselines: Map[String, CusumProcessor.Baseline])
-      : Dataset[CusumProcessor.CusumCounts] = {
-    LocalFs.use(spark)
-    import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new CusumStatefulProcessor(baselines, ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
-  }
-
-  /** events → per-user transitions via transformWithState. */
-  def transitionStream(
-      spark: SparkSession,
-      events: Dataset[Event]): Dataset[TransitionProcessor.Transition] = {
-    LocalFs.use(spark)
-    import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
-  }
-
-  /** alerts → fired alerts (cooldown-gated) via transformWithState. */
-  def cooldownStream(
-      spark: SparkSession,
-      alerts: Dataset[AnomalyAlert]): Dataset[CooldownProcessor.FiredAlert] = {
-    LocalFs.use(spark)
-    import spark.implicits._
-    val ttl = StateTtl.of(spark)
-    alerts
-      .filter(_.is_anomaly)
-      .groupByKey(a => (a.event_type, a.severity))
-      .transformWithState(new CooldownStatefulProcessor(ttl),
-                          StateTtl.timeMode(ttl),
-                          OutputMode.Update())
+    withState(spark, docs.groupByKey(_.content_hash))(new DocDedupStatefulProcessor(_))
   }
 
   /** Cooldown gate with event-time state expiry: a watermark drives the
     * per-key timer that clears `lastFired` once the cooldown window has
     * definitively passed (see [[CooldownStatefulProcessor]]). Identical
-    * fired-alert output to [[cooldownStream]] for in-watermark data —
-    * StatefulProcessorSpec asserts the parity and the eviction.
+    * fired-alert output to [[EventPipeline.cooldownStream]] for
+    * in-watermark data — `stream_cooldown_timer_drain` gates both
+    * against one oracle, and StatefulProcessorSpec asserts the eviction.
     */
   def cooldownStreamWithExpiry(
       spark: SparkSession,
@@ -947,7 +803,7 @@ object TypedStatefulProcessors {
       .filter(_.is_anomaly)
       .withWatermark("ts", "10 seconds")
       .groupByKey(a => (a.event_type, a.severity))
-      .transformWithState(new CooldownStatefulProcessor(),
+      .transformWithState(new CooldownStatefulProcessor,
                           TimeMode.EventTime(),
                           OutputMode.Update())
   }

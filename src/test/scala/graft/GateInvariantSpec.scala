@@ -57,6 +57,47 @@ class GateInvariantSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
+  test("keyed-state builders: one call site per state API and file-context hook") {
+    // Every keyed stage reaches its state API through one builder
+    // (EventPipeline.keyedUpdate for flatMapGroupsWithState,
+    // TypedStatefulProcessors.withState for the TTL-resolved
+    // transformWithState stages), and each builder that starts keyed
+    // state calls LocalFs.use, so a session the engine did not build
+    // still checkpoints without a process per file op. Guard: each
+    // pattern occurs in src/main exactly at these sites, per file. The
+    // expected counts are all positive, so the scan cannot pass
+    // vacuously.
+    import scala.jdk.CollectionConverters._
+    val allowed = Map(
+      "LocalFs.use(" -> Map(
+        "EventPipeline.scala" -> 2,           // readEventFileStream, keyedUpdate
+        "TypedStatefulProcessors.scala" -> 3, // withState, warm start, cooldown expiry
+        "SessionStatefulProcessor.scala" -> 1),
+      "flatMapGroupsWithState(" -> Map("EventPipeline.scala" -> 1),
+      "transformWithState(" -> Map(
+        "TypedStatefulProcessors.scala" -> 3, // withState, warm start, cooldown expiry
+        "SessionStatefulProcessor.scala" -> 1))
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .map(p => p.getFileName.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    for ((pattern, expected) <- allowed) {
+      val found = sources
+        .map { case (f, text) =>
+          f -> java.util.regex.Pattern.quote(pattern).r.findAllMatchIn(text).size }
+        .filter(_._2 > 0).toMap
+      assert(found == expected, s"$pattern call sites")
+    }
+    // and the one flatMapGroupsWithState call is the keyedUpdate body
+    val pipeline = sources.collectFirst { case ("EventPipeline.scala", t) => t }.get
+    val helper = pipeline.indexOf("private def keyedUpdate")
+    val call = pipeline.indexOf("flatMapGroupsWithState(")
+    assert(helper >= 0 && call > helper &&
+             call < pipeline.indexOf("\n  def ", helper),
+           "flatMapGroupsWithState outside EventPipeline.keyedUpdate")
+  }
+
   test("every query output is scalar-only (driver's row sorter dies on nested types)") {
     val dir = sf("sf0.001")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {

@@ -11,14 +11,15 @@ import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 import graft.io.LocalFs
-import graft.streaming.{AnomalyAlert, EventPipeline, StreamDrain}
+import graft.streaming.{AnomalyAlert, Event, EventPipeline, SessionStatefulProcessor, StreamDrain, TypedStatefulProcessors}
 
 /** [[graft.io.LocalFs]]: the same statuses, modes and checkpoint files
   * as Hadoop's stock local file system, without starting a process.
@@ -122,7 +123,27 @@ class LocalFsSpec extends SparkSpec {
       own.conf.set(AbstractFsKey, StockFs)
       LocalFs.use(own)
       assert(own.conf.get(AbstractFsKey) == StockFs)
+      // every keyed-state builder reaches it: one per state API, plus the
+      // event-time session form (built, not started)
+      val builders: Seq[(String, SparkSession => Unit)] = Seq(
+        "EventPipeline.ewmaStream" -> { s =>
+          EventPipeline.ewmaStream(s, events(s).toDF()); () },
+        "TypedStatefulProcessors.userSnapshotStream" -> { s =>
+          TypedStatefulProcessors.userSnapshotStream(s, events(s)); () },
+        "SessionStatefulProcessor.sessionStream" -> { s =>
+          SessionStatefulProcessor.sessionStream(s, events(s)); () })
+      for ((name, build) <- builders) {
+        val s = spark.newSession()
+        build(s)
+        assert(s.conf.getOption(AbstractFsKey).contains(OwnFs), name)
+      }
     } finally hadoop.set(AbstractFsKey, OwnFs)
+  }
+
+  /** An unstarted event stream in session `s`. */
+  private def events(s: SparkSession): Dataset[Event] = {
+    import s.implicits._
+    MemoryStream[Event](s, 1).toDS()
   }
 
   /** sf0.001's events as 4 time-ranged parquet chunks, one micro-batch each. */

@@ -7,8 +7,7 @@ import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /** ScalaCheck properties of the pure stateful-processor cores (the
-  * `advance` functions shared by flatMapGroupsWithState and
-  * transformWithState): the invariant a streaming operator owes the
+  * `advance` functions the keyed streaming stages run): the invariant a streaming operator owes the
   * batch world is SPLIT INVARIANCE — folding a sorted stream in one
   * batch or in any prefix/suffix split with carried state must produce
   * identical state and identical concatenated output. These run on the

@@ -185,115 +185,6 @@ class StatefulProcessorSpec extends SparkSpec {
     assert(list == grouped)
   }
 
-  test("EWMA transformWithState matches flatMapGroupsWithState final levels") {
-    val session = spark
-    import session.implicits._
-    val events = sortedEvents()
-
-    def finalLevels(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Double)] =
-      df.as[EwmaProcessor.EwmaLevel]
-        .collect()
-        .groupBy(_.event_type)
-        // update-mode memory sink appends; last row per key is the final level
-        .map { case (k, ls) => k -> { val l = ls.last; (l.n_buckets, l.ewma_value) } }
-
-    val tws = finalLevels(runStream[Event, EwmaProcessor.EwmaLevel](
-      "tws_ewma", events.toSeq,
-      in => TypedStatefulProcessors.ewmaStream(spark, in.toDS())))
-    val fmgws = finalLevels(runStream[Event, EwmaProcessor.EwmaLevel](
-      "fmgws_ewma", events.toSeq,
-      in => EventPipeline.ewmaStream(spark, in.toDF())))
-
-    assert(tws.nonEmpty)
-    assert(tws == fmgws)
-  }
-
-  test("CUSUM transformWithState matches flatMapGroupsWithState shift counts") {
-    val session = spark
-    import session.implicits._
-    val events = sortedEvents()
-    val baselines =
-      operators.SeriesOps.cusumBaselines(spark, "/root/testdata/sf0.001")
-
-    def finalCounts(df: org.apache.spark.sql.DataFrame)
-        : Map[String, (Long, Long, Long)] =
-      df.as[CusumProcessor.CusumCounts]
-        .collect()
-        .groupBy(_.event_type)
-        .map { case (k, cs) =>
-          val c = cs.last
-          k -> (c.n_buckets, c.n_shifts_up, c.n_shifts_down)
-        }
-
-    val tws = finalCounts(runStream[Event, CusumProcessor.CusumCounts](
-      "tws_cusum", events.toSeq,
-      in => TypedStatefulProcessors.cusumStream(spark, in.toDS(), baselines)))
-    val fmgws = finalCounts(runStream[Event, CusumProcessor.CusumCounts](
-      "fmgws_cusum", events.toSeq,
-      in => EventPipeline.cusumStream(spark, in.toDF(), baselines)))
-
-    assert(tws.nonEmpty)
-    assert(tws == fmgws)
-  }
-
-  test("transition transformWithState matches flatMapGroupsWithState pair multiset") {
-    val session = spark
-    import session.implicits._
-    val events = sortedEvents()
-
-    def pairCounts(df: org.apache.spark.sql.DataFrame): Map[(Long, String, String), Long] =
-      df.as[TransitionProcessor.Transition]
-        .collect()
-        .groupBy(t => (t.user_id, t.prev_type, t.next_type))
-        .map { case (k, ts) => k -> ts.length.toLong }
-
-    val tws = pairCounts(runStream[Event, TransitionProcessor.Transition](
-      "tws_trans", events.toSeq,
-      in => TypedStatefulProcessors.transitionStream(spark, in.toDS())))
-    val fmgws = pairCounts(runStream[Event, TransitionProcessor.Transition](
-      "fmgws_trans", events.toSeq,
-      in => EventPipeline.transitionStream(spark, in.toDF())))
-
-    assert(tws.nonEmpty)
-    assert(tws == fmgws)
-  }
-
-  private def syntheticAlerts(): Seq[AnomalyAlert] = {
-    val sevs = Array("warning", "high", "critical")
-    val srcs = Array("web", "mobile", "api")
-    // deterministic pseudo-random gaps: some inside the 5-min cooldown,
-    // some outside, interleaved across (source, severity) keys
-    (1 to 300).map { i =>
-      val gapS = (i * 37) % 480 // 0..8 min
-      AnomalyAlert(i.toLong, srcs(i % 3),
-                   new java.sql.Timestamp(1704067200000L + i * gapS * 1000L),
-                   200.0, 50, 50, 5, 50, 3, 5.0, 5.0,
-                   is_anomaly = i % 7 != 0, sevs(i % 5 % 3), "z-score")
-    }.sortBy(a => (a.ts.getTime, a.event_id))
-  }
-
-  test("cooldown transformWithState matches flatMapGroupsWithState fired set") {
-    val session = spark
-    import session.implicits._
-    val alerts = syntheticAlerts()
-
-    def fired(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String)] =
-      df.as[CooldownProcessor.FiredAlert]
-        .collect()
-        .map(f => (f.event_id, f.event_type, f.severity))
-        .toSet
-
-    val tws = fired(runStream[AnomalyAlert, CooldownProcessor.FiredAlert](
-      "tws_cd", alerts,
-      in => TypedStatefulProcessors.cooldownStream(spark, in.toDS())))
-    val fmgws = fired(runStream[AnomalyAlert, CooldownProcessor.FiredAlert](
-      "fmgws_cd", alerts,
-      in => EventPipeline.cooldownStream(spark, in.toDS())))
-
-    assert(tws.nonEmpty)
-    assert(tws == fmgws)
-  }
-
   test("fused detector+cooldown stage matches the two-stage composition") {
     val session = spark
     import session.implicits._
@@ -335,20 +226,6 @@ class StatefulProcessorSpec extends SparkSpec {
     assert(fused == fired)
   }
 
-  test("transformWithState stages chain: anomaly → cooldown in one query") {
-    val session = spark
-    import session.implicits._
-    val events = sortedEvents()
-
-    // two stateful operators in update mode — legal with
-    // transformWithState (flatMapGroupsWithState rejects this chain)
-    val df = runStream[Event, CooldownProcessor.FiredAlert](
-      "tws_chain", events.toSeq,
-      in => TypedStatefulProcessors.cooldownStream(
-        spark, TypedStatefulProcessors.anomalyListStream(spark, in.toDS())))
-    assert(df.count() > 0)
-  }
-
   test("EWMA drops events whose minute bucket already closed") {
     val session = spark
     import session.implicits._
@@ -363,7 +240,7 @@ class StatefulProcessorSpec extends SparkSpec {
 
     def lastLevel(name: String, batches: Seq[Seq[Event]]): EwmaProcessor.EwmaLevel = {
       val input = MemoryStream[Event](spark, 2)
-      val q = TypedStatefulProcessors.ewmaStream(spark, input.toDS())
+      val q = EventPipeline.ewmaStream(spark, input.toDF())
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update).start()
       try batches.foreach { b => input.addData(b); q.processAllAvailable() }
@@ -649,31 +526,31 @@ class StatefulProcessorSpec extends SparkSpec {
       Map("h_a" -> 3L, "h_b" -> 7L, "h_c" -> 9L))
   }
 
-  test("graft.state.ttl evicts idle per-user transition state") {
+  test("graft.state.ttl evicts idle per-user snapshot state") {
     val session = spark
     import session.implicits._
     def ev(id: Long, uid: Long, t: Long, tp: String): Event =
       Event(id, new java.sql.Timestamp(t), uid, tp, 1.0)
 
     // same two-batch feed, with and without a TTL between the batches:
-    // user 1's second event pairs with the first ONLY if the stored
-    // LastEvent survived the idle wall-clock gap. A processing-time-TTL
+    // user 1's second snapshot counts both events ONLY if the stored
+    // UserSnapshot survived the idle wall-clock gap. A processing-time-TTL
     // query schedules continuous no-data batches for eviction, so
     // processAllAvailable / AvailableNow never settle (the production
     // posture is a ProcessingTime trigger interval); instead batch 2
-    // carries a SENTINEL pair for user 2 — two events in one batch
-    // always emit a pair regardless of TTL — and the test polls the
-    // sink for it, which proves batch 2 is fully processed, then stops
-    // the query and inspects user 1's rows.
-    def user1Pairs(name: String, ttlMs: Option[Long]): Long = {
+    // carries a SENTINEL user 2 — a key with input always emits one
+    // snapshot row regardless of TTL — and the test polls the sink for
+    // it, which proves batch 2 is fully processed, then stops the query
+    // and inspects user 1's rows.
+    def user1Events(name: String, ttlMs: Option[Long]): Long = {
       Posture.withConf(spark, StateTtl.Key -> ttlMs.map(_.toString)) {
         val input = MemoryStream[Event](spark, 2)
-        val q = TypedStatefulProcessors.transitionStream(spark, input.toDS())
+        val q = TypedStatefulProcessors.userSnapshotStream(spark, input.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode(OutputMode.Update).start()
         try {
           input.addData(ev(1, 1L, 1704067200000L, "click"))
-          // wait for batch 1 (user 1's LastEvent stored), not by drain
+          // wait for batch 1 (user 1's snapshot stored), not by drain
           val t0 = System.nanoTime()
           while (q.recentProgress.map(_.numInputRows).sum < 1 &&
                  System.nanoTime() - t0 < 60e9.toLong) Thread.sleep(50)
@@ -686,12 +563,13 @@ class StatefulProcessorSpec extends SparkSpec {
                  System.nanoTime() - t1 < 60e9.toLong) Thread.sleep(100)
         } finally q.stop()
         assert(spark.table(name).filter(col("user_id") === 2L).count() == 1L)
-        spark.table(name).filter(col("user_id") === 1L).count()
+        spark.table(name).filter(col("user_id") === 1L)
+          .as[UserSnapshot].collect().map(_.n_events).max
       }
     }
 
-    assert(user1Pairs("ttl_none", None) == 1L) // parity default: pairs
-    assert(user1Pairs("ttl_on", Some(400L)) == 0L) // state expired: no pair
+    assert(user1Events("ttl_none", None) == 2L) // parity default: state kept
+    assert(user1Events("ttl_on", Some(400L)) == 1L) // state expired: restarts
     // validation mirrors the other knobs
     Posture.withConf(spark, StateTtl.Key -> Some("junk"))(
       intercept[IllegalArgumentException](StateTtl.of(spark)))
