@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.functions.Rounding.round
 
@@ -128,9 +129,11 @@ object StreamDrain {
     * the staged CONTENTS — a second caller reusing a variant name with
     * a different `build` would silently be served the first staging.
     * Each variant string here belongs to exactly one staging recipe
-    * (plain / dup / sentinel / delta / alerts / docs / ingestdocs /
-    * bands / ooo / ooo_session / shuffled); a new recipe takes a new
-    * name.
+    * (events: plain / dup / sentinel / delta / latedrop / shuffled /
+    * ooo / ooo_session / dirty_session / dirty_join and the restart
+    * halves `<name>_p1` / `<name>_p2` of restart_kpi / restart_session /
+    * restart_join / restart; other tables: alerts / docs / ingestdocs /
+    * bands); a new recipe takes a new name.
     */
   private def stagedPath(dir: String, variant: String, chunks: Int)
                         (build: String => Unit): String =
@@ -177,7 +180,9 @@ object StreamDrain {
     * input (the [[graft.operators.Dims]] row-count idiom, not query
     * results); caching them means a min-of-N bench pays each probe
     * once per JVM instead of once per run, while every drained result
-    * still computes from the staged parquet each run.
+    * still computes from the staged parquet each run. `compute` must not
+    * itself call `cachedProbe` (the map forbids a recursive update):
+    * probes that need [[corpusBounds]] read it first.
     */
   private val probeCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
@@ -185,11 +190,48 @@ object StreamDrain {
   private def cachedProbe[T <: AnyRef](key: String)(compute: => T): T =
     probeCache.computeIfAbsent(key, _ => compute).asInstanceOf[T]
 
+  private def events(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(spark, dir)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** The global event order every event staging splits and replays in. */
+  private val ByTime = Seq(col("ts"), col("event_id"))
+
+  /** The corpus's event-time bounds (min, max) in epoch ms: the one
+    * bounds probe every cut, plant and sentinel derives from.
+    */
+  private def corpusBounds(spark: SparkSession, dir: String): (Long, Long) =
+    cachedProbe(s"bounds|$dir") {
+      val b = events(spark, dir).agg(min(col("ts")), max(col("ts"))).head()
+      (b.getTimestamp(0).getTime, b.getTimestamp(1).getTime)
+    }
+
+  private def corpusMidMs(spark: SparkSession, dir: String): Long = {
+    val (mn, mx) = corpusBounds(spark, dir)
+    (mn + mx) / 2
+  }
+
+  private def sentinelRow(spark: SparkSession,
+                          ts: java.sql.Timestamp): DataFrame =
+    spark.range(1).select(
+      lit(-1L).as("event_id"), lit(ts).as("ts"),
+      lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
+      lit(1.0).as("value"))
+
+  /** The flush sentinel two hours past the corpus's last event: its
+    * watermark passes every real session's end, the bounded-drain
+    * stand-in for the continuing traffic an always-on pipeline has. The
+    * session drains filter it from the read-back.
+    */
+  private def flushSentinel(spark: SparkSession, dir: String): DataFrame =
+    sentinelRow(spark,
+                new java.sql.Timestamp(corpusBounds(spark, dir)._2 + 7200000L))
+
   /** Write `df` into `stageDir` as `chunks` single-file parquet chunks
     * split by contiguous ranges of `order` (ntile), named and
     * modification-stamped in range order. The file stream source sorts
     * unread files by modification time (ascending when `latestFirst` is
-    * false), so with `maxFilesPerTrigger=1` the drain replays chunk k as
+    * false), so with one file per trigger the drain replays chunk k as
     * micro-batch k: rows arrive across batches in the global `order`,
     * which (a) keeps every per-key sequential fold in the batch analog's
     * (ts, event_id) total order — in-batch the processors sort, across
@@ -203,36 +245,34 @@ object StreamDrain {
     * file then STORES its rows out of event-time order, which is how
     * the in-batch-reordering drains stress the processors' within-
     * trigger sort.
+    *
+    * The ranked frame is persisted so the ntile sort runs ONCE per
+    * staging, not once per chunk filter. HARNESS-SCALE ONLY: a global
+    * no-partition window is a single-partition sort (Spark rightly
+    * warns) — fine for staging fixture corpora for verification, never
+    * a shape to copy into an operator. (A parallel range sort numbered
+    * by `zipWithIndex` gives the same chunks but staged sf0.1's 100k
+    * events no faster on a 4-CPU host, so the window stays.)
     */
   private[graft] def stageChunked(df: DataFrame, stageDir: String, chunks: Int,
                                   order: Seq[Column],
                                   firstChunk: Int = 0,
-                                  scramble: Option[Column] = None): Unit = {
-    Files.createDirectories(java.nio.file.Paths.get(stageDir))
-    // the ranked frame is persisted so the single-partition ntile sort
-    // runs ONCE per staging, not once per chunk filter. HARNESS-SCALE
-    // ONLY: a global no-partition window is a single-partition sort
-    // (Spark rightly warns) — fine for staging fixture corpora for
-    // verification, never a shape to copy into an operator.
-    val ranked =
-      if (chunks <= 1) None
-      else Some(
-        df.withColumn("__chunk",
-                      ntile(chunks).over(Window.orderBy(order: _*)) - 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val parts = ranked match {
-      case None => Seq(df)
-      case Some(r) =>
+                                  scramble: Option[Column] = None): Unit =
+    if (chunks <= 1) writeChunkFiles(Seq(df), stageDir, firstChunk)
+    else {
+      val ranked = df
+        .withColumn("__chunk", ntile(chunks).over(Window.orderBy(order: _*)) - 1)
+        .persist(MEMORY_AND_DISK)
+      // orderBy → coalesce(1) in writeChunkFiles keeps the sort (the one
+      // task reads the range-sorted partitions in order)
+      try writeChunkFiles(
         (0 until chunks).map { k =>
-          val part = r.filter(col("__chunk") === k).drop("__chunk")
-          // orderBy → coalesce(1) in writeChunkFiles preserves the sort
-          // (the single task reads the range-sorted partitions in order)
+          val part = ranked.filter(col("__chunk") === k).drop("__chunk")
           scramble.fold(part)(part.orderBy(_))
-        }
+        },
+        stageDir, firstChunk)
+      finally ranked.unpersist()
     }
-    try writeChunkFiles(parts, stageDir, firstChunk)
-    finally ranked.foreach(_.unpersist())
-  }
 
   /** Write each part as ONE parquet chunk file named and
     * modification-stamped in sequence order (the file source replays
@@ -268,27 +308,54 @@ object StreamDrain {
     }
   }
 
-  /** Staged events stream from the shared cache. `chunks = 1` stages one
-    * file ⇒ one micro-batch (the order-dependent legs); `chunks > 1`
-    * stages time-ranged chunk files read one per trigger, so the drain
-    * executes ≥`chunks` micro-batches and the state store's cross-batch
-    * persistence/merge itself lands under the hash gate ([[drainToStore]]
-    * fails loudly if the source ever coalesces them).
+  /** The cached staging `variant` of `dir`: `frame` (built only when
+    * the cache misses) split by `order` into `chunks` range chunk files.
+    * Returns the stage dir.
     */
-  private def stagedStream(spark: SparkSession, dir: String, variant: String,
-                           augment: DataFrame => DataFrame = identity,
-                           chunks: Int = 1): DataFrame = {
-    val stage = stagedPath(dir, variant, chunks) { stageDir =>
-      stageChunked(
-        augment(
-          graft.Tables.events(spark, dir)
-            .select("event_id", "ts", "user_id", "event_type", "value")),
-        stageDir, chunks, Seq(col("ts"), col("event_id")))
-    }
-    val reader = spark.readStream.schema(EventPipeline.eventSchema)
-    (if (chunks > 1) reader.option("maxFilesPerTrigger", "1") else reader)
+  private def staged(dir: String, variant: String, order: Seq[Column],
+                     chunks: Int = MultiBatchChunks)
+                    (frame: => DataFrame): String =
+    stagedPath(dir, variant, chunks)(stageChunked(frame, _, chunks, order))
+
+  /** The cached event staging `variant` of `dir` (the events table
+    * passed through `augment`) as `chunks` time-ranged chunk files.
+    * Read one per trigger, the drain executes ≥`chunks` micro-batches,
+    * so the state store's cross-batch persistence/merge itself lands
+    * under the hash gate ([[drainToStore]] fails loudly if the source
+    * ever coalesces them). Returns the stage dir.
+    */
+  private def eventStage(spark: SparkSession, dir: String,
+                         variant: String = "plain",
+                         chunks: Int = MultiBatchChunks,
+                         augment: DataFrame => DataFrame = identity): String =
+    staged(dir, variant, ByTime, chunks)(augment(events(spark, dir)))
+
+  /** [[eventStage]] read as an event stream, one chunk file per trigger. */
+  private def stagedStream(spark: SparkSession, dir: String,
+                           variant: String = "plain",
+                           chunks: Int = MultiBatchChunks,
+                           augment: DataFrame => DataFrame = identity): DataFrame =
+    EventPipeline.readEventFileStream(
+      spark, eventStage(spark, dir, variant, chunks, augment))
+
+  /** The session legs' shared staging: the events table plus the
+    * [[flushSentinel]], chunked by time into [[MultiBatchChunks]] files.
+    * The sentinel has the max ts, so the time-ranged chunk split puts it
+    * in the LAST micro-batch — the watermark flush still happens only
+    * after every real session's data has streamed through.
+    */
+  private def sentinelStage(spark: SparkSession, dir: String): String =
+    eventStage(spark, dir, "sentinel",
+               augment = _.unionAll(flushSentinel(spark, dir)))
+
+  /** A stream over a non-event staging's chunk files, one per trigger,
+    * with the schema the staged files carry.
+    */
+  private def fileStream(spark: SparkSession, stage: String): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", "1")
       .parquet(stage)
-  }
 
   /** Drain a stream into a parquet store with the batch id attached to
     * every emission, and return the store read back. Update mode for
@@ -317,25 +384,7 @@ object StreamDrain {
       .foreachBatch(EventPipeline.idempotentBatchWriter(store))
       .start()
     q.awaitTermination()
-    // Unload this JVM's state-store providers before handing the store
-    // back — the dirty-restart drain's provider unload applied to EVERY
-    // drain: the ~39 drains run back-to-back in Bench/Verify, each
-    // leaving its checkpoint's providers loaded, so the 60 s
-    // maintenance tick sweeps an ever-growing provider set (snapshot
-    // consolidation per partition, against work dirs the next
-    // allocation may already have deleted) and bills the cost to
-    // whichever unrelated query happens to be running — measured as a
-    // uniform drag on every drain plus 3-5x spikes on the bench's
-    // alphabetical tail. Safe: the returned frame reads
-    // the parquet store (the statestore legs build batch state-source
-    // reads that create fresh read-only providers at scan time), the
-    // checkpoints are throwaway verification state, and the next
-    // streaming query restarts maintenance lazily. stop() is
-    // JVM-global, so assert drains are not running concurrently.
-    require(spark.streams.active.isEmpty,
-            "StateStore.stop() is JVM-global: refusing to unload state " +
-              "providers while another streaming query is active")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    unloadStateStores(spark)
     val drained = readStore(spark, store)
     if (expectBatches > 1) {
       val ran = executedBatches(work)
@@ -356,6 +405,32 @@ object StreamDrain {
   private def readStore(spark: SparkSession, store: String): DataFrame =
     spark.read.parquet(store)
       .withColumn("batch_id", col("batch_id").cast("long"))
+
+  /** Unload this JVM's state-store providers once a drain's query has
+    * ended, before its store is handed back. The ~40 drains run
+    * back-to-back in Bench/Verify; each would otherwise leave its
+    * checkpoint's providers loaded, so the 60 s maintenance tick sweeps
+    * an ever-growing provider set (snapshot consolidation per partition,
+    * against work dirs the next allocation may already have deleted)
+    * and bills the cost to whichever unrelated query happens to be
+    * running — measured as a uniform drag on every drain plus 3-5x
+    * spikes on the bench's alphabetical tail. A query that died mid-run
+    * (the dirty restarts) leaves its providers deactivated-but-loaded,
+    * and their final consolidation otherwise lands 1-2 maintenance
+    * intervals later as a silent multi-minute drag. Safe: the returned
+    * frames read the parquet store (the statestore legs build batch
+    * state-source reads that create fresh read-only providers at scan
+    * time), the checkpoints are throwaway verification state, and the
+    * next streaming query restarts maintenance lazily. The unload is
+    * JVM-global, so it refuses to run while any streaming query is
+    * active instead of yanking providers from under a live query.
+    */
+  private def unloadStateStores(spark: SparkSession): Unit = {
+    require(spark.streams.active.isEmpty,
+            "the state-store unload is JVM-global: refusing to unload " +
+              "state providers while another streaming query is active")
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+  }
 
   /** Number of micro-batches the drain's checkpoint actually COMPLETED,
     * read from the COMMIT log (one entry per finished batch, written
@@ -383,26 +458,43 @@ object StreamDrain {
     }
   }
 
-  /** Two-pass KILL-AND-RESUME scaffold shared by the restart drains:
-    * stage the first half, drain and STOP (a clean shutdown with source
-    * offsets and state committed), make the second half visible in the
-    * same source dir, start a NEW query on the SAME checkpoint, and fail
-    * loudly unless both passes actually executed micro-batches. Returns
-    * the drained store plus pass 1's executed-batch count — pass-2
-    * emissions are exactly the rows with `batch_id >=` that count, which
-    * the callers' spanning-state assertions key on.
+  /** Two-pass KILL-AND-RESUME scaffold shared by the clean-restart
+    * drains: stage the events before `cut` as two chunk files, drain
+    * them through `leg` in `mode` and STOP (a clean shutdown with source
+    * offsets and state committed), make the events from `cut` on (plus
+    * the optional `tail` rows) visible in the same source dir as two
+    * more chunk files, start a NEW query on the SAME checkpoint, and
+    * fail loudly unless both passes actually executed micro-batches.
+    * The stage mutates between passes, so it lives in the per-run work
+    * dir; each half's chunk files are built once per dataset in the
+    * staging cache (variants `<name>_p1` / `<name>_p2`) and copied in.
+    * Returns the drained store plus pass 1's executed-batch count —
+    * pass-2 emissions are exactly the rows with `batch_id >=` that
+    * count, which the callers' spanning-state assertions key on.
     */
-  private def restartPasses(work: String, drainPass: () => DataFrame)
-                           (stageFirst: => Unit)
-                           (stageSecond: => Unit): (DataFrame, Int) = {
-    stageFirst
-    drainPass()
+  private def restartPasses(spark: SparkSession, dir: String, name: String,
+                            cut: java.sql.Timestamp, mode: OutputMode,
+                            tail: Option[DataFrame] = None)
+                           (leg: DataFrame => DataFrame): (DataFrame, Int) = {
+    val work = tempWorkDir(s"graft_${name}_drain")
+    val stage = s"$work/staged_events"
+    val ev = events(spark, dir)
+    def pass(half: String, firstChunk: Int)(rows: => DataFrame): DataFrame = {
+      copyCachedChunks(dir, s"${name}_$half", 2, stage)(
+        stageChunked(rows, _, 2, ByTime, firstChunk))
+      drainToStore(spark, leg(EventPipeline.readEventFileStream(spark, stage)),
+                   work, mode)
+    }
+    pass("p1", 0)(ev.filter(col("ts") < lit(cut)))
     val c1 = executedBatches(work)
     require(c1 > 0,
             "pass 1 executed no micro-batch — empty first half, the " +
               "restart claim would be vacuous")
-    stageSecond
-    val drained = drainPass()
+    // the delta becomes visible only AFTER pass 1 committed and stopped
+    val drained = pass("p2", 2) {
+      val post = ev.filter(col("ts") >= lit(cut))
+      tail.fold(post)(post.unionAll)
+    }
     val c2 = executedBatches(work)
     require(c2 > c1,
             s"pass 2 executed no new micro-batch ($c1 -> $c2) — the " +
@@ -452,6 +544,38 @@ object StreamDrain {
         round(col("error_count") / col("n_events"), 6).as("error_rate"))
       .orderBy(col("event_type"), col("window_start"))
 
+  /** The session read-back shared by every session drain: the sentinel
+    * user's session dropped, projected to the batch
+    * [[graft.operators.TemporalOps.sessionize]] schema.
+    */
+  private def sessionReadback(drained: DataFrame): DataFrame =
+    drained
+      .filter(col("user_id") =!= -1L)
+      .select(col("user_id"), col("session_start"), col("session_end"),
+              col("n_events"), col("sum_value"))
+      .orderBy(col("user_id"), col("session_start"))
+
+  /** The click-attribution read-back shared by the join drains,
+    * projected to the batch [[graft.operators.TemporalOps.clickAttribution]]
+    * schema.
+    */
+  private def attributionReadback(drained: DataFrame): DataFrame =
+    drained
+      .select(col("user_id"), col("click_id"), col("purchase_id"),
+              col("click_ts"), col("purchase_ts"),
+              round(col("value"), 4).as("purchase_value"))
+      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
+
+  /** The per-user snapshot read-back shared by the incremental-view
+    * drains: one final row per user, against the from-scratch per-user
+    * aggregate oracle.
+    */
+  private def snapshotReadback(view: DataFrame): DataFrame =
+    view
+      .select(col("user_id"), col("n_events"), col("sum_micros"),
+              col("last_ts_micros"))
+      .orderBy(col("user_id"))
+
   /** Run the StreamJob sliding-KPI leg ([[EventPipeline.slidingKpi]]:
     * watermark → 1m/10s windowed agg → update-mode foreachBatch store)
     * with `Trigger.AvailableNow` over the events table, then read the
@@ -471,8 +595,7 @@ object StreamDrain {
     val work = tempWorkDir("graft_kpi_drain")
     kpiPaneReadback(drainLastPerKey(
       spark,
-      EventPipeline.slidingKpi(
-        stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)),
+      EventPipeline.slidingKpi(stagedStream(spark, dir)),
       work, Seq("event_type", "window_start"),
       expectBatches = MultiBatchChunks))
   }
@@ -497,7 +620,7 @@ object StreamDrain {
       spark,
       EventPipeline
         .anomalyStream(
-          spark, stagedStream(spark, dir, "plain", chunks = MultiBatchChunks))
+          spark, stagedStream(spark, dir))
         .filter(_.is_anomaly)
         .toDF(),
       work, expectBatches = MultiBatchChunks))
@@ -512,13 +635,11 @@ object StreamDrain {
   def streamAlertsListDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_alerts_list_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
       alertsReadback(drainToStore(
         spark,
         TypedStatefulProcessors
-          .anomalyListStream(spark, staged.as[Event])
+          .anomalyListStream(
+            spark, EventPipeline.typedEvents(stagedStream(spark, dir)))
           .filter(_.is_anomaly)
           .toDF(),
         work, expectBatches = MultiBatchChunks))
@@ -560,41 +681,25 @@ object StreamDrain {
     */
   def streamLateDropDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_latedrop_drain")
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    // plant bounds are a 1-row probe, cached per dataset (cachedProbe);
     // the staged file set is static for a dataset and visible from the
     // start, so the drain streams DIRECTLY from the shared immutable
     // staging cache instead of re-staging per run
-    val (lateBase, sentinelTs) =
-      cachedProbe[(java.lang.Long, java.sql.Timestamp)](
-        s"latedrop_bounds|$dir") {
-        val bounds =
-          ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-        (java.lang.Long.valueOf(bounds.getTimestamp(0).getTime - 3600000L),
-         new java.sql.Timestamp(bounds.getTimestamp(1).getTime + 3600000L))
-      }
+    val (mn, mx) = corpusBounds(spark, dir)
     val stage = stagedPath(dir, "latedrop", MultiBatchChunks + 1) { d =>
-      stageChunked(ev, d, MultiBatchChunks, Seq(col("ts"), col("event_id")))
+      stageChunked(events(spark, dir), d, MultiBatchChunks, ByTime)
       val plants = spark.range(5).select(
         (col("id") - 1000000L).as("event_id"),
-        timestamp_millis(lit(lateBase.longValue) + col("id") * 1000L).as("ts"),
+        timestamp_millis(lit(mn - 3600000L) + col("id") * 1000L).as("ts"),
         lit(-2L).as("user_id"),
         lit("click").as("event_type"),
         lit(999999.0).as("value"))
       stageChunked(
-        plants.unionAll(
-          spark.range(1).select(
-            lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(1.0).as("value"))),
+        plants.unionAll(sentinelRow(spark, new java.sql.Timestamp(mx + 3600000L))),
         d, 1, Seq.empty, firstChunk = MultiBatchChunks)
     }
     val drained = drainToStore(
       spark,
-      EventPipeline.slidingKpi(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
+      EventPipeline.slidingKpi(EventPipeline.readEventFileStream(spark, stage)),
       work)
     require(
       drained.filter(col("event_type") === "sentinel" &&
@@ -617,7 +722,7 @@ object StreamDrain {
       spark,
       EventPipeline
         .ewmaStream(
-          spark, stagedStream(spark, dir, "plain", chunks = MultiBatchChunks))
+          spark, stagedStream(spark, dir))
         .toDF(),
       work, Seq("event_type"), expectBatches = MultiBatchChunks)
       .select(col("event_type"), col("n_buckets"), col("ewma_value"))
@@ -657,11 +762,8 @@ object StreamDrain {
     withRocksDb(spark) {
       sessionDrainedBy(
         spark, dir, "graft_session_timer_drain",
-        staged => {
-          val s = staged.sparkSession
-          import s.implicits._
-          SessionStatefulProcessor.sessionStream(s, staged.as[Event]).toDF()
-        })
+        staged => SessionStatefulProcessor
+          .sessionStream(spark, EventPipeline.typedEvents(staged)).toDF())
     }
 
   /** Run `body` with the RocksDB state-store provider scoped on, exactly
@@ -684,39 +786,14 @@ object StreamDrain {
   private def withRocksDb[T](spark: SparkSession)(body: => T): T =
     graft.Posture.withConf(spark, graft.Posture.rocksDb, StateTtl.Key -> None)(body)
 
-  /** The session legs' shared staging: the events table plus one
-    * SENTINEL row (user −1) two hours past the data horizon, chunked by
-    * time into [[MultiBatchChunks]] files. The sentinel has the max ts,
-    * so the time-ranged chunk split puts it in the LAST micro-batch —
-    * the watermark flush still happens only after every real session's
-    * data has streamed through.
-    */
-  private def sentinelStagedStream(spark: SparkSession,
-                                   dir: String): DataFrame = {
-    val maxTs = graft.Tables.events(spark, dir)
-      .agg(max(col("ts"))).head().getTimestamp(0)
-    val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 7200000L)
-    stagedStream(
-      spark, dir, "sentinel",
-      ev => ev.unionAll(
-        ev.sparkSession.range(1).select(
-          lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(1.0).as("value"))),
-      chunks = MultiBatchChunks)
-  }
-
+  /** A session `leg` drained in append mode over the [[sentinelStage]]. */
   private def sessionDrainedBy(spark: SparkSession, dir: String,
                                prefix: String,
                                leg: DataFrame => DataFrame): DataFrame = {
     val work = tempWorkDir(prefix)
-    val staged = sentinelStagedStream(spark, dir)
-    drainToStore(spark, leg(staged), work, OutputMode.Append,
-                 expectBatches = MultiBatchChunks)
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-              col("n_events"), col("sum_value"))
-      .orderBy(col("user_id"), col("session_start"))
+    val staged = EventPipeline.readEventFileStream(spark, sentinelStage(spark, dir))
+    sessionReadback(drainToStore(spark, leg(staged), work, OutputMode.Append,
+                                 expectBatches = MultiBatchChunks))
   }
 
   /** MID-STREAM state read for the SESSION-WINDOW store — the
@@ -741,9 +818,10 @@ object StreamDrain {
     */
   def streamMidstateReader(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_midstate_reader")
+    val stage = sentinelStage(spark, dir)
     drainToStore(
       spark,
-      EventPipeline.sessionStream(sentinelStagedStream(spark, dir)),
+      EventPipeline.sessionStream(EventPipeline.readEventFileStream(spark, stage)),
       work, OutputMode.Append, expectBatches = MultiBatchChunks)
     def stateAt(batch: Option[Int]): DataFrame = {
       val rd = spark.read.format("statestore")
@@ -769,9 +847,6 @@ object StreamDrain {
               "flush evicted nothing, so the read is not mid-stream")
     // batch 1's watermark, engine-side: max ts of the staged chunk-0
     // file (exactly batch 0's input), ms-floored, minus the 10 s delay
-    val stage = liveDirs.get(s"stage|$dir|sentinel|$MultiBatchChunks")
-    require(stage != null, "sentinel staging missing from the live-dir " +
-      "registry — the watermark audit has no chunk-0 file to read")
     val max0 = spark.read.parquet(s"$stage/chunk-0000.parquet")
       .agg(max(col("ts"))).head().getTimestamp(0)
     val wmUs = (max0.getTime - 10000L) * 1000L
@@ -802,8 +877,7 @@ object StreamDrain {
     */
   def streamDedupDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_dedup_drain")
-    val staged = stagedStream(spark, dir, "dup", ev => ev.unionAll(ev),
-                              chunks = MultiBatchChunks)
+    val staged = stagedStream(spark, dir, "dup", augment = ev => ev.unionAll(ev))
     drainToStore(spark, EventPipeline.dedupedEvents(staged), work,
                  OutputMode.Append, expectBatches = MultiBatchChunks)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -823,19 +897,19 @@ object StreamDrain {
     */
   def streamAttributionDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_attrib_drain")
-    // the self-join reads the staged files through TWO source instances
-    // of the same directory, so a batch consumes ~2 files — 5 chunks
-    // keep the drain at >=3 real micro-batches of join-state carry
-    drainToStore(
+    attributionReadback(drainToStore(
       spark,
       EventPipeline.attributionStream(
-        stagedStream(spark, dir, "plain", chunks = 2 * MultiBatchChunks - 1)),
-      work, OutputMode.Append, expectBatches = MultiBatchChunks)
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-              col("click_ts"), col("purchase_ts"),
-              round(col("value"), 4).as("purchase_value"))
-      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
+        stagedStream(spark, dir, chunks = JoinChunks)),
+      work, OutputMode.Append, expectBatches = MultiBatchChunks))
   }
+
+  /** Chunk count of the join drains' staging: the self-join reads the
+    * staged files through TWO source instances of the same directory, so
+    * a batch consumes ~2 files — 5 chunks keep the drain at >=3 real
+    * micro-batches of join-state carry.
+    */
+  private val JoinChunks = 2 * MultiBatchChunks - 1
 
   /** MID-STREAM state read for the STREAM-STREAM JOIN buffers — the
     * join twin of [[streamMidstateReader]]: drain the attribution
@@ -861,19 +935,19 @@ object StreamDrain {
     * LOCKSTEP ASSUMPTION encoded by `midBatch = 2`: the self-join reads
     * the staged directory through TWO file-source instances, and each
     * instance admits exactly ONE staged file per micro-batch
-    * (`maxFilesPerTrigger = 1` in [[stagedStream]], deterministic
+    * (one file per trigger in [[stagedStream]], deterministic
     * ascending mtimes), so batch id `b` ⇔ chunks `0..b` seen on BOTH
     * sides. If either source ever drifted off that one-file-per-batch
     * pace, the oracle's chunk slice would no longer equal batch 2's
     * input and the hash gate / horizon audits fail loud.
     */
   def streamMidstateJoinReader(spark: SparkSession, dir: String): DataFrame = {
-    val joinChunks = 2 * MultiBatchChunks - 1
     val work = tempWorkDir("graft_midstate_join")
+    val stage = eventStage(spark, dir, chunks = JoinChunks)
     drainToStore(
       spark,
       EventPipeline.attributionStream(
-        stagedStream(spark, dir, "plain", chunks = joinChunks)),
+        EventPipeline.readEventFileStream(spark, stage)),
       work, OutputMode.Append, expectBatches = MultiBatchChunks)
     def side(s: String, batch: Option[Int]): DataFrame = {
       val rd = spark.read.format("statestore").option("joinSide", s)
@@ -906,9 +980,6 @@ object StreamDrain {
               "the read is not mid-stream")
     // engine-side horizon audit: the watermark from the staged chunk
     // files batch 2 ran under (per-side maxima over chunks 0..1)
-    val stage = liveDirs.get(s"stage|$dir|plain|$joinChunks")
-    require(stage != null, "plain 5-chunk staging missing from the " +
-      "live-dir registry — the horizon audit has no chunk files to read")
     val preFiles = (0 until midBatch)
       .map(k => f"$stage/chunk-$k%04d.parquet")
     val pre = spark.read.parquet(preFiles: _*)
@@ -949,7 +1020,7 @@ object StreamDrain {
       spark,
       EventPipeline
         .cusumStream(
-          spark, stagedStream(spark, dir, "plain", chunks = MultiBatchChunks),
+          spark, stagedStream(spark, dir),
           baselines)
         .toDF(),
       work, Seq("event_type"), expectBatches = MultiBatchChunks)
@@ -970,7 +1041,7 @@ object StreamDrain {
       spark,
       EventPipeline
         .transitionStream(
-          spark, stagedStream(spark, dir, "plain", chunks = MultiBatchChunks))
+          spark, stagedStream(spark, dir))
         .toDF(),
       work, expectBatches = MultiBatchChunks)
       .groupBy(col("prev_type"), col("next_type"))
@@ -987,12 +1058,10 @@ object StreamDrain {
   def streamDriftDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_drift_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
       drainLastPerKey(
         spark,
-        TypedStatefulProcessors.driftStream(spark, staged.as[Event]).toDF(),
+        TypedStatefulProcessors.driftStream(spark, staged).toDF(),
         work, Seq("event_type"), expectBatches = MultiBatchChunks)
         .select(col("event_type"), col("n_first"), col("n_second"),
                 col("tv_num"), col("tv_distance"), col("drifted"))
@@ -1008,18 +1077,11 @@ object StreamDrain {
   def streamSnapshotDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_snapshot_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
-      drainLastPerKey(
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
+      snapshotReadback(drainLastPerKey(
         spark,
-        TypedStatefulProcessors
-          .userSnapshotStream(spark, staged.as[Event])
-          .toDF(),
-        work, Seq("user_id"), expectBatches = MultiBatchChunks)
-        .select(col("user_id"), col("n_events"), col("sum_micros"),
-                col("last_ts_micros"))
-        .orderBy(col("user_id"))
+        TypedStatefulProcessors.userSnapshotStream(spark, staged).toDF(),
+        work, Seq("user_id"), expectBatches = MultiBatchChunks))
     }
 
   /** STATE-STORE INTROSPECTION (Spark 4 `statestore` reader): drain the
@@ -1034,9 +1096,7 @@ object StreamDrain {
   def streamStateReaderDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_state_reader")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
       // drain for the side effect of a committed checkpoint — the
       // emissions themselves are gated by stream_snapshot_drain, and
       // drainToStore awaits termination, so nothing reads its store;
@@ -1045,7 +1105,7 @@ object StreamDrain {
       drainToStore(
         spark,
         TypedStatefulProcessors
-          .userSnapshotStream(spark, staged.as[Event])
+          .userSnapshotStream(spark, staged)
           .toDF(),
         work, expectBatches = MultiBatchChunks)
       spark.read
@@ -1075,12 +1135,10 @@ object StreamDrain {
   def streamFunnelDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_funnel_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
       val depths = drainLastPerKey(
         spark,
-        TypedStatefulProcessors.funnelStream(spark, staged.as[Event]).toDF(),
+        TypedStatefulProcessors.funnelStream(spark, staged).toDF(),
         work, Seq("user_id"), expectBatches = MultiBatchChunks)
         .select(col("user_id"), col("depth"))
       val ev = graft.Tables.events(spark, dir)
@@ -1119,9 +1177,32 @@ object StreamDrain {
     withRocksDb(spark) {
       val work = tempWorkDir("graft_warmstart_drain")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
-      val s = spark
-      import s.implicits._
-      val seed = graft.Tables.events(spark, dir)
+      import spark.implicits._
+      val ev = graft.Tables.events(spark, dir)
+      // the fixed cut must split the corpus with a user on both sides,
+      // or the drain degenerates to a plain snapshot drain (cached per
+      // dataset — cachedProbe)
+      val (seedUsers, deltaUsers, bothUsers) =
+        cachedProbe[(Long, Long, Long)](s"warmstart_users|$dir") {
+          val r = ev.groupBy(col("user_id"))
+            .agg(min(col("ts")).as("first"), max(col("ts")).as("last"))
+            .agg(count(when(col("first") < cut, 1)),
+                 count(when(col("last") >= cut, 1)),
+                 count(when(col("first") < cut && col("last") >= cut, 1)))
+            .head()
+          (r.getLong(0), r.getLong(1), r.getLong(2))
+        }
+      require(seedUsers > 0,
+              "warm-start seed is empty: no event precedes the 2024-01-16 " +
+                "cut, so no batch state migrates and the drain is a plain " +
+                "snapshot drain")
+      require(deltaUsers > 0,
+              "warm-start delta is empty: no event follows the cut, so the " +
+                "stream folds nothing onto the migrated state")
+      require(bothUsers > 0,
+              "no delta user is also a seed user: the stream never extends " +
+                "a migrated snapshot, so the migration claim would be vacuous")
+      val seed = ev
         .filter(col("ts") < cut)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -1129,21 +1210,18 @@ object StreamDrain {
                .as("sum_micros"),
              max(unix_micros(col("ts"))).as("last_ts_micros"))
       val staged = stagedStream(spark, dir, "delta",
-                                augment = _.filter(col("ts") >= cut),
-                                chunks = MultiBatchChunks)
-      val drainedLast = drainLastPerKey(
+                                augment = _.filter(col("ts") >= cut))
+      val view = snapshotReadback(drainLastPerKey(
         spark,
         TypedStatefulProcessors
-          .userSnapshotWarmStream(spark, staged.as[Event],
+          .userSnapshotWarmStream(spark, EventPipeline.typedEvents(staged),
                                   seed.as[UserSnapshot])
           .toDF(),
-        work, Seq("user_id"), expectBatches = MultiBatchChunks)
-        .select(col("user_id"), col("n_events"), col("sum_micros"),
-                col("last_ts_micros"))
+        work, Seq("user_id"), expectBatches = MultiBatchChunks))
       // seed rows the delta never touched stay as-written in the view
-      val untouched = seed.join(drainedLast.select(col("user_id")),
+      val untouched = seed.join(view.select(col("user_id")),
                                 Seq("user_id"), "left_anti")
-      drainedLast.unionByName(untouched).orderBy(col("user_id"))
+      view.unionByName(untouched).orderBy(col("user_id"))
     }
 
   /** The heavy-hitter leg ([[TopTokensStatefulProcessor]]: per-language
@@ -1163,21 +1241,14 @@ object StreamDrain {
       // doc_id rides along only to give the chunk split a deterministic
       // total order; the token-count fold itself is order-free (exact
       // counts at k = 64 > vocab), so any ordering gates identically
-      val stage = stagedPath(dir, "docs", MultiBatchChunks) { stageDir =>
-        stageChunked(
-          graft.Tables.documents(spark, dir)
-            .select(col("doc_id"), col("lang"),
-                    split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
-                          " ").as("tokens")),
-          stageDir, MultiBatchChunks, Seq(col("doc_id")))
+      val stage = staged(dir, "docs", Seq(col("doc_id"))) {
+        graft.Tables.documents(spark, dir)
+          .select(col("doc_id"), col("lang"),
+                  split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
+                        " ").as("tokens"))
       }
-      val s = spark
-      import s.implicits._
-      val docsIn = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .as[DocTokens]
+      import spark.implicits._
+      val docsIn = fileStream(spark, stage).as[DocTokens]
       val drained = drainToStore(
         spark,
         TypedStatefulProcessors.topTokensStream(spark, docsIn).toDF(),
@@ -1211,18 +1282,10 @@ object StreamDrain {
       // batch split (LshBucketFold), and the read-back's MaxBucket cap
       // recomputes FINAL bucket sizes — so the chunk order only needs to
       // be deterministic, not meaningful
-      val stage = stagedPath(dir, "bands", MultiBatchChunks) { stageDir =>
-        stageChunked(graft.operators.DedupOps.defaultLshBands(spark, dir),
-                     stageDir, MultiBatchChunks,
-                     Seq(col("doc_id"), col("band")))
-      }
-      val s = spark
-      import s.implicits._
-      val bandsIn = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .as[BandKeyRow]
+      val stage = staged(dir, "bands", Seq(col("doc_id"), col("band")))(
+        graft.operators.DedupOps.defaultLshBands(spark, dir))
+      import spark.implicits._
+      val bandsIn = fileStream(spark, stage).as[BandKeyRow]
       val drained = drainToStore(
         spark,
         TypedStatefulProcessors.lshCandidateStream(spark, bandsIn).toDF(),
@@ -1255,22 +1318,15 @@ object StreamDrain {
   def streamDocDedupDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_docdedup_drain")
-      val stage = stagedPath(dir, "ingestdocs", MultiBatchChunks) { stageDir =>
-        stageChunked(
-          graft.Tables.documents(spark, dir)
-            .select(col("doc_id"),
-                    md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
-                      .as("content_hash"),
-                    col("source")),
-          stageDir, MultiBatchChunks, Seq(col("doc_id")))
+      val stage = staged(dir, "ingestdocs", Seq(col("doc_id"))) {
+        graft.Tables.documents(spark, dir)
+          .select(col("doc_id"),
+                  md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
+                    .as("content_hash"),
+                  col("source"))
       }
-      val s = spark
-      import s.implicits._
-      val docsIn = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .as[IngestDoc]
+      import spark.implicits._
+      val docsIn = fileStream(spark, stage).as[IngestDoc]
       drainToStore(
         spark,
         TypedStatefulProcessors.docDedupStream(spark, docsIn).toDF(),
@@ -1291,12 +1347,10 @@ object StreamDrain {
   def streamHllDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_hll_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
       val drained = drainLastPerKey(
         spark,
-        TypedStatefulProcessors.hllDayStream(spark, staged.as[Event]).toDF(),
+        TypedStatefulProcessors.hllDayStream(spark, staged).toDF(),
         work, Seq("epoch_day"), expectBatches = MultiBatchChunks)
         .select((col("epoch_day") * 86400).cast("timestamp").as("day"),
                 col("n_seen"), col("est_users"))
@@ -1321,16 +1375,11 @@ object StreamDrain {
     * ≥3 micro-batches: the same offline-heavy-stage / stream-keyed-stage
     * split [[streamLshDedupDrain]] uses.
     */
-  private def stagedAlertsStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stagedPath(dir, "alerts", MultiBatchChunks) { stageDir =>
-      stageChunked(graft.operators.AnomalyOps.scoredAlerts(spark, dir),
-                   stageDir, MultiBatchChunks,
-                   Seq(col("ts"), col("event_id")))
-    }
-    spark.readStream
-      .schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
+  private def stagedAlerts(spark: SparkSession,
+                           dir: String): Dataset[AnomalyAlert] = {
+    import spark.implicits._
+    fileStream(spark, staged(dir, "alerts", ByTime)(
+      graft.operators.AnomalyOps.scoredAlerts(spark, dir))).as[AnomalyAlert]
   }
 
   /** The cooldown gate (T10, `alert-service/main.py:189-202`) through an
@@ -1346,13 +1395,9 @@ object StreamDrain {
     */
   def streamCooldownDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_cooldown_drain")
-    val s = spark
-    import s.implicits._
     firedReadback(drainToStore(
       spark,
-      EventPipeline
-        .cooldownStream(spark, stagedAlertsStream(spark, dir).as[AnomalyAlert])
-        .toDF(),
+      EventPipeline.cooldownStream(spark, stagedAlerts(spark, dir)).toDF(),
       work, expectBatches = MultiBatchChunks))
   }
 
@@ -1369,13 +1414,10 @@ object StreamDrain {
   def streamCooldownTimerDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_cooldown_timer_drain")
-      val s = spark
-      import s.implicits._
       firedReadback(drainToStore(
         spark,
         TypedStatefulProcessors
-          .cooldownStreamWithExpiry(
-            spark, stagedAlertsStream(spark, dir).as[AnomalyAlert])
+          .cooldownStreamWithExpiry(spark, stagedAlerts(spark, dir))
           .toDF(),
         work, expectBatches = MultiBatchChunks))
     }
@@ -1391,18 +1433,11 @@ object StreamDrain {
     */
   def streamRoutedDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_routed_drain")
-    val s = spark
-    import s.implicits._
-    drainToStore(
+    routedReadback(drainToStore(
       spark,
       EventPipeline.routedAlerts(
-        spark,
-        EventPipeline.cooldownStream(
-          spark, stagedAlertsStream(spark, dir).as[AnomalyAlert])),
-      work, expectBatches = MultiBatchChunks)
-      .select(col("event_id"), col("event_type"), col("ts"), col("severity"),
-              col("rule_id"), col("channel"))
-      .orderBy(col("event_id"), col("rule_id"))
+        spark, EventPipeline.cooldownStream(spark, stagedAlerts(spark, dir))),
+      work, expectBatches = MultiBatchChunks))
   }
 
   /** The SAME full alert topology FUSED into one keyed stage
@@ -1417,17 +1452,19 @@ object StreamDrain {
     */
   def streamFusedRoutedDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_fused_routed_drain")
-    drainToStore(
+    routedReadback(drainToStore(
       spark,
       EventPipeline.routedAlerts(
-        spark,
-        EventPipeline.fusedAlertStream(
-          spark, stagedStream(spark, dir, "plain", chunks = MultiBatchChunks))),
-      work, expectBatches = MultiBatchChunks)
+        spark, EventPipeline.fusedAlertStream(spark, stagedStream(spark, dir))),
+      work, expectBatches = MultiBatchChunks))
+  }
+
+  /** Shared read-back projection of a drained routed-alert store. */
+  private def routedReadback(drained: DataFrame): DataFrame =
+    drained
       .select(col("event_id"), col("event_type"), col("ts"), col("severity"),
               col("rule_id"), col("channel"))
       .orderBy(col("event_id"), col("rule_id"))
-  }
 
   /** Shared read-back projection of a drained fired-alert store. */
   private def firedReadback(drained: DataFrame): DataFrame =
@@ -1435,22 +1472,6 @@ object StreamDrain {
       .select(col("event_id"), col("event_type"), col("ts"), col("severity"))
       .orderBy(col("event_type"), col("severity"), col("ts"), col("event_id"))
 
-  /** CHECKPOINT KILL-AND-RESUME under the hash gate (T11,
-    * `EventAggregationJob.java:49-53` checkpointing / the reference's
-    * crash-recovery claim): pass 1 drains only the first-half chunks and
-    * STOPS — a clean shutdown with the state store and source offsets
-    * committed to the checkpoint; the second-half chunks then appear in
-    * the source directory, and pass 2 starts a NEW query on the SAME
-    * checkpoint, which must resume exactly where pass 1 left off — skip
-    * the already-committed files, restore every user's state, and extend
-    * it with the delta. The final view (last emission per user across
-    * BOTH passes) is gated against the from-scratch full-corpus
-    * aggregate: a lost or double-counted batch on restart flips
-    * `n_events`/`sum_micros` and fails the hash. Fail-loud guards assert
-    * the restart actually proved something: at least one user spans the
-    * cut (so pass 2 must merge restored state with new data, not start
-    * cold), and pass 2 ran new batch ids beyond pass 1's.
-    */
   /** KILL-AND-RESUME for the OTHER state family: the windowed
     * aggregation. [[streamRestartDrain]] proves keyed
     * transformWithState state restores across a restart; this drain
@@ -1469,10 +1490,6 @@ object StreamDrain {
     * max ts, hence above its watermark, and cannot have been evicted.)
     */
   def streamRestartKpiDrain(spark: SparkSession, dir: String): DataFrame = {
-    val work = tempWorkDir("graft_restart_kpi_drain")
-    val stage = s"$work/staged_events"
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
     // prefer a cut that SPLITS A SINGLE PANE across the restart: the
     // first pair of same-type events ≤ 50 s apart (any 60 s window
     // covering both exists ⇒ a pane holds partial sums at the stop).
@@ -1481,12 +1498,12 @@ object StreamDrain {
     // fixture-specific date) and still verifies watermark restore +
     // exactly-once resume, with the spanning assertion applied only
     // when the corpus admits a spanning pane.
+    val midMs = corpusMidMs(spark, dir)
     val (cutTs, paneSpans) =
-      cachedProbe[(java.sql.Timestamp, java.lang.Boolean)](
-        s"restart_kpi_cut|$dir") {
+      cachedProbe[(java.sql.Timestamp, Boolean)](s"restart_kpi_cut|$dir") {
         val byType = Window.partitionBy(col("event_type"))
           .orderBy(col("ts"), col("event_id"))
-        val closePair = ev
+        val closePair = events(spark, dir)
           .withColumn("prev", lag(col("ts"), 1).over(byType))
           .filter(col("prev").isNotNull &&
             (unix_millis(col("ts")) - unix_millis(col("prev")))
@@ -1496,32 +1513,13 @@ object StreamDrain {
           .select(unix_millis(col("prev")).as("a"),
                   unix_millis(col("ts")).as("b"))
           .collect()
-        lazy val bounds =
-          ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-        (closePair.headOption
-           .map(r => new java.sql.Timestamp((r.getLong(0) + r.getLong(1)) / 2))
-           .getOrElse(new java.sql.Timestamp(
-             (bounds.getTimestamp(0).getTime +
-               bounds.getTimestamp(1).getTime) / 2)),
-         java.lang.Boolean.valueOf(closePair.nonEmpty))
+        (new java.sql.Timestamp(closePair.headOption
+           .fold(midMs)(r => (r.getLong(0) + r.getLong(1)) / 2)),
+         closePair.nonEmpty)
       }
-    def drainPass(): DataFrame = drainToStore(
-      spark,
-      EventPipeline.slidingKpi(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
-      work)
-    val (drained, c1) = restartPasses(work, drainPass _) {
-      copyCachedChunks(dir, "restart_kpi_p1", 2, stage) { d =>
-        stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2,
-                     Seq(col("ts"), col("event_id")))
-      }
-    } {
-      copyCachedChunks(dir, "restart_kpi_p2", 2, stage) { d =>
-        stageChunked(ev.filter(col("ts") >= lit(cutTs)), d, 2,
-                     Seq(col("ts"), col("event_id")), firstChunk = 2)
-      }
-    }
+    val (drained, c1) =
+      restartPasses(spark, dir, "restart_kpi", cutTs, OutputMode.Update)(
+        EventPipeline.slidingKpi)
     require(drained.filter(col("batch_id") < c1).limit(1).count() > 0,
             "pass 1 emitted no pane — the cut precedes all data, so the " +
               "restart restored nothing")
@@ -1537,10 +1535,56 @@ object StreamDrain {
     kpiPaneReadback(lastPerKey(drained, Seq("event_type", "window_start")))
   }
 
+  /** Gap of the session window [[EventPipeline.sessionStream]] closes on. */
+  private val SessionGapMs = 1800000L
+
+  /** The session restarts' cut (clean and dirty): the midpoint of the
+    * first in-session inter-event pause after the corpus midpoint, so
+    * some session provably straddles it. Pause floor of 2 ms keeps the
+    * integer midpoint STRICTLY between the two events — a 0/1 ms pause
+    * would floor the cut onto the earlier event and push both past it,
+    * voiding the span. Upper bound gap − 1: session_window merges only
+    * on a gap STRICTLY below the 30-minute timeout ([start, start +
+    * gap)), so a pause of exactly the gap would straddle a session
+    * boundary and make the spanning-session require fail spuriously.
+    * A 1-row driver lookup, cached per dataset (cachedProbe).
+    */
+  private def sessionPauseCut(spark: SparkSession,
+                              dir: String): java.sql.Timestamp = {
+    val midMs = corpusMidMs(spark, dir)
+    cachedProbe(s"session_pause_cut|$dir") {
+      val byUser = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val pause = events(spark, dir)
+        .withColumn("prev", lag(col("ts"), 1).over(byUser))
+        .filter(col("prev").isNotNull &&
+          (unix_millis(col("ts")) - unix_millis(col("prev")))
+            .between(lit(2L), lit(SessionGapMs - 1)) &&
+          unix_millis(col("prev")) >= midMs)
+        .orderBy(col("prev"), col("ts"), col("event_id"))
+        .limit(1)
+        .select(unix_millis(col("prev")).as("a"),
+                unix_millis(col("ts")).as("b"))
+        .collect()
+      require(pause.nonEmpty,
+              "no in-session pause after the corpus midpoint — the " +
+                "session restart would be vacuously correct with no " +
+                "spanning session")
+      new java.sql.Timestamp((pause(0).getLong(0) + pause(0).getLong(1)) / 2)
+    }
+  }
+
+  /** A session that began before `cut` and ended past it: its end is its
+    * last event + the gap, so ending at or after cut + gap means a
+    * post-cut last event.
+    */
+  private def spansSessionCut(cut: java.sql.Timestamp): Column =
+    col("session_start") < lit(cut) &&
+      col("session_end") >= lit(new java.sql.Timestamp(cut.getTime + SessionGapMs))
+
   /** KILL-AND-RESUME for the SESSION-WINDOW state family: an OPEN
     * session must survive the restart. The cut is DERIVED FROM THE DATA
-    * — the midpoint of the first in-session (≤ gap) inter-event pause
-    * after the corpus mid-ts — so some session provably straddles it:
+    * ([[sessionPauseCut]]), so some session provably straddles it:
     * pass 1 stops with that session held in the session store
     * (unemittable: its end exceeds pass 1's final watermark by
     * construction, since every pass-1 event precedes the cut and the
@@ -1554,178 +1598,109 @@ object StreamDrain {
     * double-emitted at the restart fails the gate.
     */
   def streamRestartSessionDrain(spark: SparkSession, dir: String): DataFrame = {
-    val work = tempWorkDir("graft_restart_session_drain")
-    val stage = s"$work/staged_events"
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    // first in-session pause after the midpoint: a 1-row driver lookup
-    // (metadata-scale, like the CUSUM baselines; cached per dataset —
-    // see cachedProbe)
-    // pause floor of 2 ms keeps the integer midpoint STRICTLY between
-    // the two events — a 0/1 ms pause would floor the cut onto the
-    // earlier event and push both into pass 2, voiding the span.
-    // Upper bound gapMs − 1: session_window merges only on a gap
-    // STRICTLY below the 30-minute timeout ([start, start + gap)), so a
-    // pause of exactly gapMs would straddle a session boundary and make
-    // the spanning-session require fail spuriously
-    val gapMs = 1800000L
-    val (cutTs, sentinelTs) =
-      cachedProbe[(java.sql.Timestamp, java.sql.Timestamp)](
-        s"restart_session_cut|$dir") {
-        val bounds =
-          ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-        val midMs =
-          (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2
-        val byUser = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val pause = ev
-          .withColumn("prev", lag(col("ts"), 1).over(byUser))
-          .filter(col("prev").isNotNull &&
-            (unix_millis(col("ts")) - unix_millis(col("prev")))
-              .between(lit(2L), lit(gapMs - 1)) &&
-            unix_millis(col("prev")) >= midMs)
-          .orderBy(col("prev"), col("ts"), col("event_id"))
-          .limit(1)
-          .select(unix_millis(col("prev")).as("a"),
-                  unix_millis(col("ts")).as("b"))
-          .collect()
-        require(pause.nonEmpty,
-                "no in-session pause after the corpus midpoint — the " +
-                  "session restart would be vacuously correct with no " +
-                  "spanning session")
-        (new java.sql.Timestamp(
-           (pause(0).getLong(0) + pause(0).getLong(1)) / 2),
-         new java.sql.Timestamp(bounds.getTimestamp(1).getTime + 7200000L))
-      }
-    def drainPass(): DataFrame = drainToStore(
-      spark,
-      EventPipeline.sessionStream(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
-      work, OutputMode.Append)
-    val (drained, c1) = restartPasses(work, drainPass _) {
-      copyCachedChunks(dir, "restart_session_p1", 2, stage) { d =>
-        stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2,
-                     Seq(col("ts"), col("event_id")))
-      }
-    } {
-      copyCachedChunks(dir, "restart_session_p2", 2, stage) { d =>
-        stageChunked(
-          ev.filter(col("ts") >= lit(cutTs)).unionAll(
-            spark.range(1).select(
-              lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-              lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-              lit(1.0).as("value"))),
-          d, 2, Seq(col("ts"), col("event_id")), firstChunk = 2)
-      }
-    }
-    // the restored-merge evidence itself: some session emitted AFTER the
-    // resume began before the cut and ended past it (its end = last
-    // event + gap, so ending >= cut + gap means a post-cut last event)
-    val spanned = drained.filter(
-      col("batch_id") >= c1 && col("session_start") < lit(cutTs) &&
-        col("session_end") >=
-          lit(new java.sql.Timestamp(cutTs.getTime + gapMs)))
-      .limit(1).count()
-    require(spanned > 0,
+    val cutTs = sessionPauseCut(spark, dir)
+    val (drained, c1) =
+      restartPasses(spark, dir, "restart_session", cutTs, OutputMode.Append,
+                    tail = Some(flushSentinel(spark, dir)))(
+        EventPipeline.sessionStream)
+    // the restored-merge evidence itself: some session straddling the
+    // cut emitted AFTER the resume
+    require(drained.filter(col("batch_id") >= c1 && spansSessionCut(cutTs))
+              .limit(1).count() > 0,
             "no session straddling the cut emitted after the resume — the " +
               "restored open session was never merged with post-cut events")
-    drained
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-              col("n_events"), col("sum_value"))
-      .orderBy(col("user_id"), col("session_start"))
+    sessionReadback(drained)
   }
 
-  /** KILL-AND-RESUME for the STREAM-STREAM JOIN state family: an
-    * unmatched click held in the join state must survive the restart
-    * and match a purchase that arrives only after it. The cut is again
-    * data-derived — the midpoint of the first same-user click→purchase
-    * pair whose purchase lands in (click + 10 s, click + 10 min] — so
-    * the click is in pass 1, its purchase in pass 2, and the emitted
-    * match can only come from the RESTORED symmetric-hash join state
-    * (watermark safety: pass 1's final watermark is below the cut,
-    * hence below click + 10 min, so the spanning click cannot have been
-    * evicted; every pass-2 row is ≥ the cut, hence not late). Union of
-    * both passes' inner-join emissions vs the batch attribution oracle.
+  /** The join restarts' cut (clean and dirty): the midpoint of the first
+    * same-user click→purchase pair whose purchase lands in (click +
+    * 10 s, click + 10 min], so the click falls before the cut and its
+    * purchase after it. `afterMs` bounds the click from below (the dirty
+    * join picks its pair after the corpus midpoint). Cached per
+    * (dataset, bound).
     */
-  def streamRestartJoinDrain(spark: SparkSession, dir: String): DataFrame = {
-    val work = tempWorkDir("graft_restart_join_drain")
-    val stage = s"$work/staged_events"
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val cutTs = cachedProbe[java.sql.Timestamp](s"restart_join_cut|$dir") {
+  private def clickPurchaseCut(spark: SparkSession, dir: String,
+                               afterMs: Option[Long]): java.sql.Timestamp =
+    cachedProbe(s"click_purchase_cut|$dir|${afterMs.getOrElse("")}") {
+      val ev = events(spark, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("cu"), col("ts").as("cts"),
                 col("event_id").as("cid"))
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("pu"), col("ts").as("pts"),
                 col("event_id").as("pid"))
-      val pair = clicks
+      val pairs = clicks
         .join(purchases,
               col("cu") === col("pu") &&
                 col("pts") > col("cts") + expr("INTERVAL 10 SECONDS") &&
                 col("pts") <= col("cts") + expr("INTERVAL 10 MINUTES"))
+      val pair = afterMs.fold(pairs)(ms => pairs.filter(unix_millis(col("cts")) >= ms))
         .orderBy(col("cts"), col("pts"), col("cid"), col("pid"))
         .limit(1)
         .select(unix_millis(col("cts")).as("a"),
                 unix_millis(col("pts")).as("b"))
         .collect()
       require(pair.nonEmpty,
-              "no click->purchase pair with room for a cut between them — " +
-                "the join-state restart would be vacuously correct")
+              "no click->purchase pair" +
+                afterMs.fold("")(_ => " after the corpus midpoint") +
+                " with room for a cut between them — the join-state " +
+                "restart would be vacuously correct")
       new java.sql.Timestamp((pair(0).getLong(0) + pair(0).getLong(1)) / 2)
     }
-    def drainPass(): DataFrame = drainToStore(
-      spark,
-      EventPipeline.attributionStream(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
-      work, OutputMode.Append)
-    val (drained, c1) = restartPasses(work, drainPass _) {
-      copyCachedChunks(dir, "restart_join_p1", 2, stage) { d =>
-        stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2,
-                     Seq(col("ts"), col("event_id")))
-      }
-    } {
-      copyCachedChunks(dir, "restart_join_p2", 2, stage) { d =>
-        stageChunked(ev.filter(col("ts") >= lit(cutTs)), d, 2,
-                     Seq(col("ts"), col("event_id")), firstChunk = 2)
-      }
-    }
-    // the restored-join-state evidence itself: a match emitted after the
-    // resume whose click precedes the cut and purchase follows it
-    val spanned = drained.filter(
-      col("batch_id") >= c1 && col("click_ts") < lit(cutTs) &&
-        col("purchase_ts") >= lit(cutTs))
-      .limit(1).count()
-    require(spanned > 0,
+
+  private def spansJoinCut(cut: java.sql.Timestamp): Column =
+    col("click_ts") < lit(cut) && col("purchase_ts") >= lit(cut)
+
+  /** KILL-AND-RESUME for the STREAM-STREAM JOIN state family: an
+    * unmatched click held in the join state must survive the restart
+    * and match a purchase that arrives only after it. The cut is again
+    * data-derived ([[clickPurchaseCut]]) — so the click is in pass 1,
+    * its purchase in pass 2, and the emitted match can only come from
+    * the RESTORED symmetric-hash join state (watermark safety: pass 1's
+    * final watermark is below the cut, hence below click + 10 min, so
+    * the spanning click cannot have been evicted; every pass-2 row is ≥
+    * the cut, hence not late). Union of both passes' inner-join
+    * emissions vs the batch attribution oracle.
+    */
+  def streamRestartJoinDrain(spark: SparkSession, dir: String): DataFrame = {
+    val cutTs = clickPurchaseCut(spark, dir, afterMs = None)
+    val (drained, c1) =
+      restartPasses(spark, dir, "restart_join", cutTs, OutputMode.Append)(
+        EventPipeline.attributionStream)
+    // the restored-join-state evidence itself: a cut-spanning match
+    // emitted after the resume
+    require(drained.filter(col("batch_id") >= c1 && spansJoinCut(cutTs))
+              .limit(1).count() > 0,
             "no cut-spanning match emitted after the resume — the " +
               "restored click state never joined a post-restart purchase")
-    drained
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-              col("click_ts"), col("purchase_ts"),
-              round(col("value"), 4).as("purchase_value"))
-      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
+    attributionReadback(drained)
   }
 
+  /** CHECKPOINT KILL-AND-RESUME under the hash gate (T11,
+    * `EventAggregationJob.java:49-53` checkpointing / the reference's
+    * crash-recovery claim): pass 1 drains only the first-half chunks and
+    * STOPS — a clean shutdown with the state store and source offsets
+    * committed to the checkpoint; the second-half chunks then appear in
+    * the source directory, and pass 2 starts a NEW query on the SAME
+    * checkpoint, which must resume exactly where pass 1 left off — skip
+    * the already-committed files, restore every user's state, and extend
+    * it with the delta. The final view (last emission per user across
+    * BOTH passes) is gated against the from-scratch full-corpus
+    * aggregate: a lost or double-counted batch on restart flips
+    * `n_events`/`sum_micros` and fails the hash. Fail-loud guards assert
+    * the restart actually proved something: at least one user spans the
+    * cut (so pass 2 must merge restored state with new data, not start
+    * cold), and pass 2 ran new batch ids beyond pass 1's.
+    */
   def streamRestartDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
-      val work = tempWorkDir("graft_restart_drain")
-      // the stage mutates between passes, so it lives in the per-run work
-      // dir, NOT the shared immutable staging cache
-      val stage = s"$work/staged_events"
-      val ev = graft.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
       // corpus min/max midpoint — data-derived, so a fixture with a
       // different date range still splits into two non-trivial passes
-      // (cut + fixture-validity probe cached per dataset — cachedProbe)
-      val cut = lit(cachedProbe[java.sql.Timestamp](s"restart_cut|$dir") {
-        val bounds =
-          ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-        val cutTs = new java.sql.Timestamp(
-          (bounds.getTimestamp(0).getTime +
-            bounds.getTimestamp(1).getTime) / 2)
+      // (fixture-validity probe cached per dataset — cachedProbe)
+      val midMs = corpusMidMs(spark, dir)
+      val cut = cachedProbe[java.sql.Timestamp](s"restart_cut|$dir") {
+        val cutTs = new java.sql.Timestamp(midMs)
+        val ev = events(spark, dir)
         val spanning = ev.filter(col("ts") < lit(cutTs)).select("user_id")
           .intersect(ev.filter(col("ts") >= lit(cutTs)).select("user_id"))
           .limit(1).count()
@@ -1733,34 +1708,12 @@ object StreamDrain {
                 "restart drain fixture has no user spanning the cut — the " +
                   "resume would be vacuously correct without restoring state")
         cutTs
-      })
-      val s = spark
-      import s.implicits._
-      def drainPass(): DataFrame = drainToStore(
-        spark,
-        TypedStatefulProcessors
-          .userSnapshotStream(
-            spark,
-            spark.readStream.schema(EventPipeline.eventSchema)
-              .option("maxFilesPerTrigger", "1").parquet(stage).as[Event])
-          .toDF(),
-        work)
-      // the delta becomes visible only AFTER pass 1 committed and stopped
-      val (drained, _) = restartPasses(work, drainPass _) {
-        copyCachedChunks(dir, "restart_p1", 2, stage) { d =>
-          stageChunked(ev.filter(col("ts") < cut), d, 2,
-                       Seq(col("ts"), col("event_id")))
-        }
-      } {
-        copyCachedChunks(dir, "restart_p2", 2, stage) { d =>
-          stageChunked(ev.filter(col("ts") >= cut), d, 2,
-                       Seq(col("ts"), col("event_id")), firstChunk = 2)
-        }
       }
-      lastPerKey(drained, Seq("user_id"))
-        .select(col("user_id"), col("n_events"), col("sum_micros"),
-                col("last_ts_micros"))
-        .orderBy(col("user_id"))
+      val (drained, _) =
+        restartPasses(spark, dir, "restart", cut, OutputMode.Update)(in =>
+          TypedStatefulProcessors
+            .userSnapshotStream(spark, EventPipeline.typedEvents(in)).toDF())
+      snapshotReadback(lastPerKey(drained, Seq("user_id")))
     }
 
   /** DIRTY restart — a crash in the sink-write → checkpoint-commit
@@ -1789,7 +1742,7 @@ object StreamDrain {
       dirtyRestartedStore(
         spark, tempWorkDir("graft_dirty_restart_drain"),
         EventPipeline.slidingKpi(
-          stagedStream(spark, dir, "plain", chunks = MultiBatchChunks))),
+          stagedStream(spark, dir))),
       Seq("event_type", "window_start")))
 
   /** The SAME dirty-restart window for the transformWithState family:
@@ -1804,27 +1757,19 @@ object StreamDrain {
   def streamDirtySnapshotDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_dirty_snapshot_drain")
-      val staged = stagedStream(spark, dir, "plain", chunks = MultiBatchChunks)
-      val s = spark
-      import s.implicits._
-      lastPerKey(
+      val staged = EventPipeline.typedEvents(stagedStream(spark, dir))
+      snapshotReadback(lastPerKey(
         dirtyRestartedStore(
           spark, work,
-          TypedStatefulProcessors
-            .userSnapshotStream(spark, staged.as[Event])
-            .toDF()),
-        Seq("user_id"))
-        .select(col("user_id"), col("n_events"), col("sum_micros"),
-                col("last_ts_micros"))
-        .orderBy(col("user_id"))
+          TypedStatefulProcessors.userSnapshotStream(spark, staged).toDF()),
+        Seq("user_id")))
     }
 
   /** The SAME dirty-restart window for the SESSION-WINDOW state family:
     * the crash batch must re-MERGE restored open-session state. The cut
-    * is data-derived exactly like [[streamRestartSessionDrain]] (midpoint
-    * of the first in-session pause after the corpus mid-ts), and the
-    * staging pins the crash to the session-merge replay: chunk 0 — the
-    * whole pre-cut half — is micro-batch 0, so state version 1 provably
+    * is the clean restart's ([[sessionPauseCut]]), and the staging pins
+    * the crash to the session-merge replay: chunk 0 — the whole pre-cut
+    * half — is micro-batch 0, so state version 1 provably
     * holds the straddling OPEN session (every pre-cut event precedes the
     * cut, so batch 0's watermark sits below the cut, below that
     * session's end); the crashed-and-re-executed batch 1 is the first
@@ -1837,78 +1782,30 @@ object StreamDrain {
     */
   def streamDirtySessionDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_dirty_session_drain")
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    // same pause-pick bounds as the clean restart drain: floor 2 ms keeps
-    // the integer midpoint strictly between the two events; upper bound
-    // gapMs − 1 keeps the pause inside ONE session (session_window is
-    // end-exclusive). Cut + sentinel cached per dataset (cachedProbe).
-    val gapMs = 1800000L
-    val (cutTs, sentinelTs) =
-      cachedProbe[(java.sql.Timestamp, java.sql.Timestamp)](
-        s"dirty_session_cut|$dir") {
-        val bounds =
-          ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-        val midMs =
-          (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2
-        val byUser = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val pause = ev
-          .withColumn("prev", lag(col("ts"), 1).over(byUser))
-          .filter(col("prev").isNotNull &&
-            (unix_millis(col("ts")) - unix_millis(col("prev")))
-              .between(lit(2L), lit(gapMs - 1)) &&
-            unix_millis(col("prev")) >= midMs)
-          .orderBy(col("prev"), col("ts"), col("event_id"))
-          .limit(1)
-          .select(unix_millis(col("prev")).as("a"),
-                  unix_millis(col("ts")).as("b"))
-          .collect()
-        require(pause.nonEmpty,
-                "no in-session pause after the corpus midpoint — the dirty " +
-                  "session restart would be vacuous with no spanning session")
-        (new java.sql.Timestamp(
-           (pause(0).getLong(0) + pause(0).getLong(1)) / 2),
-         new java.sql.Timestamp(bounds.getTimestamp(1).getTime + 7200000L))
-      }
+    val cutTs = sessionPauseCut(spark, dir)
     // the whole file set is visible from the start (the crash is
     // injected in foreachBatch, not via file visibility), so the drain
     // streams DIRECTLY from the shared immutable staging cache — no
     // per-run staging jobs
     val stage = stagedPath(dir, "dirty_session", 3) { d =>
-      stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 1,
-                   Seq(col("ts"), col("event_id")))
+      val ev = events(spark, dir)
+      stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 1, ByTime)
       stageChunked(
-        ev.filter(col("ts") >= lit(cutTs)).unionAll(
-          spark.range(1).select(
-            lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(1.0).as("value"))),
-        d, 2, Seq(col("ts"), col("event_id")), firstChunk = 1)
+        ev.filter(col("ts") >= lit(cutTs)).unionAll(flushSentinel(spark, dir)),
+        d, 2, ByTime, firstChunk = 1)
     }
     val drained = dirtyRestartedStore(
       spark, work,
-      EventPipeline.sessionStream(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
+      EventPipeline.sessionStream(EventPipeline.readEventFileStream(spark, stage)),
       mode = OutputMode.Append)
-    // the session-merge-replay evidence: a session that began before the
-    // cut and ended past it (last event post-cut) emitted at-or-after
-    // the crashed batch — its merge necessarily replayed the restored
-    // version-1 open state
-    val spanned = drained.filter(
-      col("batch_id") >= 1L && col("session_start") < lit(cutTs) &&
-        col("session_end") >=
-          lit(new java.sql.Timestamp(cutTs.getTime + gapMs)))
-      .limit(1).count()
-    require(spanned > 0,
+    // the session-merge-replay evidence: a session straddling the cut
+    // emitted at-or-after the crashed batch — its merge necessarily
+    // replayed the restored version-1 open state
+    require(drained.filter(col("batch_id") >= 1L && spansSessionCut(cutTs))
+              .limit(1).count() > 0,
             "no session straddling the cut emitted at-or-after the crash " +
               "batch — the re-execution never replayed the open session")
-    drained
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-              col("n_events"), col("sum_value"))
-      .orderBy(col("user_id"), col("session_start"))
+    sessionReadback(drained)
   }
 
   /** The SAME dirty-restart window for the STREAM-STREAM JOIN state
@@ -1927,70 +1824,34 @@ object StreamDrain {
     */
   def streamDirtyJoinDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_dirty_join_drain")
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val cutTs = cachedProbe[java.sql.Timestamp](s"dirty_join_cut|$dir") {
-      val bounds =
-        ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
-      val midMs =
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("cu"), col("ts").as("cts"),
-                col("event_id").as("cid"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("pu"), col("ts").as("pts"),
-                col("event_id").as("pid"))
-      val pair = clicks
-        .join(purchases,
-              col("cu") === col("pu") &&
-                col("pts") > col("cts") + expr("INTERVAL 10 SECONDS") &&
-                col("pts") <= col("cts") + expr("INTERVAL 10 MINUTES"))
-        .filter(unix_millis(col("cts")) >= midMs)
-        .orderBy(col("cts"), col("pts"), col("cid"), col("pid"))
-        .limit(1)
-        .select(unix_millis(col("cts")).as("a"),
-                unix_millis(col("pts")).as("b"))
-        .collect()
-      require(pair.nonEmpty,
-              "no post-midpoint click->purchase pair with room for a cut — " +
-                "the dirty join restart would be vacuously correct")
-      new java.sql.Timestamp((pair(0).getLong(0) + pair(0).getLong(1)) / 2)
-    }
+    val cutTs = clickPurchaseCut(spark, dir, Some(corpusMidMs(spark, dir)))
     // the self-join reads the stage through two source instances (~2
-    // files per trigger — see streamAttributionDrain), so pre-cut stages
-    // as TWO chunks (micro-batch 0 = the whole pre-cut half, buffering
-    // the spanning click) and post-cut as three (the crash batch 1 then
+    // files per trigger — see JoinChunks), so pre-cut stages as TWO
+    // chunks (micro-batch 0 = the whole pre-cut half, buffering the
+    // spanning click) and post-cut as three (the crash batch 1 then
     // holds the earliest post-cut slice, which contains the spanning
     // purchase — its match is IN the orphaned sink output and must be
     // re-derived from rolled-back buffers). The whole file set is
     // visible from the start (crash injected in foreachBatch), so the
     // drain streams DIRECTLY from the shared staging cache.
     val stage = stagedPath(dir, "dirty_join", 5) { d =>
-      stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2,
-                   Seq(col("ts"), col("event_id")))
-      stageChunked(ev.filter(col("ts") >= lit(cutTs)), d, 3,
-                   Seq(col("ts"), col("event_id")), firstChunk = 2)
+      val ev = events(spark, dir)
+      stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2, ByTime)
+      stageChunked(ev.filter(col("ts") >= lit(cutTs)), d, 3, ByTime,
+                   firstChunk = 2)
     }
     val drained = dirtyRestartedStore(
       spark, work,
       EventPipeline.attributionStream(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
+        EventPipeline.readEventFileStream(spark, stage)),
       mode = OutputMode.Append)
-    // the rolled-back-buffer evidence: a match whose click precedes the
-    // cut and purchase follows it, emitted at-or-after the crash batch
-    val spanned = drained.filter(
-      col("batch_id") >= 1L && col("click_ts") < lit(cutTs) &&
-        col("purchase_ts") >= lit(cutTs))
-      .limit(1).count()
-    require(spanned > 0,
+    // the rolled-back-buffer evidence: a cut-spanning match emitted
+    // at-or-after the crash batch
+    require(drained.filter(col("batch_id") >= 1L && spansJoinCut(cutTs))
+              .limit(1).count() > 0,
             "no cut-spanning match emitted at-or-after the crash batch — " +
               "the re-executed batch never probed the restored click state")
-    drained
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-              col("click_ts"), col("purchase_ts"),
-              round(col("value"), 4).as("purchase_value"))
-      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
+    attributionReadback(drained)
   }
 
   /** The injected-crash scaffold shared by the dirty-restart drains:
@@ -2045,24 +1906,7 @@ object StreamDrain {
     require(after.nonEmpty && after.intersect(orphan).isEmpty,
             "the re-executed batch did not REPLACE the orphaned attempt's " +
               "files — an append-style sink would have double-written here")
-    // Unload this JVM's state-store providers NOW, skipping the deferred
-    // maintenance path: a query that dies mid-run leaves its providers
-    // deactivated-but-loaded, and the maintenance thread's final
-    // consolidation (a full snapshot write per partition) otherwise
-    // lands 1-2 maintenance intervals LATER — measured as a silent
-    // multi-minute drag smeared over whatever unrelated queries
-    // the bench happened to be timing then. The checkpoint is throwaway
-    // verification state, so dropping it without a final snapshot is
-    // correct; the next streaming query restarts maintenance lazily.
-    // (Production never sees this shape: a crashed driver's providers
-    // die with its JVM.) stop() is a JVM-GLOBAL unload — safe only
-    // because no other streaming query is running in this session;
-    // assert that instead of assuming it, so a future concurrent-drain
-    // bench cannot silently yank providers from under a live query.
-    require(spark.streams.active.isEmpty,
-            "StateStore.stop() is JVM-global: refusing to unload state " +
-              "providers while another streaming query is active")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    unloadStateStores(spark)
     readStore(spark, store)
   }
 
@@ -2158,18 +2002,14 @@ object StreamDrain {
                            StateTtl.Key -> Some(ttlMs.toString)) {
       val work = tempWorkDir("graft_lshttl_probe")
       val stage = s"$work/stage"
+      val byBand = Seq(col("doc_id"), col("band"))
       stageChunked(graft.operators.DedupOps.defaultLshBands(spark, dir),
-                   stage, MultiBatchChunks, Seq(col("doc_id"), col("band")))
+                   stage, MultiBatchChunks, byBand)
       val historyRows = spark.read.parquet(stage).count()
       val liveBands = graft.operators.DedupOps.defaultLshBands(spark, liveDir)
       val liveRows = liveBands.count()
-      val s = spark
-      import s.implicits._
-      val bandsIn = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .as[BandKeyRow]
+      import spark.implicits._
+      val bandsIn = fileStream(spark, stage).as[BandKeyRow]
       val q = TypedStatefulProcessors.lshCandidateStream(spark, bandsIn)
         .toDF()
         .writeStream
@@ -2208,7 +2048,7 @@ object StreamDrain {
       try {
         await(inputSum >= historyRows, "the history chunks to drain")
         sleepFold(ttlMs + 1500L) // let every history entry expire
-        stageChunked(liveBands, stage, 1, Seq(col("doc_id"), col("band")),
+        stageChunked(liveBands, stage, 1, byBand,
                      firstChunk = MultiBatchChunks)
         await(inputSum >= historyRows + liveRows && removedSum > 0,
               "the live window to drain and a TTL sweep to report " +
@@ -2218,10 +2058,7 @@ object StreamDrain {
       } finally {
         q.stop(); q.awaitTermination()
       }
-      require(spark.streams.active.isEmpty,
-              "StateStore.stop() is JVM-global: refusing to unload state " +
-                "providers while another streaming query is active")
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      unloadStateStores(spark)
       val finalRows = spark.read.format("statestore")
         .option("stateVarName", "bucketMembers")
         .load(s"$work/ckpt").count()
@@ -2263,17 +2100,19 @@ object StreamDrain {
     * a window covering the row ends after the row's ts ≥ watermark, so
     * it cannot have been evicted).
     *
-    * Boundary selection prefers gaps whose two rows share an event type
-    * — then a sliding pane provably holds rows from BOTH batches, and
-    * [[streamOooKpiDrain]] asserts that pane's two-batch emission with
-    * a grown count. Corpora without same-type tight gaps (the sparsest
-    * fixture) fall back to any-type gaps and the weaker per-row merge
-    * evidence. The shifted rows ride an underscore-hidden `_moved`
-    * sidecar (invisible to the file source), so the cached staging is
-    * self-describing: drains re-read it instead of re-deriving the
-    * assignment.
+    * The two forms ([[oooStaged]], [[oooSessionStaged]]) differ only in
+    * what a boundary PREFERS and what makes a shifted row STRONG merge
+    * evidence: `form` adds its per-row columns over the ranked corpus,
+    * `pref` is evaluated on each boundary candidate, `strong` on each
+    * shifted row (with its `boundary_ms` and the boundary row's
+    * `boundary_type`), and `sidecar` names extra `_moved` columns.
+    * Corpora without a preferred tight gap (the sparsest fixture) fall
+    * back to any-type gaps and the weaker per-row merge evidence. The
+    * shifted rows ride an underscore-hidden `_moved` sidecar (invisible
+    * to the file source), so the cached staging is self-describing:
+    * drains re-read it instead of re-deriving the assignment.
     *
-    * Coverage note: with [[buildOooSessionStage]] this puts THREE of the
+    * Coverage note: the two forms put THREE of the
     * four streaming state families under the admissible-late gate
     * (windowed agg, keyed transformWithState, session window). The
     * fourth — the stream-stream join — needs no OOO variant:
@@ -2294,36 +2133,32 @@ object StreamDrain {
     * families must additionally tolerate CROSS-batch reordering — and
     * those are exactly the ones gated here.
     */
-  private def buildOooStage(spark: SparkSession, dir: String,
-                            stageDir: String): Unit = {
+  private def buildOooStage(spark: SparkSession, dir: String, stageDir: String,
+                            form: DataFrame => DataFrame, pref: Column,
+                            strong: Column, sidecar: Seq[Column]): Unit = {
     val chunks = MultiBatchChunks
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
     // global no-partition rank = a SINGLE-PARTITION sort (Spark rightly
     // warns at runtime): HARNESS-SCALE staging derivation only (fixture
     // corpora, ≤ ~1M rows) — never a shape to copy into an operator
-    val w = Window.orderBy(col("ts"), col("event_id"))
-    val ranked = ev
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("ms", unix_millis(col("ts")))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = form(
+      events(spark, dir)
+        .withColumn("rn", row_number().over(OooOrder).cast("long"))
+        .withColumn("ms", unix_millis(col("ts")))
+        .withColumn("prev_ms", lag(col("ms"), 1).over(OooOrder)))
+      .persist(MEMORY_AND_DISK)
     try {
       val n = ranked.count()
       require(n > chunks, s"corpus too small to stage $chunks chunks")
       // boundary candidates: rows whose immediate predecessor is within
       // (0, OooSlackMs] — the predecessor is the row that will shift.
-      // rn bounds keep every chunk non-empty after the split. Preference
-      // column: boundary shares its predecessor's event type (a sliding
-      // pane then provably spans the two batches).
+      // rn bounds keep every chunk non-empty after the split.
       val cands = ranked
+        .withColumn("pref", pref)
         .filter(col("prev_ms").isNotNull &&
           col("ms") > col("prev_ms") &&
           col("ms") - col("prev_ms") <= lit(OooSlackMs) &&
           col("rn") > 1 && col("rn") < n)
-        .select(col("rn"), col("ms"),
-                (col("event_type") === col("prev_type")).as("pref"))
+        .select(col("rn"), col("ms"), col("pref"))
       val ((b1rn, b1ms), (b2rn, b2ms)) = pickOooBoundaries(cands, n)
       val assigned = oooAssign(ranked, b1rn, b1ms, b2rn, b2ms)
       val boundaryType = ranked
@@ -2335,9 +2170,10 @@ object StreamDrain {
         .withColumn("boundary_ms",
                     when(col("rn") < b1rn, b1ms).otherwise(b2ms))
         .join(broadcast(boundaryType), Seq("brn"))
-        .select(col("event_id"), col("ts"), col("user_id"),
-                col("event_type"), col("to_chunk"), col("boundary_ms"),
-                (col("event_type") === col("boundary_type")).as("strong"))
+        .withColumn("strong", strong)
+        .select(Seq(col("event_id"), col("ts"), col("user_id"),
+                    col("event_type"), col("to_chunk"), col("boundary_ms"),
+                    col("strong")) ++ sidecar: _*)
       requireBothBoundariesShift(moved)
       writeChunkFiles(
         (0 until chunks).map(k =>
@@ -2347,6 +2183,8 @@ object StreamDrain {
       moved.coalesce(1).write.mode("overwrite").parquet(s"$stageDir/_moved")
     } finally ranked.unpersist()
   }
+
+  private val OooOrder = Window.orderBy(col("ts"), col("event_id"))
 
   /** Two chunk boundaries for an OOO staging: the tight-gap candidates
     * (columns rn, ms, pref) nearest the ideal N/3 and 2N/3 split points,
@@ -2433,11 +2271,70 @@ object StreamDrain {
               "weaken the admissible-late coverage")
   }
 
-  /** The cached OOO staging for `dir`, plus its `_moved` sidecar. */
+  /** The cached OOO staging for `dir`, plus its `_moved` sidecar.
+    * Boundaries prefer gaps whose two rows share an event type — then a
+    * sliding pane provably holds rows from BOTH batches, and
+    * [[streamOooKpiDrain]] asserts that pane's two-batch emission with a
+    * grown count; a shifted row is `strong` when it shares its boundary
+    * row's event type.
+    */
   private[graft] def oooStaged(spark: SparkSession,
-                               dir: String): (String, DataFrame) = {
-    val stage = stagedPath(dir, "ooo", MultiBatchChunks)(
-      buildOooStage(spark, dir, _))
+                               dir: String): (String, DataFrame) =
+    oooStagedAs(spark, dir, "ooo")(buildOooStage(
+      spark, dir, _,
+      form = _.withColumn("prev_type", lag(col("event_type"), 1).over(OooOrder)),
+      pref = col("event_type") === col("prev_type"),
+      strong = col("event_type") === col("boundary_type"),
+      sidecar = Nil))
+
+  /** OOO staging tuned for the SESSION-WINDOW family, plus its `_moved`
+    * sidecar: boundaries prefer tight gaps whose shifting predecessor has
+    * an IN-SESSION prior event by the same user that provably stays in
+    * an earlier chunk — then the late row must merge BACKWARD into a
+    * session whose earlier rows streamed in a previous micro-batch, the
+    * session-store merge the kpi/snapshot legs never drive. The sidecar
+    * carries that prior's epoch ms (`prior_ms`, strong rows only), and a
+    * sentinel chunk (max ts + 2 h, its own 4th micro-batch) flushes
+    * every real session exactly as the monotone session drains do.
+    * Corpora whose tight gaps have no same-user in-session prior (the
+    * sparsest fixture) fall back to any tight gap; the drain then skips
+    * the merge-evidence assertion and still gates the full result hash.
+    */
+  private[graft] def oooSessionStaged(spark: SparkSession,
+                                      dir: String): (String, DataFrame) =
+    oooStagedAs(spark, dir, "ooo_session") { d =>
+      buildOooStage(
+        spark, dir, d,
+        form = _
+          .withColumn("user_prev_ms",
+                      lag(col("ms"), 1).over(Window.partitionBy(col("user_id"))
+                        .orderBy(col("ts"), col("event_id"))))
+          // this row has a same-user prior event close enough to share its
+          // 30-minute session — STRICTLY below the gap: session_window
+          // merges on [start, start + gap), so an exactly-gap prior lands
+          // in a separate session and would arm the merge assertion with an
+          // unmergeable pair
+          .withColumn("in_session_prior",
+                      col("user_prev_ms").isNotNull &&
+                        col("ms") - col("user_prev_ms") < lit(SessionGapMs)),
+        // the predecessor (the row that shifts) has an in-session prior
+        // OLD enough to stay below the shift band, i.e. guaranteed to
+        // execute in an earlier micro-batch
+        pref = coalesce(lag(col("in_session_prior"), 1).over(OooOrder) &&
+                          lag(col("user_prev_ms"), 1).over(OooOrder) <
+                            col("ms") - lit(OooSlackMs),
+                        lit(false)),
+        strong = col("in_session_prior") &&
+          col("user_prev_ms") < col("boundary_ms") - lit(OooSlackMs),
+        sidecar = Seq(when(col("strong"), col("user_prev_ms")).as("prior_ms")))
+      stageChunked(flushSentinel(spark, dir), d, 1, Nil,
+                   firstChunk = MultiBatchChunks)
+    }
+
+  /** The cached OOO staging `variant` of `dir`, plus its `_moved` sidecar. */
+  private def oooStagedAs(spark: SparkSession, dir: String, variant: String)
+                         (build: String => Unit): (String, DataFrame) = {
+    val stage = stagedPath(dir, variant, MultiBatchChunks)(build)
     (stage, spark.read.parquet(s"$stage/_moved"))
   }
 
@@ -2504,8 +2401,7 @@ object StreamDrain {
     val drained = drainToStore(
       spark,
       EventPipeline.slidingKpi(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
+        EventPipeline.readEventFileStream(spark, stage)),
       work, expectBatches = MultiBatchChunks)
     // every shifted row's own-type pane re-emitted at its late batch
     val movedKeys = moved.select(
@@ -2560,15 +2456,12 @@ object StreamDrain {
       val work = tempWorkDir("graft_ooo_snapshot_drain")
       val (stage, moved) = oooStaged(spark, dir)
       oooStagingAudit(spark, stage, moved)
-      val s = spark
-      import s.implicits._
       val drained = drainToStore(
         spark,
         TypedStatefulProcessors
           .userSnapshotStream(
             spark,
-            spark.readStream.schema(EventPipeline.eventSchema)
-              .option("maxFilesPerTrigger", "1").parquet(stage).as[Event])
+            EventPipeline.typedEvents(EventPipeline.readEventFileStream(spark, stage)))
           .toDF(),
         work, expectBatches = MultiBatchChunks)
       val movedUsers = moved.select(col("user_id").as("mu"),
@@ -2604,108 +2497,13 @@ object StreamDrain {
                   "batch — nothing proves restored state was EXTENDED by " +
                   "the late row")
       }
-      lastPerKey(drained, Seq("user_id"))
-        .select(col("user_id"), col("n_events"), col("sum_micros"),
-                col("last_ts_micros"))
-        .orderBy(col("user_id"))
+      snapshotReadback(lastPerKey(drained, Seq("user_id")))
     }
-
-  /** OOO staging tuned for the SESSION-WINDOW family: same shift
-    * mechanics as [[buildOooStage]], but boundaries prefer tight gaps
-    * whose shifting predecessor has an IN-SESSION prior event by the
-    * same user that provably stays in an earlier chunk — then the late
-    * row must merge BACKWARD into a session whose earlier rows streamed
-    * in a previous micro-batch, the session-store merge the kpi/snapshot
-    * legs never drive. The sidecar carries that prior's epoch ms
-    * (`prior_ms`, strong rows only), and a sentinel chunk (max ts + 2 h,
-    * its own 4th micro-batch) flushes every real session exactly as the
-    * monotone session drains do. Corpora whose tight gaps have no
-    * same-user in-session prior (the sparsest fixture) fall back to
-    * any tight gap; the drain then skips the merge-evidence assertion
-    * and still gates the full result hash.
-    */
-  private def buildOooSessionStage(spark: SparkSession, dir: String,
-                                   stageDir: String): Unit = {
-    val chunks = MultiBatchChunks
-    val gapMs = 1800000L
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    // global no-partition rank = a SINGLE-PARTITION sort (Spark rightly
-    // warns at runtime): HARNESS-SCALE staging derivation only (fixture
-    // corpora, ≤ ~1M rows) — never a shape to copy into an operator
-    val w = Window.orderBy(col("ts"), col("event_id"))
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val ranked = ev
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("ms", unix_millis(col("ts")))
-      .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(w))
-      .withColumn("user_prev_ms", lag(unix_millis(col("ts")), 1).over(byUser))
-      // this row has a same-user prior event close enough to share its
-      // 30-minute session — STRICTLY below the gap: session_window
-      // merges on [start, start + gap), so an exactly-gap prior lands
-      // in a separate session and would arm the merge assertion with an
-      // unmergeable pair
-      .withColumn("in_session_prior",
-                  col("user_prev_ms").isNotNull &&
-                    col("ms") - col("user_prev_ms") < lit(gapMs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = ranked.count()
-      require(n > chunks, s"corpus too small to stage $chunks chunks")
-      // boundary preference: the predecessor (the row that shifts) has an
-      // in-session prior OLD enough to stay below the shift band, i.e.
-      // guaranteed to execute in an earlier micro-batch
-      val cands = ranked
-        .withColumn("pred_strong",
-                    lag(col("in_session_prior"), 1).over(w) &&
-                      lag(col("user_prev_ms"), 1).over(w) <
-                        col("ms") - lit(OooSlackMs))
-        .filter(col("prev_ms").isNotNull &&
-          col("ms") > col("prev_ms") &&
-          col("ms") - col("prev_ms") <= lit(OooSlackMs) &&
-          col("rn") > 1 && col("rn") < n)
-        .select(col("rn"), col("ms"),
-                coalesce(col("pred_strong"), lit(false)).as("pref"))
-      val ((b1rn, b1ms), (b2rn, b2ms)) = pickOooBoundaries(cands, n)
-      val assigned = oooAssign(ranked, b1rn, b1ms, b2rn, b2ms)
-      val moved = assigned
-        .filter(col("moved"))
-        .withColumn("boundary_ms",
-                    when(col("rn") < b1rn, b1ms).otherwise(b2ms))
-        .withColumn("strong",
-                    col("in_session_prior") &&
-                      col("user_prev_ms") < col("boundary_ms") -
-                        lit(OooSlackMs))
-        .select(col("event_id"), col("ts"), col("user_id"),
-                col("event_type"), col("to_chunk"), col("boundary_ms"),
-                col("strong"),
-                when(col("strong"), col("user_prev_ms")).as("prior_ms"))
-      requireBothBoundariesShift(moved)
-      writeChunkFiles(
-        (0 until chunks).map(k =>
-          assigned.filter(col("to_chunk") === k)
-            .select("event_id", "ts", "user_id", "event_type", "value")),
-        stageDir)
-      // sentinel chunk — the 4th micro-batch that advances the watermark
-      // past every real session end (the bounded-drain stand-in for
-      // continuing traffic; filtered from the read-back)
-      val maxTs = ranked.agg(max(col("ts"))).head().getTimestamp(0)
-      stageChunked(
-        spark.range(1).select(
-          lit(-1L).as("event_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 7200000L)).as("ts"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(1.0).as("value")),
-        stageDir, 1, Seq.empty, firstChunk = chunks)
-      moved.coalesce(1).write.mode("overwrite").parquet(s"$stageDir/_moved")
-    } finally ranked.unpersist()
-  }
 
   /** The SAME admissible-late arrival class for the SESSION-WINDOW
     * state family: [[EventPipeline.sessionStream]] (append-mode
     * `session_window` gap aggregation) over the
-    * [[buildOooSessionStage]] replay. A shifted row arrives a
+    * [[oooSessionStaged]] replay. A shifted row arrives a
     * micro-batch behind its event-time peers, within the 10 s
     * watermark, and Spark must MERGE it into session state persisted by
     * earlier batches — including backward extension of a session whose
@@ -2718,16 +2516,6 @@ object StreamDrain {
     * prior and still COVER the shifted row — a failed merge would mint
     * a separate late session starting at the shifted row itself.
     */
-  /** The cached session-OOO staging for `dir`, plus its `_moved`
-    * sidecar (strong rows carry `prior_ms`).
-    */
-  private[graft] def oooSessionStaged(spark: SparkSession,
-                                      dir: String): (String, DataFrame) = {
-    val stage = stagedPath(dir, "ooo_session", MultiBatchChunks)(
-      buildOooSessionStage(spark, dir, _))
-    (stage, spark.read.parquet(s"$stage/_moved"))
-  }
-
   def streamOooSessionDrain(spark: SparkSession, dir: String): DataFrame = {
     val work = tempWorkDir("graft_ooo_session_drain")
     val (stage, moved) = oooSessionStaged(spark, dir)
@@ -2735,8 +2523,7 @@ object StreamDrain {
     val drained = drainToStore(
       spark,
       EventPipeline.sessionStream(
-        spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)),
+        EventPipeline.readEventFileStream(spark, stage)),
       work, OutputMode.Append, expectBatches = MultiBatchChunks + 1)
     val strongMoved = moved.filter(col("strong")).select(
       col("user_id").as("mu"), col("ts").as("mts"), col("prior_ms"))
@@ -2758,11 +2545,7 @@ object StreamDrain {
                 "prior and covers the shifted row — the late row was never " +
                 "merged backward into the restored session state")
     }
-    drained
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-              col("n_events"), col("sum_value"))
-      .orderBy(col("user_id"), col("session_start"))
+    sessionReadback(drained)
   }
 
   /** IN-BATCH (within-trigger) REORDERING staging for the order-
@@ -2781,9 +2564,7 @@ object StreamDrain {
   private def buildShuffledStage(spark: SparkSession, dir: String,
                                  stageDir: String): Unit =
     stageChunked(
-      graft.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value"),
-      stageDir, MultiBatchChunks, Seq(col("ts"), col("event_id")),
+      events(spark, dir), stageDir, MultiBatchChunks, ByTime,
       // seed-free deterministic scramble: uncorrelated with event time
       scramble = Some(xxhash64(col("event_id"))))
 
@@ -2838,8 +2619,7 @@ object StreamDrain {
       EventPipeline
         .ewmaStream(
           spark,
-          spark.readStream.schema(EventPipeline.eventSchema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
+          EventPipeline.readEventFileStream(spark, stage))
         .toDF(),
       work, Seq("event_type"), expectBatches = MultiBatchChunks)
       .select(col("event_type"), col("n_buckets"), col("ewma_value"))
@@ -2863,8 +2643,7 @@ object StreamDrain {
       EventPipeline
         .anomalyStream(
           spark,
-          spark.readStream.schema(EventPipeline.eventSchema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
+          EventPipeline.readEventFileStream(spark, stage))
         .filter(_.is_anomaly)
         .toDF(),
       work, expectBatches = MultiBatchChunks))
@@ -2885,8 +2664,7 @@ object StreamDrain {
       EventPipeline
         .transitionStream(
           spark,
-          spark.readStream.schema(EventPipeline.eventSchema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
+          EventPipeline.readEventFileStream(spark, stage))
         .toDF(),
       work, expectBatches = MultiBatchChunks)
       .groupBy(col("prev_type"), col("next_type"))

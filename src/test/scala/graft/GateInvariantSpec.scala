@@ -98,6 +98,27 @@ class GateInvariantSpec extends SparkSpec {
            "flatMapGroupsWithState outside EventPipeline.keyedUpdate")
   }
 
+  test("streaming drains: one event reader, state-store unload and sentinel row") {
+    // StreamDrain reads every staged event stream through
+    // EventPipeline.readEventFileStream, every other staging through one
+    // private reader, unloads state stores in one helper and builds the
+    // sentinel event in one helper. Guard: each pattern occurs in the
+    // file exactly this often, comments included; the expected counts
+    // but the first are positive, and the event reader must be called,
+    // so the scan cannot pass vacuously.
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamDrain.scala")), "UTF-8")
+    def count(pattern: String): Int =
+      java.util.regex.Pattern.quote(pattern).r.findAllMatchIn(text).size
+    val expected = Map(
+      "schema(EventPipeline.eventSchema)" -> 0,
+      "StateStore.stop()" -> 1,
+      "maxFilesPerTrigger" -> 1,
+      """lit(-1L).as("event_id")""" -> 1)
+    assert(expected.map { case (p, _) => p -> count(p) } == expected)
+    assert(count("readEventFileStream(") > 0, "no drain reads through readEventFileStream")
+  }
+
   test("every query output is scalar-only (driver's row sorter dies on nested types)") {
     val dir = sf("sf0.001")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
