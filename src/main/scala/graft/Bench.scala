@@ -4,7 +4,8 @@ import java.nio.file.Paths
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Benchmark main (driver contract): times the HEADLINE query set — the
   * reference's externally visible query surface (SURVEY §2.9: /series,
@@ -45,6 +46,59 @@ object Bench {
       }
   }
 
+  /** What a timed run does with the frame it built. `frame` gives the
+    * frame the run executes, so a run's planning seconds are read off
+    * the same plan that it then executes, and nothing is planned twice.
+    */
+  sealed abstract class Action(val frame: DataFrame => DataFrame,
+                               val run: DataFrame => Unit)
+
+  /** `Dataset.count`'s own plan and job: a global count, collected. */
+  case object Count extends Action(_.groupBy().count(), _.collect())
+
+  /** A noop sink's work: every column of every row of the planned
+    * frame is computed and dropped (Catalyst prunes nothing a count
+    * would not read).
+    */
+  case object NoopWrite extends Action(identity, df =>
+    SQLExecution.withNewExecutionId(df.queryExecution, Some("noop")) {
+      df.queryExecution.toRdd.foreach(_ => ())
+    })
+
+  /** One timed query: the wall seconds of each run, and per run the
+    * seconds from building the frame to its executed plan.
+    */
+  final case class Timing(name: String, wall: Seq[Double], plan: Seq[Double])
+
+  /** The one query timer: runs each query `runs` times over `dir`, each
+    * run building a fresh frame, planning what `action` executes, and
+    * executing it. A query whose run throws gets no time: it is named in
+    * the returned failed list (and on stderr), and the next query is
+    * still timed. Returns (timed, failed), each in call order.
+    */
+  def time(spark: SparkSession,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)],
+           dir: String, runs: Int, action: Action): (Seq[Timing], Seq[String]) = {
+    val results = queries.map { case (name, build) =>
+      try {
+        val (wall, plan) = (1 to runs).map { _ =>
+          val t0 = System.nanoTime()
+          val df = action.frame(build(spark, dir))
+          df.queryExecution.executedPlan
+          val planned = System.nanoTime()
+          action.run(df)
+          ((System.nanoTime() - t0) / 1e9, (planned - t0) / 1e9)
+        }.unzip
+        Right(Timing(name, wall, plan))
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Left(name)
+      }
+    }
+    val (failed, timed) = results.partitionMap(identity)
+    (timed, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Posture.bench()
@@ -58,15 +112,14 @@ object Bench {
     // (the end-of-run reading always carries ~2 of self-load)
     val loadavgStart = readLoadavg()
 
-    // HOST FINGERPRINT (the round-11 lesson: 7 phantom regressions with
-    // a confident "LOAD VERDICT: ok" were 100% host delta — two quiet
-    // but DIFFERENT boxes; judge A/B of both code versions on one box
-    // showed 66s vs 69s). Two signals ship in every snapshot so
-    // bench_diff can adjudicate host identity instead of being blind to
-    // it: the CPU model string, and a fixed single-thread calibration
-    // loop (300M xorshift64 steps, min-of-3 after one unbilled JIT
-    // warmup pass) whose wall time moves with the box's single-thread
-    // speed — the same axis that scales every per-query min.
+    // HOST FINGERPRINT: two quiet but DIFFERENT boxes can differ by more
+    // than any code change, and a load verdict alone cannot tell them
+    // apart. Two signals ship in every snapshot so bench_diff can
+    // adjudicate host identity instead of being blind to it: the CPU
+    // model string, and a fixed single-thread calibration loop (300M
+    // xorshift64 steps, min-of-3 after one unbilled JIT warmup pass)
+    // whose wall time moves with the box's single-thread speed — the
+    // same axis that scales every per-query min.
     val hostCpu = HostCalib.cpuModel
     val calibSec = HostCalib.calibrate()
 
@@ -77,46 +130,32 @@ object Bench {
     // occasionally lands on a measured run even after warmup); the
     // minimum is the steady-state figure the baseline's
     // sustained-throughput thresholds describe. All three raw runs ship
-    // in the "runs" field so round-over-round comparisons can see the
+    // in the "runs" field so run-over-run comparisons can see the
     // variance instead of guessing whether a delta is noise.
     // A query that throws gets no time: it is listed in "failed" and
     // left out of every total.
-    val failed = Seq.newBuilder[String]
-    def time(names: Seq[String]): Seq[(String, Double, Seq[Double])] =
-      names.flatMap { name =>
-        try {
-          val runs = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            SparkEntry.queries(name)(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          Some((name, runs.min, runs))
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          failed += name
-          None
-        }
-      }
+    def timeAll(names: Seq[String]): (Seq[Timing], Seq[String]) =
+      time(spark, names.map(n => n -> SparkEntry.queries(n)), sfDir, 3, Count)
 
-    val headlineTimes = time(headline)
+    val (headlineTimes, headlineFailed) = timeAll(headline)
     val extended = SparkEntry.queries.keySet.diff(headline.toSet).toSeq.sorted
-    val extendedTimes = time(extended)
+    val (extendedTimes, extendedFailed) = timeAll(extended)
     // the writeStream drains each execute a full multi-micro-batch
     // writeStream (staging, state store, checkpoint, read-back) per
     // run — verification machinery whose wall-clock grows with drain
-    // COUNT, not engine speed. Split it out so round-over-round engine
+    // COUNT, not engine speed. Split it out so run-over-run engine
     // comparisons read batch_extended_total; extended_total stays for
-    // continuity with earlier rounds. The split keys on the EXPLICIT
+    // continuity with earlier snapshots. The split keys on the EXPLICIT
     // SparkEntry.drainQueries registry (spec-pinned against the name
     // prefix), not a prefix scrape here.
     val drainTotal = extendedTimes
-      .filter(t => SparkEntry.drainQueries.contains(t._1)).map(_._2).sum
-    val extendedTotal = extendedTimes.map(_._2).sum
+      .filter(t => SparkEntry.drainQueries.contains(t.name)).map(_.wall.min).sum
+    val extendedTotal = extendedTimes.map(_.wall.min).sum
 
     val events =
       try spark.read.parquet(s"$sfDir/events.parquet").count()
       catch { case NonFatal(_) => 0L }
-    val headlineTotal = headlineTimes.map(_._2).sum
+    val headlineTotal = headlineTimes.map(_.wall.min).sum
     val eventsPerSec =
       if (headlineTotal > 0) events * headlineTimes.size / headlineTotal
       else 0.0
@@ -125,17 +164,17 @@ object Bench {
     def fmt(r: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(r))
     val qs = all
-      .map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
+      .map(t => "\"" + t.name + "\":" + fmt(t.wall.min))
       .mkString("{", ",", "}")
     val rs = all
-      .map { case (k, _, runs) =>
+      .map { t =>
         // Locale.ROOT: the f-interpolator uses the JVM default locale,
         // and a comma-decimal locale would emit invalid JSON
-        "\"" + k + "\":" + runs.map(fmt).mkString("[", ",", "]")
+        "\"" + t.name + "\":" + t.wall.map(fmt).mkString("[", ",", "]")
       }
       .mkString("{", ",", "}")
-    // machine load at measurement time: two rounds running, host noise
-    // has masqueraded as per-query regression — record the evidence
+    // machine load at measurement time: with two workloads on the box,
+    // host noise has masqueraded as per-query regression — record it
     // (end-of-run reading kept for continuity; loadavg_start is the
     // ambient one bench_diff adjudicates on)
     val loadavg = readLoadavg()
@@ -143,9 +182,9 @@ object Bench {
     // reading a single BENCH file sees whether its numbers were captured
     // hot without running bench_diff, and bench_diff itself reads the
     // embedded verdict + limit (its own constant is only a fallback for
-    // pre-r11 files). JSON null when /proc/loadavg was unreadable — a
-    // confident "false" there would make an UNKNOWN load read as
-    // "verified not hot" downstream.
+    // snapshots that carry none). JSON null when /proc/loadavg was
+    // unreadable — a confident "false" there would make an UNKNOWN load
+    // read as "verified not hot" downstream.
     val loadLimit = 2.0
     val loadHot = loadavgStart.split(" ").headOption
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
@@ -160,8 +199,8 @@ object Bench {
     val hostCpuJson = hostCpu.replace("\\", "\\\\").replace("\"", "\\\"")
     val hostFields =
       s""""host_cpu":"$hostCpuJson","calib_sec":${fmt(calibSec)},"""
-    val failedJson =
-      failed.result().map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val failedJson = (headlineFailed ++ extendedFailed)
+      .map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val runsLine =
       s"""{"metric":"bench_runs","runs":$rs,"loadavg":"$loadavg",""" +
         s""""loadavg_start":"$loadavgStart","load_hot":$loadHot,""" +

@@ -39,7 +39,9 @@ import org.apache.spark.sql.functions._
   * `StreamDrain.stateTelemetry`) so "state is bounded" is a measured
   * number rather than prose. The optional 4th arg restricts the probe
   * set (e.g. the worst-tail five at 30×); SCALING.md records the
-  * committed verdicts.
+  * committed verdicts. Times come from [[Bench.time]]: a probe whose
+  * query throws at either scale prints no line, the other probes still
+  * run, and the probe exits 1 after the loop.
   */
 object ScalingProbe {
 
@@ -215,12 +217,11 @@ object ScalingProbe {
 
     def fmt(r: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(r))
-    def timeAt(name: String, dir: String): Double =
-      (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    // min of 2 counts at one scale; None when a run threw
+    def timeAt(name: String, dir: String): Option[Double] =
+      Bench.time(spark, Seq(name -> SparkEntry.queries(name)), dir, 2,
+                 Bench.Count)._1.headOption.map(_.wall.min)
+    val failed = Seq.newBuilder[String]
 
     // reads the drain's LAST allocated work dir — must be called right
     // after timing the scale it describes, before the drain runs again
@@ -250,17 +251,21 @@ object ScalingProbe {
           s""""base":{${fields(sBase)}},"scaled":{${fields(sBig)}},""" +
           s""""copies":$copies}""")
       } else {
-        val tBase = timeAt(name, base)
-        val stBase = stateLines(name).toMap
-        val tBig = timeAt(name, out)
-        val stBig = stateLines(name).toMap
-        println(s"""{"query":"$name","base_s":${fmt(tBase)},""" +
-          s""""scaled_s":${fmt(tBig)},"copies":$copies,""" +
-          s""""ratio":${fmt(tBig / tBase)}}""")
-        for ((label, b) <- stBase.toSeq.sortBy(_._1); s <- stBig.get(label))
-          println(s"""{"telemetry":"state_store","query":"$name",""" +
-            s""""phase":"$label","base":{$b},"scaled":{$s},""" +
-            s""""copies":$copies}""")
+        // a scale that fails skips this probe's lines; the rest still run
+        val measured = for {
+          tBase <- timeAt(name, base)
+          stBase = stateLines(name).toMap
+          tBig <- timeAt(name, out)
+        } yield (tBase, stBase, tBig, stateLines(name).toMap)
+        measured.fold[Unit](failed += name) { case (tBase, stBase, tBig, stBig) =>
+          println(s"""{"query":"$name","base_s":${fmt(tBase)},""" +
+            s""""scaled_s":${fmt(tBig)},"copies":$copies,""" +
+            s""""ratio":${fmt(tBig / tBase)}}""")
+          for ((label, b) <- stBase.toSeq.sortBy(_._1); s <- stBig.get(label))
+            println(s"""{"telemetry":"state_store","query":"$name",""" +
+              s""""phase":"$label","base":{$b},"scaled":{$s},""" +
+              s""""copies":$copies}""")
+        }
       }
     }
 
@@ -284,5 +289,11 @@ object ScalingProbe {
         s""""candidate_ratio":${fmt(sc.toDouble / math.max(bc, 1L))}}""")
     }
     spark.stop()
+    val failedNames = failed.result()
+    if (failedNames.nonEmpty) {
+      System.err.println(s"[scaling] ${failedNames.size} probes failed: " +
+        failedNames.mkString(","))
+      sys.exit(1)
+    }
   }
 }

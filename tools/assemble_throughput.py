@@ -9,8 +9,13 @@ per (config, state_store) — lowest e2e p95 (chained lines:
 chained_e2e_p95_ms), the same min-of-N principle the batch bench uses —
 plus the best capacity_knee line (highest knee), and writes them to
 THROUGHPUT.json PRESERVING THE RAW LINE BYTES, so every artifact line is
-grep-able verbatim in the committed raw-runs file (the round-12 advice:
-headline claims must be verifiable against committed evidence).
+grep-able verbatim in the committed raw-runs file: a headline claim must
+be verifiable against committed evidence.
+
+A partial capture never becomes the artifact: when any (family, provider)
+pair of FAMILY_ORDER x PROVIDER_ORDER, or the capacity_knee line, has no
+measured line in the runs file, the tool names what is missing, writes
+nothing and exits 1.
 
 Usage: python3 tools/assemble_throughput.py RUNS.jsonl [THROUGHPUT.json]
 """
@@ -48,17 +53,23 @@ def main():
             knee = d.get("knee_events_per_sec", 0)
             if best_knee is None or knee > best_knee[0]:
                 best_knee = (knee, raw)
+    missing = [f"{fam}/{prov}" for prov in PROVIDER_ORDER
+               for fam in FAMILY_ORDER if (fam, prov) not in best]
+    if best_knee is None:
+        missing.append("capacity_knee")
+    if missing:
+        print(f"{runs} is missing {', '.join(missing)}; "
+              f"{out} not written", file=sys.stderr)
+        sys.exit(1)
     lines = []
     for prov in PROVIDER_ORDER:
         for fam in FAMILY_ORDER:
-            if (fam, prov) in best:
-                lines.append(best[(fam, prov)][1])
+            lines.append(best[(fam, prov)][1])
     # any captured (config, provider) outside the known orders still lands
     for key in sorted(best):
         if best[key][1] not in lines:
             lines.append(best[key][1])
-    if best_knee:
-        lines.append(best_knee[1])
+    lines.append(best_knee[1])
     out.write_text("\n".join(lines) + "\n")
     print(f"wrote {len(lines)} lines to {out} (from {runs})")
 
