@@ -79,7 +79,8 @@ import graft.streaming.EventPipeline
   * `SPARK_GRAFT_PROBE_OUT` names a JSONL file each line is appended to
   * the moment it is measured. Lines also go to stdout. The committed
   * THROUGHPUT.json is assembled from such a file by
-  * `tools/capture_throughput.sh` (one fresh JVM per family and provider).
+  * `tools/capture_throughput.sh` (one fresh JVM per family and provider;
+  * the knee shares the hdfs headroom JVM, whose row seeds it).
   *
   * Scale posture: everything between source and sink is the production
   * topology — keyed state bounded by key count, broadcast dims, no

@@ -41,9 +41,9 @@ final class MgState(
   * Determinism (why an oracle can hash-check a sketch): compression
   * only fires when a partial exceeds k distinct tokens, so with k above
   * the stream's distinct-token count every estimate is EXACT and
-  * dec = 0 regardless of partitioning. The gate query runs with
-  * `graft.topk.k` (default 64, above the test-corpus vocabulary) and
-  * emits `within_bound` against exact counts; adversarial small-k
+  * dec = 0 regardless of partitioning. The gate query
+  * (`approx_top_tokens`) runs with k = 64, above the test-corpus
+  * vocabulary, and emits `within_bound` against exact counts; adversarial small-k
   * behavior (undercounts whose bound still holds under arbitrary
   * splits) is property-tested in SketchSpec.
   */

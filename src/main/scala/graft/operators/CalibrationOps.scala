@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.round
 
-/** Knob calibration: MEASURED recall for each point of the tuning-knob
-  * grid, in one table — the grounding for `graft.minhash.k/.bands` and
-  * `graft.ann.bits/.multiprobe` that the monotonicity specs
-  * (ScaleTechniqueSpec) cannot give. A tuning decision at 100 TB is
+/** Recall calibration: MEASURED recall for each point of the
+  * candidate-generation grid, in one table — the grounding for the
+  * MinHash (k, bands) and sign-LSH (bits, probe) choices that the
+  * monotonicity specs (ScaleTechniqueSpec) cannot give. A tuning decision at 100 TB is
   * "which recall/volume point do I buy"; this operator prints the menu
   * from the corpus itself instead of trusting the analytic curve alone
   * (for MinHash the analytic expectation rides along per row, so
@@ -190,9 +190,9 @@ object CalibrationOps {
 
   /** The scored sign-LSH candidate pass at `bits`, cut at the grid's
     * WIDEST probe radius and persisted per (dataset, bits): Hamming ≤
-    * probe as a join predicate over the two codes — the probe-set
-    * explode of annLshBucketed expressed as a distance test (identical
-    * match set; the oracle states it the same way). Each grid row
+    * probe as a join predicate over the two codes — multi-probe LSH's
+    * probe set (the code plus its Hamming-≤probe flips) expressed as a
+    * distance test (the oracle states it the same way). Each grid row
     * filters `hamming <= probe` from this frame, which restores
     * exactly the old per-row join condition (the maxProbe cut is a
     * superset and hamming rides along), so match sets are unchanged

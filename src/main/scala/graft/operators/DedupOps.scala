@@ -27,30 +27,20 @@ import graft.functions.Rounding.round
   */
 object DedupOps {
 
-  /** Default MinHash size / banding — DEV-scale constants (and what the
-    * static DuckDB oracles encode). Production corpora want k≈128,
-    * bands≈32 for recall at the 0.5 threshold: the LSH s-curve
+  /** MinHash size / banding — DEV-scale constants (and what the static
+    * DuckDB oracles encode). Production corpora want k≈128, bands≈32
+    * for recall at the 0.5 threshold: the LSH s-curve
     * P(candidate) = 1−(1−s^r)^b gives ~0.23 at s=0.5 with (b=4, r=4) but
     * ~0.87 with (b=32, r=4) — see [[lshCatchProbability]] and the
-    * ScaleTechniqueSpec s-curve spec. Tune per-session via
-    * `graft.minhash.k` / `graft.minhash.bands` (k must divide into equal
-    * bands); the verification step makes emitted pairs threshold-exact
-    * regardless of k — the knobs trade shuffle volume for candidate
-    * recall only.
+    * ScaleTechniqueSpec s-curve spec. The verification step makes
+    * emitted pairs threshold-exact regardless of k, so the banding
+    * trades shuffle volume for candidate recall only;
+    * [[dedupMinhashWideband]] runs bands=8 under its own oracle.
     */
   private val NumHashes = 16
   private val Bands = 4
   private val RowsPerBand = NumHashes / Bands
   private[graft] val JaccardThreshold = 0.5
-
-  /** Session-tunable (k, bands) with the dev defaults above. */
-  private[graft] def minhashConf(spark: SparkSession): (Int, Int) = {
-    val k = spark.conf.get("graft.minhash.k", NumHashes.toString).toInt
-    val b = spark.conf.get("graft.minhash.bands", Bands.toString).toInt
-    require(k > 0 && b > 0 && k % b == 0,
-            s"graft.minhash.k=$k must split into graft.minhash.bands=$b equal bands")
-    (k, b)
-  }
 
   /** Analytic LSH s-curve (MMDS ch.3): probability that a pair with true
     * Jaccard similarity `s` lands in the same bucket in at least one of
@@ -151,13 +141,11 @@ object DedupOps {
     * array) so the result is scalar-only — the oracle gate's row sorter
     * can't order array cells.
     */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    val (k, _) = minhashConf(spark)
-    minhashSigFrame(spark, dir, k)
+  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    minhashSigFrame(spark, dir, NumHashes)
       .select(col("doc_id"),
               concat_ws(",", transform(col("sig"), _.cast("string"))).as("sig"))
       .orderBy(col("doc_id"))
-  }
 
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard
     * over the shingle sets. bands=4 × rows=4 over k=16.
@@ -168,26 +156,23 @@ object DedupOps {
     * would re-execute the signature pipeline for both sides. Candidate
     * verification joins back to the (cheap) shingle sets only.
     */
-  def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val (k, nBands) = minhashConf(spark)
-    // r14 (§5, the shingleStore idiom): the verified near-dup pair frame
-    // at the session knobs is consumed by FIVE declared paths —
+  def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
+    // persisted per dataset (the shingleStore idiom): the verified
+    // near-dup pair frame is consumed by FIVE declared paths —
     // dedup_minhash_lsh itself, dedup_cascade, dedup_verify_editdist,
-    // lsh_recall, and the cluster-label pipeline — each of which
-    // re-ran candidate generation + exact verification before. Keyed on
-    // (dataset, k, bands) so knob-variant sessions never share.
-    lshPairsStore.getOrBuild(spark, s"$dir#lshPairs k=$k b=$nBands")(
-      minhashLshPairs(spark, dir, k, nBands))
-  }
+    // lsh_recall, and the cluster-label pipeline — each of which would
+    // otherwise re-run candidate generation + exact verification
+    lshPairsStore.getOrBuild(spark, s"$dir#lshPairs")(
+      minhashLshPairs(spark, dir, NumHashes, Bands))
 
   private val lshPairsStore = new FrameStore(2)
 
-  /** [[dedupMinhashLsh]] at the non-default banding (k=16, bands=8,
-    * rows=2 — higher recall, more candidate shuffle) under its own
-    * oracle ([[minhashLshSqlAt]] at the same banding), so the
-    * `graft.minhash.*` knobs provably cannot desync the engines. The
-    * signature frame is shared with the default via [[minhashSigFrame]]
-    * (same k — the expensive pass runs once).
+  /** [[dedupMinhashLsh]] at the wider banding (k=16, bands=8, rows=2 —
+    * higher recall, more candidate shuffle) under its own oracle
+    * ([[minhashLshSqlAt]] at the same banding), so the banding provably
+    * cannot desync the engines. The signature frame is shared with the
+    * default via [[minhashSigFrame]] (same k — the expensive pass runs
+    * once).
     */
   def dedupMinhashWideband(spark: SparkSession, dir: String): DataFrame =
     minhashLshPairs(spark, dir, NumHashes, 8)
@@ -202,12 +187,12 @@ object DedupOps {
 
   /** The UNSCORED LSH candidate pairs at (k, bands): bucket → sorted
     * member list → all in-bucket pairs (i < j); megabuckets dropped
-    * (skew guard, see MaxBucket). Split out of [[lshScoredPairs]] (r13)
-    * so consumers that only need a SLICE of the candidate set —
+    * (skew guard, see MaxBucket). Split out of [[lshScoredPairs]] so
+    * consumers that only need a SLICE of the candidate set —
     * [[CalibrationOps.recallMatrix]]'s bounded-sample recall rows — can
     * filter before the exact-Jaccard verification join instead of
     * scoring the whole corpus's candidates and discarding 95+ % of the
-    * work (guide §1.2: don't compute things you throw away).
+    * work (don't compute things you throw away).
     */
   private[operators] def lshCandidates(spark: SparkSession, dir: String,
                                        k: Int, nBands: Int): DataFrame =
@@ -243,7 +228,7 @@ object DedupOps {
       .select(col("doc_id"), col("band"), col("band_hash"))
   }
 
-  /** [[lshBandsFrame]] at the dev-default (k=16, bands=4) — the knobs
+  /** [[lshBandsFrame]] at the dev constants (k=16, bands=4) that
     * [[minhashLshSql]] hardcodes.
     */
   private[graft] def defaultLshBands(spark: SparkSession,
@@ -290,8 +275,7 @@ object DedupOps {
     * so the exact-Jaccard verification only scores in-sample pairs.
     * The bucket-size (MaxBucket) guard still sees the FULL corpus's
     * buckets inside [[lshCandidates]], which is what the recall oracle
-    * states (r13; motivates guide §1.2 / §2.3 — project/filter before
-    * the expensive join).
+    * states (project/filter before the expensive join).
     */
   private[operators] def minhashLshPairsSampled(
       spark: SparkSession, dir: String, k: Int, nBands: Int,
@@ -318,9 +302,8 @@ object DedupOps {
     * pairs. Same skew posture as every LSH consumer (bucketed
     * candidates, MaxBucket guard, AQE-splittable joins).
     */
-  def shingleContainment(spark: SparkSession, dir: String): DataFrame = {
-    val (k, nBands) = minhashConf(spark)
-    lshScoredPairs(spark, dir, k, nBands)
+  def shingleContainment(spark: SparkSession, dir: String): DataFrame =
+    lshScoredPairs(spark, dir, NumHashes, Bands)
       .select(
         col("doc1"), col("doc2"), col("n_common"), col("s1_size"),
         col("s2_size"),
@@ -334,7 +317,6 @@ object DedupOps {
           (lit(3L) * col("n_common") < col("s1_size") + col("s2_size")))
           .as("containment_only"))
       .orderBy(col("doc1"), col("doc2"))
-  }
 
   /** Exact n-gram Jaccard within a blocking key (same source), computed
     * the shuffle-native way: explode distinct shingles, join on (source,
@@ -394,26 +376,21 @@ object DedupOps {
   private[operators] val SsjoinThreshold = 0.6
 
   /** The MEASURED corpus-size gate for [[ssjoinPrefix]]'s verification
-    * join, its only consumer (`graft.ssjoin.broadcast` =
-    * auto|force|never): one cheap single-column sum(n_chars) probe of
-    * the corpus (the shingle frame's size is ~linear in chars) decides;
-    * under broadcastMaxChars (default 5×10⁷ ≈ a 100-200 MB broadcast)
-    * the broadcast applies, above it the join stays shuffle-shaped.
-    * AQE-style runtime statistics, paid once per call — unlike a static
-    * hint, the decision REVERSES itself at scale.
+    * join, its only consumer: one cheap single-column sum(n_chars) probe
+    * of the corpus (the shingle frame's size is ~linear in chars)
+    * decides; under `graft.ssjoin.broadcastMaxChars` (default 5×10⁷ ≈ a
+    * 100-200 MB broadcast) the broadcast applies, above it the join
+    * stays shuffle-shaped. AQE-style runtime statistics, paid once per
+    * call — unlike a static hint, the decision REVERSES itself at scale.
     */
   private def ssjoinBroadcastCorpus(spark: SparkSession,
-                                    dir: String): Boolean =
-    spark.conf.get("graft.ssjoin.broadcast", "auto") match {
-      case "force" => true
-      case "never" => false
-      case _ =>
-        val maxChars = spark.conf
-          .get("graft.ssjoin.broadcastMaxChars", "50000000").toLong
-        val totalChars = Tables.documents(spark, dir)
-          .agg(coalesce(sum(col("n_chars")), lit(0L))).head().getLong(0)
-        totalChars <= maxChars
-    }
+                                    dir: String): Boolean = {
+    val maxChars = spark.conf
+      .get("graft.ssjoin.broadcastMaxChars", "50000000").toLong
+    val totalChars = Tables.documents(spark, dir)
+      .agg(coalesce(sum(col("n_chars")), lit(0L))).head().getLong(0)
+    totalChars <= maxChars
+  }
 
   /** Candidate pairs for [[ssjoinPrefix]] via PREFIX FILTERING
     * (SSJoin, Chaudhuri et al. ICDE'06; AllPairs, Bayardo et al.
@@ -450,23 +427,21 @@ object DedupOps {
               explode(graft.functions.TextExprs.withSize(col("shingles")))
                 .as("p"))
       .select(col("doc_id"), col("p.x").as("shingle"), col("p.n").as("n_sh"))
-    // r13 (§2.4): document frequency as a WINDOW count over the posting
-    // frame instead of groupBy + join-back — before, `posts` (the
-    // corpus-wide shingle explode) was evaluated twice (aggregate build
-    // + join probe) and the postings crossed two shuffles; the window
-    // form explodes once and shuffles once, keyed on the same shingle
-    // (the docLogprobBigram c2 idiom). df values are identical: shingle
-    // sets are distinct per doc, so the per-shingle posting count IS the
+    // document frequency as a WINDOW count over the posting frame, not
+    // groupBy + join-back: the join-back form evaluates `posts` (the
+    // corpus-wide shingle explode) twice (aggregate build + join probe)
+    // and sends the postings through two shuffles; the window form
+    // explodes once and shuffles once, keyed on the same shingle (the
+    // docLogprobBigram c2 idiom). df values are identical: shingle sets
+    // are distinct per doc, so the per-shingle posting count IS the
     // document frequency either way.
     //
-    // r14 examined, REVERTED ON MEASUREMENT: a gated-broadcast df side
-    // (groupBy(shingle) agg + broadcast hash join under the measured
-    // corpus gate, so postings skip the shingle sort+exchange) probed
-    // same-box min-of-5 at 1.570 s vs the window form's 1.259 s — the
-    // second corpus explode (the aggregate's own pass) plus the
-    // broadcast build's driver round-trip cost more than the one
-    // posting shuffle they removed. The window form stays (§1.1:
-    // measure, don't assume).
+    // Measured and rejected: a gated-broadcast df side (groupBy(shingle)
+    // agg + broadcast hash join under the measured corpus gate, so
+    // postings skip the shingle sort+exchange) ran same-box min-of-5 at
+    // 1.570 s vs the window form's 1.259 s — the second corpus explode
+    // (the aggregate's own pass) plus the broadcast build's driver
+    // round-trip cost more than the one posting shuffle they removed.
     posts
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))))
@@ -549,20 +524,13 @@ object DedupOps {
     // verification joins back to the corpus shingle frame: the corpus
     // side grows with the dataset (terabytes at full scale), so an
     // UNCONDITIONAL broadcast hint would be a guaranteed OOM there —
-    // hints win over AQE. `graft.ssjoin.broadcast` picks the posture:
-    //  - auto (default): MEASURED gate — one cheap single-column
-    //    sum(n_chars) probe of the corpus (the shingle frame's size is
-    //    ~linear in chars) decides; under broadcastMaxChars (default
-    //    5×10⁷ ≈ a 100-200 MB broadcast) the hint applies, above it the
-    //    join stays plain and shuffles on doc_id with the post-prefilter
-    //    candidate frame as the small side. The probe is AQE-style
-    //    runtime statistics, paid once per call — unlike a static hint,
-    //    the decision REVERSES itself at scale. (Plain-join-under-AQE
-    //    alone is not enough: sessions with AQE off — and any engine
-    //    relying on estimated instead of observed sizes — would shuffle
-    //    a dev-scale corpus for no reason.)
-    //  - force / never: explicit overrides for benchmarking and plan
-    //    tests.
+    // hints win over AQE. [[ssjoinBroadcastCorpus]] MEASURES instead:
+    // under its bound the hint applies, above it the join stays plain
+    // and shuffles on doc_id with the post-prefilter candidate frame as
+    // the small side. (Plain-join-under-AQE alone is not enough:
+    // sessions with AQE off — and any engine relying on estimated
+    // instead of observed sizes — would shuffle a dev-scale corpus for
+    // no reason.)
     val shBase = shingled(spark, dir).select(col("doc_id"), col("shingles"))
     val sh = if (ssjoinBroadcastCorpus(spark, dir)) broadcast(shBase)
              else shBase
@@ -807,8 +775,8 @@ object DedupOps {
        |)""".stripMargin
 
   /** [[minhashLshSql]] at an explicit (k, bands) — generated from the
-    * same constants [[lshScoredPairs]] uses, so the knob variants (e.g.
-    * `dedup_minhash_wideband`) share one SQL builder with the default.
+    * same constants [[lshScoredPairs]] uses, so the wider banding
+    * (`dedup_minhash_wideband`) shares one SQL builder with the default.
     */
   private def minhashLshSqlAt(k: Int, nBands: Int): String = {
     val r = k / nBands
@@ -933,7 +901,7 @@ object DedupOps {
               col("min_quality"), col("max_quality"))
       .orderBy(col("reason"))
 
-  /** Per-dataset persisted cluster-label frame (r13): THREE queries
+  /** Per-dataset persisted cluster-label frame: THREE queries
     * consume the full LSH → union-find/star-contraction pipeline
     * (`dedup_clusters`, `cluster_representatives`, `golden_records`),
     * and each call of [[dedupClustersImpl]] does EAGER work (pair
@@ -1529,10 +1497,9 @@ object DedupOps {
     * postings + collisions cost instead of |sample|² array
     * intersections (measured ~6 s → ~0.5 s on the 500-doc sample).
     */
-  // r14: the truth aggregate is persisted HERE (per dataset) so both of
-  // its consumers — recall_matrix's grid rows and lsh_recall — share
-  // one build; CalibrationOps previously wrapped it in its own store,
-  // which left lshRecall re-deriving the identical frame.
+  // the truth aggregate is persisted HERE (per dataset) so both of its
+  // consumers — recall_matrix's grid rows and lsh_recall — share one
+  // build
   private val sampleTruthStore = new FrameStore(2)
 
   private[operators] def sampleTruth(spark: SparkSession,
@@ -1594,8 +1561,6 @@ object DedupOps {
       6)
 
   def lshRecall(spark: SparkSession, dir: String): DataFrame = {
-    val (k, nBands) = minhashConf(spark)
-    val rowsPerBand = k / nBands
     val t = sampleTruth(spark, dir)
     val caught = dedupMinhashLsh(spark, dir)
       .filter(col("doc1") < RecallSampleDocs && col("doc2") < RecallSampleDocs)
@@ -1606,7 +1571,7 @@ object DedupOps {
         round(col("n_caught").cast("double") /
                 greatest(col("n_true_pairs"), lit(1L)),
               6).as("recall"),
-        expectedRecall(col("ps"), col("n_true_pairs"), nBands, rowsPerBand)
+        expectedRecall(col("ps"), col("n_true_pairs"), Bands, RowsPerBand)
           .as("expected_recall"))
   }
 

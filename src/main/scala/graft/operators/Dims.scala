@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions.broadcast
   * relying on estimated instead of observed sizes — would shuffle a
   * kilobyte dimension for no reason.
   *
-  * This generalizes the measured auto/force/never gate that
-  * [[DedupOps.ssjoinPrefix]] introduced (graft.ssjoin.broadcast): a
+  * This generalizes the measured gate of [[DedupOps.ssjoinPrefix]]: a
   * cheap, cached metadata row-count of the BASE parquet table bounds
   * the derived frame from above (filter/project never add rows), and
   * the hint applies only under `graft.dims.broadcastMaxRows` (default
@@ -30,10 +29,6 @@ import org.apache.spark.sql.functions.broadcast
   * per-event-type stats with ~6 keys) keep their unconditional hints —
   * they are bounded by construction and gating them would only add a
   * probe.
-  *
-  * Knobs:
-  *   - graft.dims.broadcast        = auto | force | never
-  *   - graft.dims.broadcastMaxRows = row bound for auto (default 4e6)
   */
 object Dims {
   /** Per-JVM cache of base-table row counts. The probe is a real (if
@@ -56,23 +51,14 @@ object Dims {
       s"$dir/$table",
       spark.read.parquet(s"$dir/$table.parquet").count())
 
-  /** Gate a broadcast hint on a measured upper bound of the frame's
-    * rows. `auto` (default) broadcasts iff the bound is under
-    * graft.dims.broadcastMaxRows; force/never override for plan tests
-    * and benchmarking.
+  /** Gate a broadcast hint on the named base table's cached row count,
+    * an upper bound of the frame's rows: broadcast iff it is under
+    * graft.dims.broadcastMaxRows.
     */
-  def gate(spark: SparkSession, df: DataFrame, upperBoundRows: => Long): DataFrame =
-    spark.conf.get("graft.dims.broadcast", "auto") match {
-      case "force" => broadcast(df)
-      case "never" => df
-      case _ =>
-        val maxRows =
-          spark.conf.get("graft.dims.broadcastMaxRows", "4000000").toLong
-        if (upperBoundRows <= maxRows) broadcast(df) else df
-    }
-
-  /** Gate with the named base table's cached count as the bound. */
   def gateTable(spark: SparkSession, dir: String, table: String)(
-      df: DataFrame): DataFrame =
-    gate(spark, df, baseRows(spark, dir, table))
+      df: DataFrame): DataFrame = {
+    val maxRows =
+      spark.conf.get("graft.dims.broadcastMaxRows", "4000000").toLong
+    if (baseRows(spark, dir, table) <= maxRows) broadcast(df) else df
+  }
 }

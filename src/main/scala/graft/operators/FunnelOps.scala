@@ -172,7 +172,14 @@ object FunnelOps {
     * truncation, so parity holds at any data. Default is ~60× the
     * densest testdata user and generous for any human timeline.
     */
-  private[graft] val FunnelMaxEvents = 4096
+  private val FunnelMaxEvents = 4096
+
+  /** The session's hot-user cap: `graft.funnel.maxEvents`, else
+    * [[FunnelMaxEvents]]. Read here for the batch fold and for the
+    * streaming twin's cap audit.
+    */
+  private[graft] def maxEvents(spark: SparkSession): Int =
+    spark.conf.get("graft.funnel.maxEvents", FunnelMaxEvents.toString).toInt
 
   /** "Not reached" sentinel for the funnel fold: far BELOW any real µs
     * timestamp, chosen so `event_us − sentinel` cannot overflow BIGINT
@@ -228,8 +235,7 @@ object FunnelOps {
                              windowMicros: Long): DataFrame = {
     val big = lit(FunnelSentinel)
     val w = lit(windowMicros)
-    val maxEv =
-      spark.conf.get("graft.funnel.maxEvents", FunnelMaxEvents.toString).toInt
+    val maxEv = maxEvents(spark)
     val step = when(col("event_type") === "view", 1)
       .when(col("event_type") === "click", 2)
       .otherwise(3)

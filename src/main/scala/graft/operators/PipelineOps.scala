@@ -190,17 +190,15 @@ object PipelineOps {
     * each surviving token's estimate is joined against its exact count
     * and `within_bound` asserts est ≤ exact ≤ est + max_err — the
     * sketch guarantee, checkable row-by-row by a portable oracle. With
-    * the default `graft.topk.k` = 64 (above the corpus vocabulary) the
-    * summary is provably exact and order-independent (see the sketch
-    * scaladoc), so est = exact and max_err = 0 hash-match exactly; at
-    * 100 TB one lowers k to the memory budget and keeps the same gate.
+    * k = 64 (above the corpus vocabulary) the summary is provably exact
+    * and order-independent (see the sketch scaladoc), so est = exact and
+    * max_err = 0 hash-match exactly; at 100 TB one lowers k to the
+    * memory budget and keeps the same gate.
     * The exact side is the same one-shuffle token aggregation
     * [[vocabTopK]] uses; the sketch side adds NO shuffle beyond the
     * single-row final merge (one k-entry summary per partition).
     */
   def approxTopTokens(spark: SparkSession, dir: String): DataFrame = {
-    val k = spark.conf.get("graft.topk.k", "64").toInt
-    require(k >= 1, s"graft.topk.k must be >= 1: $k")
     val pairs = Tables
       .documents(spark, dir)
       .select(explode(graft.functions.TextExprs.tokenCounts(col("text")))
@@ -208,7 +206,7 @@ object PipelineOps {
       .select(col("tc.token").as("token"), col("tc.tf").cast("long").as("tf"))
     val summary = pairs
       .agg(graft.functions.TopKSketch
-        .topTokens(k)(col("token"), col("tf")).as("mg"))
+        .topTokens(64)(col("token"), col("tf")).as("mg"))
       .select(explode(col("mg.items")).as("it"))
       .select(col("it.token").as("token"), col("it.est").as("est_count"),
               col("it.maxerr").as("max_err"))

@@ -84,13 +84,8 @@ object PrivacyOps {
     * is persisted via [[FrameStore]] so the three lattice levels share
     * one scan. At 100 TB the raw table is touched exactly once, and
     * partial aggregation absorbs any hot QI value map-side.
-    *
-    * k defaults to 10 and is session-tunable via `graft.privacy.k`
-    * (validated positive), following the `graft.ann.*` knob pattern.
     */
   def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    val k = spark.conf.get("graft.privacy.k", "10").toInt
-    require(k > 0, s"graft.privacy.k=$k must be positive")
     val g0 = qiCounts.getOrBuild(spark, dir) {
       Tables
         .customer(spark, dir)
@@ -99,31 +94,37 @@ object PrivacyOps {
         .agg(count(lit(1)).as("n_rows"))
     }
     val pass0 = g0
-      .filter(col("n_rows") >= k)
+      .filter(col("n_rows") >= AnonymityK)
       .select(col("qi_segment"), col("qi_nation"), col("n_rows"),
               lit(0).cast("int").as("gen_level"),
               lit(false).as("suppressed"))
     val g1 = g0
-      .filter(col("n_rows") < k)
+      .filter(col("n_rows") < AnonymityK)
       .groupBy(col("qi_segment"))
       .agg(sum(col("n_rows")).as("n_rows"))
     val pass1 = g1
-      .filter(col("n_rows") >= k)
+      .filter(col("n_rows") >= AnonymityK)
       .select(col("qi_segment"), lit("*").as("qi_nation"), col("n_rows"),
               lit(1).cast("int").as("gen_level"),
               lit(false).as("suppressed"))
     val pass2 = g1
-      .filter(col("n_rows") < k)
+      .filter(col("n_rows") < AnonymityK)
       .agg(sum(col("n_rows")).as("n_rows"))
       .filter(col("n_rows").isNotNull)
       .select(lit("*").as("qi_segment"), lit("*").as("qi_nation"),
               col("n_rows"), lit(2).cast("int").as("gen_level"),
-              (col("n_rows") < k).as("suppressed"))
+              (col("n_rows") < AnonymityK).as("suppressed"))
     pass0
       .unionByName(pass1)
       .unionByName(pass2)
       .orderBy(col("gen_level"), col("qi_segment"), col("qi_nation"))
   }
+
+  /** The k of [[kAnonymity]]: every released group holds ≥ 10 rows. */
+  private val AnonymityK = 10
+
+  /** The l of [[lDiversity]]: distinct sensitive bands a group needs. */
+  private val DiversityL = 3
 
   /** QI group-count frame, shared by the three lattice levels. */
   private val qiCounts = new FrameStore(4)
@@ -137,11 +138,8 @@ object PrivacyOps {
     * bit-exact across engines); a released group needs ≥ l DISTINCT
     * bands. One shuffle, `count_distinct` partial-aggregates map-side
     * (band cardinality ≤ 11, so the distinct state is tiny per group).
-    * l defaults to 3, session-tunable via `graft.privacy.l`.
     */
-  def lDiversity(spark: SparkSession, dir: String): DataFrame = {
-    val l = spark.conf.get("graft.privacy.l", "3").toInt
-    require(l > 0, s"graft.privacy.l=$l must be positive")
+  def lDiversity(spark: SparkSession, dir: String): DataFrame =
     Tables
       .customer(spark, dir)
       .select(col("c_mktsegment").as("qi_segment"),
@@ -150,9 +148,8 @@ object PrivacyOps {
       .groupBy(col("qi_segment"), col("qi_nation"))
       .agg(count(lit(1)).as("n_rows"),
            count_distinct(col("band")).as("n_bands"))
-      .withColumn("l_ok", col("n_bands") >= l)
+      .withColumn("l_ok", col("n_bands") >= DiversityL)
       .orderBy(col("qi_segment"), col("qi_nation"))
-  }
 
   /** t-closeness audit — the distributional tightening of
     * [[lDiversity]] (Li et al. ICDE'07): a group passes only if its
@@ -288,15 +285,10 @@ object PrivacyOps {
     * `\d`/`\b` stay literal; DuckDB `regexp_replace` needs the explicit
     * 'g' flag to match Spark's replace-all default.
     *
-    * KNOB CONTRACT: these oracles hardcode the DEFAULT knob values
-    * (`graft.privacy.k`=10, `graft.privacy.l`=3,
-    * `graft.privacy.salt`=epoch0). Oracle parity is defined at the
-    * defaults only — a session that overrides a knob changes the Spark
-    * result by design and must not run the verify gate against these
-    * strings (the same contract every knob-bearing query family here
-    * follows, e.g. minhash k/bands). Non-default runs are covered by
-    * ScalaTest properties instead (OperatorSpec's non-default-knob
-    * cases), which recompute the expectation from the session knobs.
+    * These oracles hardcode k = 10, l = 3 and the default
+    * `graft.privacy.salt` (epoch0). A session that sets another salt
+    * changes the Spark release by design and must not run the verify
+    * gate against these strings; OperatorSpec covers a second salt.
     */
   val oracles: Map[String, String] = Map(
     "t_closeness" ->

@@ -36,9 +36,9 @@ object SearchOps {
     * as [[PipelineOps.vocabTopK]]: the per-token aggregation is the only
     * shuffle, with effective map-side combine.
     */
-  /** Per-dataset persisted (doc, token, tf) posting frame (r13): the
+  /** Per-dataset persisted (doc, token, tf) posting frame: the
     * tokenization pass is the expensive stage of every LM-scoring
-    * query, and it was re-run per consumer (`tfidf_topterms`,
+    * query, and unpersisted it re-runs per consumer (`tfidf_topterms`,
     * `dsir_weights`, `doc_logprob` → `perplexity_buckets`) AND twice
     * inside docLogprob itself (vocabulary aggregate + posting join are
     * different subtrees, so ReuseExchange cannot share their scans).
@@ -284,10 +284,10 @@ object SearchOps {
                             element_at(col("t"), i + 1).as("cur")))))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
               col("col.prev").as("prev"), col("col.cur").as("cur"))
-    // r14 (§1.2): the unigram context counts derive from the PERSISTED
-    // posting frame (termFreqs) instead of a second split() pass over
-    // the corpus — sum(tf) per token IS the occurrence count the old
-    // explode counted (token_counts tokenizes identically: trim, lower,
+    // the unigram context counts derive from the PERSISTED posting
+    // frame (termFreqs) instead of a second split() pass over the
+    // corpus — sum(tf) per token IS the occurrence count a split()
+    // explode counts (token_counts tokenizes identically: trim, lower,
     // whitespace split with trailing-empty kept), and v_size is the
     // distinct-token count either way. Plan: corpus text scans 2 → 1;
     // the hash-exact oracle gates the tokenization equivalence.
@@ -342,62 +342,34 @@ object SearchOps {
     // 1.0/3.0 (not n/3.0) so both engines evaluate bit-identical doubles:
     // floor(300 * (1.0/3.0)) = 99 but floor(300/3.0) = 100.
     //
-    // r13 (§1.2/§2.4): ONE per-language aggregate carries (lp, doc)
-    // structs, so the cutoffs AND the bucket assignment both come from
-    // the same collected list — before, `byLang` (the whole docLogprob
-    // pipeline: vocabulary agg + posting join + per-doc fold) was
-    // evaluated TWICE, once under the cutoff aggregate and once under
-    // the bucket join (plan diff: 26 Exchange → ~8, docLogprob subtree
-    // ×2 → ×1; plans/r13/perplexity_buckets_*.txt). The k-th element of
-    // the (lp, doc)-sorted list has the same lp as the k-th of the
-    // lp-sorted list (ties permute equal values only), so the cutoffs
-    // are bit-identical. Memory bound is unchanged — the old cutoff
-    // aggregate already collected every logprob per language (the
-    // documented 100 TB swap stays `approx_percentile`).
-    // r14 (§5 scale risk, wired as r13's doc promised): the exact
-    // nearest-rank-floor cutoffs collect every (lp, doc) per language
-    // into ONE in-memory array — fine at test SFs, a per-language OOM
-    // risk at 100 TB. `graft.perplexity.cutoffs=approx` swaps the
-    // cutoff computation to percentile_approx (a mergeable sketch, no
-    // per-language collect) and assigns buckets via a broadcast join
-    // over the UNCOLLECTED rows — identical dataflow shape and schema,
-    // bounded memory. The DEFAULT stays `exact`, so the declared
-    // query's results (and the oracle hash) are byte-identical at
-    // every test SF; production flips the conf above the memory bound.
-    // PerplexityCutoffSpec exercises both branches.
-    val bucketed =
-      if (spark.conf.get("graft.perplexity.cutoffs", "exact") == "approx") {
-        val cuts = byLang
-          .groupBy(col("lang"))
-          .agg(percentile_approx(col("logprob_per_token"),
-                                 array(lit(1.0 / 3.0), lit(2.0 / 3.0)),
-                                 lit(10000)).as("cs"))
-          .select(col("lang"), element_at(col("cs"), 1).as("cut_low"),
-                  element_at(col("cs"), 2).as("cut_high"))
-        byLang
-          .join(broadcast(cuts), "lang")
-          .select(col("lang"), col("cut_low"), col("cut_high"),
-                  struct(col("logprob_per_token").as("lp"),
-                         col("doc_id").as("d")).as("e"))
-      } else {
-        byLang
-          .groupBy(col("lang"))
-          .agg(sort_array(collect_list(struct(
-                 col("logprob_per_token").as("lp"), col("doc_id").as("d"))))
-                 .as("sorted"),
-               count(lit(1)).as("n"))
-          .select(
-            col("lang"),
-            element_at(col("sorted"),
-                       floor(col("n") * lit(1.0 / 3.0)).cast("int") + 1)
-              .getField("lp").as("cut_low"),
-            element_at(col("sorted"),
-                       floor(col("n") * lit(2.0 / 3.0)).cast("int") + 1)
-              .getField("lp").as("cut_high"),
-            col("sorted"))
-          .select(col("lang"), col("cut_low"), col("cut_high"),
-                  explode(col("sorted")).as("e"))
-      }
+    // ONE per-language aggregate carries (lp, doc) structs, so the
+    // cutoffs AND the bucket assignment both come from the same
+    // collected list, and `byLang` (the whole docLogprob pipeline:
+    // vocabulary agg + posting join + per-doc fold) is evaluated once
+    // (a separate cutoff aggregate + bucket join evaluates it twice: 26
+    // Exchange vs ~8; plans/r13/perplexity_buckets_*.txt). The k-th
+    // element of the (lp, doc)-sorted list has the same lp as the k-th
+    // of the lp-sorted list (ties permute equal values only), so the
+    // cutoffs are exact. The list holds every (lp, doc) of a language
+    // in memory — fine at test SFs; a 100 TB run swaps in
+    // `approx_percentile`, whose output is not the oracle's.
+    val bucketed = byLang
+      .groupBy(col("lang"))
+      .agg(sort_array(collect_list(struct(
+             col("logprob_per_token").as("lp"), col("doc_id").as("d"))))
+             .as("sorted"),
+           count(lit(1)).as("n"))
+      .select(
+        col("lang"),
+        element_at(col("sorted"),
+                   floor(col("n") * lit(1.0 / 3.0)).cast("int") + 1)
+          .getField("lp").as("cut_low"),
+        element_at(col("sorted"),
+                   floor(col("n") * lit(2.0 / 3.0)).cast("int") + 1)
+          .getField("lp").as("cut_high"),
+        col("sorted"))
+      .select(col("lang"), col("cut_low"), col("cut_high"),
+              explode(col("sorted")).as("e"))
     bucketed
       .withColumn("bucket",
                   when(col("e.lp") <= col("cut_low"), "tail")

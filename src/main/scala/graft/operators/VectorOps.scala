@@ -72,30 +72,18 @@ object VectorOps {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Bucket-code width (dims → 2^bits buckets) — the DEV-scale default
-    * the static DuckDB oracles encode. Production corpora want more
-    * planes (16-24 bits for billions of vectors, multi-probe on the
-    * near-miss codes); tune per-session via `graft.ann.bits` — the knob
-    * trades bucket collision rate (recall) for candidate volume, the
-    * same trade the MinHash k/bands knobs make.
+  /** Bucket-code width (dims → 2^bits buckets): the DEV-scale value the
+    * DuckDB oracles encode. Production corpora want more planes (16-24
+    * bits for billions of vectors); [[annLshWideband]] runs the wider
+    * 12-bit code under its own oracle.
     */
   private val SignBits = 8
 
-  private[graft] def signBits(spark: SparkSession): Int = {
-    val b = spark.conf.get("graft.ann.bits", SignBits.toString).toInt
-    require(b > 0 && b <= 64, s"graft.ann.bits=$b must be in (0, 64]")
-    b
-  }
-
-  /** IVF query-side probe count (`graft.ann.nprobe`, default 1 — the
-    * static oracle form): each query searches its n nearest coarse
-    * cells; members still live in exactly one.
+  /** Near-dup cosine threshold of [[embedNearDup]] and [[semdedup]],
+    * calibrated to the synthetic embeddings' cosine spread (real
+    * text-embedding near-dup pipelines run 0.9+).
     */
-  private[graft] def ivfProbes(spark: SparkSession): Int = {
-    val n = spark.conf.get("graft.ann.nprobe", "1").toInt
-    require(n >= 1, s"graft.ann.nprobe=$n must be >= 1")
-    n
-  }
+  private val NearDupCosine = 0.3
 
   /** Sign-bit bucket code over the first `bits` dimensions — a
     * deterministic random-hyperplane LSH (axis-aligned planes), giving
@@ -105,60 +93,20 @@ object VectorOps {
     array_join(
       transform(slice(v, 1, bits), x => when(x >= 0, "1").otherwise("0")), "")
 
-  /** Multi-probe flips (`graft.ann.multiprobe`, default 0 — the static
-    * oracle form): 1 probes every Hamming-1 neighbor code as well — the
-    * standard multi-probe LSH recall knob (a vector near a hyperplane
-    * lands on either side, so its true neighbors often sit one flipped
-    * bit away).
-    */
-  private[graft] def multiProbe(spark: SparkSession): Int = {
-    val m = spark.conf.get("graft.ann.multiprobe", "0").toInt
-    require(m == 0 || m == 1, s"graft.ann.multiprobe=$m must be 0 or 1")
-    m
-  }
-
-  /** The probe-code set for a bucket code: the exact code, plus every
-    * one-bit flip when multi-probe is on. Codes are distinct and a
-    * candidate lives in exactly one bucket, so no (query, candidate)
-    * pair can match twice.
-    *
-    * The flip sequence is bounded by `length(bucket)`, NOT the
-    * configured bit width: when `graft.ann.bits` exceeds the embedding
-    * dimensionality, [[bucketCode]]'s slice truncates to dim chars, and
-    * flips past the code length would all degenerate to the same
-    * corrupted code (substr past end is empty) — duplicate probe rows
-    * that can never match, silently adding join fan-out instead of
-    * recall.
-    */
-  private[graft] def probeCodes(bucket: Column, flips: Int): Column =
-    if (flips == 0) array(bucket)
-    else
-      concat(
-        array(bucket),
-        transform(sequence(lit(1), length(bucket)), i =>
-          concat(bucket.substr(lit(1), i - 1),
-                 when(bucket.substr(i, lit(1)) === "1", "0").otherwise("1"),
-                 bucket.substr(i + 1, length(bucket)))))
-
   /** LSH-bucketed ANN: top-5 cosine neighbors within the same sign-bucket.
     * The scale variant: candidates co-partitioned by bucket, so the join
     * fan-out is |bucket|², not |table|².
     */
   def annLshBucketed(spark: SparkSession, dir: String): DataFrame =
-    annLshBucketedAt(spark, dir, signBits(spark), multiProbe(spark))
+    annLshBucketedAt(spark, dir, SignBits)
 
-  /** [[annLshBucketed]] at EXPLICIT (bits, flips) — the session knobs
-    * are read only in the public default entry point above, so variant
-    * builds never mutate shared session conf.
-    */
-  private[operators] def annLshBucketedAt(spark: SparkSession, dir: String,
-                                          bits: Int, flips: Int): DataFrame = {
+  /** [[annLshBucketed]] at an explicit code width. */
+  private def annLshBucketedAt(spark: SparkSession, dir: String,
+                               bits: Int): DataFrame = {
     val emb = normed(spark, dir)
       .withColumn("bucket", bucketCode(col("v"), bits))
-    // query side probes its own bucket (+ Hamming-1 codes under
-    // multi-probe); candidates stay in exactly their own bucket
     val left = emb.select(
-      explode(probeCodes(col("bucket"), flips)).as("bucket"),
+      col("bucket"),
       col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val scored = emb
       .join(left, Seq("bucket"))
@@ -173,23 +121,12 @@ object VectorOps {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Near-dup cosine threshold (`graft.ann.cosine`, default 0.3 — the
-    * static oracle form, calibrated to the synthetic embeddings' cosine
-    * spread; real text-embedding near-dup pipelines run 0.9+). Same
-    * validate-and-default pattern as the other ANN knobs.
-    */
-  private[graft] def cosineThreshold(spark: SparkSession): Double = {
-    val t = spark.conf.get("graft.ann.cosine", "0.3").toDouble
-    require(t >= -1.0 && t <= 1.0, s"graft.ann.cosine=$t must be in [-1, 1]")
-    t
-  }
-
   /** Embedding-cosine near-duplicate pairs within buckets
-    * (cosine ≥ [[cosineThreshold]]).
+    * (cosine ≥ [[NearDupCosine]]).
     */
   def embedNearDup(spark: SparkSession, dir: String): DataFrame = {
     val emb = normed(spark, dir)
-      .withColumn("bucket", bucketCode(col("v"), signBits(spark)))
+      .withColumn("bucket", bucketCode(col("v"), SignBits))
     val right = emb.select(col("bucket"), col("vec_id").as("vec2"),
                            col("v").as("v2"), col("nrm").as("n2"))
     emb
@@ -197,7 +134,7 @@ object VectorOps {
       .filter(col("vec_id") < col("vec2"))
       .withColumn("cosine",
                   round(dot(col("v"), col("v2")) / (col("nrm") * col("n2")), 6))
-      .filter(col("cosine") >= cosineThreshold(spark))
+      .filter(col("cosine") >= NearDupCosine)
       .select(col("vec_id").as("vec1"), col("vec2"), col("cosine"))
       .orderBy(col("vec1"), col("vec2"))
   }
@@ -210,7 +147,7 @@ object VectorOps {
     * measures (the minhashSigFrame convention). Rows are [[normed]]'s
     * (vec_id, v, nrm) plus the cell `label`, `d2` and `rn`.
     *
-    * Persisted per dataset (r14, §5): the centroid aggregate +
+    * Persisted per dataset: the centroid aggregate +
     * crossJoin + window subtree was re-derived by EVERY consumer
     * subtree — `recall_matrix`'s three ivf grid rows each reference it
     * twice (member assignment + query probes, different filters, so
@@ -257,19 +194,16 @@ object VectorOps {
     * ties break on label, rank ties on neighbor id.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvfAt(spark, dir, ivfProbes(spark))
+    annIvfAt(spark, dir, 1)
 
-  /** [[annIvf]] at an EXPLICIT probe count — the session knob is read
-    * only in the public default entry point above, so variant builds
-    * never mutate shared session conf.
-    */
-  private[operators] def annIvfAt(spark: SparkSession, dir: String,
-                                  nprobe: Int): DataFrame = {
+  /** [[annIvf]] at an explicit probe count. */
+  private def annIvfAt(spark: SparkSession, dir: String,
+                       nprobe: Int): DataFrame = {
     val ranked = ivfRanked(spark, dir)
 
     // members live in exactly their nearest cell; QUERIES probe their
-    // `nprobe` nearest cells (default 1, the oracle form) — the
-    // standard IVF recall knob: more probed cells, more candidates
+    // `nprobe` nearest cells — the standard IVF recall lever: more
+    // probed cells, more candidates
     val assigned = ranked
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("label").as("cell"), col("v"), col("nrm"))
@@ -291,21 +225,18 @@ object VectorOps {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** [[annIvf]] at nprobe = 2 (the non-default `graft.ann.nprobe`
-    * setting) under its own oracle ([[annIvfSqlAt]] at the same probe
-    * count), so the knob provably cannot desync the engines. The count
-    * threads through [[annIvfAt]] explicitly — no shared-session conf
-    * mutation.
+  /** [[annIvf]] at nprobe = 2 under its own oracle ([[annIvfSqlAt]] at
+    * the same probe count), so the probe count provably cannot desync
+    * the engines.
     */
   def annIvfProbed(spark: SparkSession, dir: String): DataFrame =
     annIvfAt(spark, dir, 2)
 
-  /** [[annLshBucketed]] at bits = 12 (the non-default `graft.ann.bits`
-    * setting) — finer sign buckets (fewer candidates per bucket, lower
-    * recall) under its own oracle, via the explicit-parameter form.
+  /** [[annLshBucketed]] at bits = 12 — finer sign buckets (fewer
+    * candidates per bucket, lower recall) under its own oracle.
     */
   def annLshWideband(spark: SparkSession, dir: String): DataFrame =
-    annLshBucketedAt(spark, dir, 12, flips = 0)
+    annLshBucketedAt(spark, dir, 12)
 
   /** Per-label centroid statistics — the aggregation building block of an
     * IVF coarse quantizer (here over the given labels; k-means iterations
@@ -476,9 +407,9 @@ object VectorOps {
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication INSIDE k-means cells — cluster the embedding space
     * coarsely, then call two documents duplicates when their cosine
-    * inside the same cell clears [[cosineThreshold]] (`graft.ann.cosine`;
-    * the paper uses 0.95+ on real text embeddings, the default 0.3 is
-    * calibrated to this synthetic corpus' cosine spread). A vector is
+    * inside the same cell clears [[NearDupCosine]] (the paper uses 0.95+
+    * on real text embeddings; 0.3 is calibrated to this synthetic
+    * corpus' cosine spread). A vector is
     * DROPPED when a lower-id cell-mate is that similar — the
     * keep-one-per-semantic-neighborhood rule; `dup_of` names the
     * lowest such partner so the verdict is auditable.
@@ -495,7 +426,6 @@ object VectorOps {
     * no window, no driver loop.
     */
   def semdedup(spark: SparkSession, dir: String): DataFrame = {
-    val tau = cosineThreshold(spark)
     val assigned = kmeansAssign(spark, dir).withColumn("nrm", norm(col("v")))
     val mates = assigned.select(col("cell"), col("vec_id").as("vec2"),
                                 col("v").as("v2"), col("nrm").as("n2"))
@@ -505,7 +435,7 @@ object VectorOps {
       .withColumn("cosine",
                   round(dot(col("v"), col("v2")) / (col("nrm") * col("n2")),
                         6))
-      .filter(col("cosine") >= tau)
+      .filter(col("cosine") >= NearDupCosine)
       .groupBy(col("vec_id"))
       .agg(min(struct(col("vec2"), col("cosine"))).as("m"))
       .select(col("vec_id"), col("m.vec2").as("dup_of"),
@@ -730,10 +660,9 @@ object VectorOps {
        |)""".stripMargin
   }
 
-  /** Shared CTE: double-cast vectors + norms via the same left fold. */
-  /** Normalized-embedding CTE at an explicit sign-bucket width —
-    * generated from the same constant [[bucketCode]] uses, so the knob
-    * variants (`ann_lsh_wideband`) share one builder with the default.
+  /** Shared CTE: double-cast vectors + norms via the same left fold,
+    * plus the sign-bucket code at an explicit width, so the wider twin
+    * (`ann_lsh_wideband`) shares one builder with the default.
     */
   private def embSqlAt(bits: Int): String =
     s"""WITH e AS (
@@ -926,10 +855,10 @@ object VectorOps {
          |WHERE round($dotSql / (q.nrm * c.nrm), 6) >= 0.3
          |ORDER BY vec1, vec2""".stripMargin,
     "ann_ivf" -> annIvfSqlAt(1),
-    // graft.ann.nprobe=2 path under the gate: queries probe their TWO
-    // nearest cells (candidates stay in exactly their home cell)
+    // nprobe=2 twin under the gate: queries probe their TWO nearest
+    // cells (candidates stay in exactly their home cell)
     "ann_ivf_probed" -> annIvfSqlAt(2),
-    // graft.ann.bits=12 path under the gate: finer sign buckets
+    // 12-bit twin under the gate: finer sign buckets
     "ann_lsh_wideband" -> annLshSqlAt(12),
     "embed_quantize" ->
       """WITH e AS (

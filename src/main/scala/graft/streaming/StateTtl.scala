@@ -13,8 +13,7 @@ import org.apache.spark.sql.streaming.{TTLConfig, TimeMode}
   * dedup) are unbounded in KEY CARDINALITY — a 100 TB deployment
   * with churning users must bound the store, and processing-time TTL is
   * the standard Flink/Spark answer (`StateTtlConfig` there,
-  * `TTLConfig` here). Same validate-and-default pattern as the
-  * `graft.ann.*` / `graft.minhash.*` knobs.
+  * `TTLConfig` here).
   *
   * TTL requires `TimeMode.ProcessingTime` in transformWithState, so the
   * stream builders derive the time mode from the resolved config —

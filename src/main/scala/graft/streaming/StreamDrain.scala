@@ -1143,9 +1143,7 @@ object StreamDrain {
         .select(col("user_id"), col("depth"))
       val ev = graft.Tables.events(spark, dir)
       val allUsers = ev.select(col("user_id")).distinct()
-      val maxEv = spark.conf
-        .get("graft.funnel.maxEvents",
-             graft.operators.FunnelOps.FunnelMaxEvents.toString).toInt
+      val maxEv = graft.operators.FunnelOps.maxEvents(spark)
       val capAudit = ev
         .filter(col("event_type").isin("view", "click", "purchase"))
         .groupBy(col("user_id"))

@@ -119,6 +119,29 @@ class GateInvariantSpec extends SparkSpec {
     assert(count("readEventFileStream(") > 0, "no drain reads through readEventFileStream")
   }
 
+  test("session conf: src/main reads exactly the seven graft.* bounds and secrets") {
+    // Algorithm parameters are constants that their oracles pin. The
+    // graft.* keys left are size and memory bounds a deployment sets to
+    // its hardware, the per-release privacy salt and the state TTL.
+    // Guard: the set of "graft.<area>.<name>" string literals under
+    // src/main/scala is exactly these. Conf names are lowerCamel, so a
+    // class name such as graft.plans.GraftExtensions does not match;
+    // the expected set is non-empty, so the scan cannot pass vacuously.
+    import scala.jdk.CollectionConverters._
+    val kept = Set("graft.compact.target", "graft.dims.broadcastMaxRows",
+                   "graft.funnel.maxEvents", "graft.privacy.salt",
+                   "graft.ssjoin.broadcastMaxChars", "graft.state.ttl",
+                   "graft.topk.maxPartialBufferedRows")
+    val key = "\"(graft\\.[a-z]+\\.[a-z][A-Za-z]*)\"".r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap(p => key.findAllMatchIn(new String(
+        java.nio.file.Files.readAllBytes(p), "UTF-8")).map(_.group(1)))
+      .toSet
+    assert(found == kept)
+  }
+
   test("every query output is scalar-only (driver's row sorter dies on nested types)") {
     val dir = sf("sf0.001")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {

@@ -525,17 +525,28 @@ class OperatorSpec extends SparkSpec {
       .foreach(r => assert(r.getAs[Int]("gen_level") == 2))
     // sf0.001 has sub-k (segment, nation) cells, so the lattice must climb
     assert(out.exists(_.getAs[Int]("gen_level") > 0))
-    // absurd k forces everything into the level-2 residual, still conserved
-    spark.conf.set("graft.privacy.k", "1000000")
-    try {
-      val all = PrivacyOps.kAnonymity(spark, dir).collect()
-      assert(all.length == 1 && all.head.getAs[Long]("n_rows") == total &&
-        all.head.getAs[Boolean]("suppressed"))
-      spark.conf.set("graft.privacy.k", "0")
-      intercept[IllegalArgumentException] {
-        PrivacyOps.kAnonymity(spark, dir)
-      }
-    } finally spark.conf.unset("graft.privacy.k")
+    // a fixture whose every group, segment and total is below k=10
+    // collapses into the level-2 residual, still conserved
+    val small = customerFixture("kanon", Seq(
+      (1L, "AUTOMOBILE", 1L, 100.0), (2L, "AUTOMOBILE", 2L, 200.0),
+      (3L, "BUILDING", 1L, 300.0), (4L, "BUILDING", 1L, 5300.0),
+      (5L, "MACHINERY", 3L, -50.0), (6L, "MACHINERY", 4L, 9000.0)))
+    val all = PrivacyOps.kAnonymity(spark, small).collect()
+    assert(all.length == 1 && all.head.getAs[Long]("n_rows") == 6L &&
+      all.head.getAs[Boolean]("suppressed"))
+  }
+
+  /** A temp-dir `customer.parquet` of (custkey, segment, nation, acctbal)
+    * rows — the columns the privacy audits read.
+    */
+  private def customerFixture(prefix: String,
+                              rows: Seq[(Long, String, Long, Double)]): String = {
+    val session = spark
+    import session.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    rows.toDF("c_custkey", "c_mktsegment", "c_nationkey", "c_acctbal")
+      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    dir
   }
 
   test("window_funnel: planted chains hit exactly their reachable depth") {
@@ -702,11 +713,19 @@ class OperatorSpec extends SparkSpec {
       assert(r.getAs[Long]("n_bands") <= r.getAs[Long]("n_rows"))
       assert(r.getAs[Boolean]("l_ok") == (r.getAs[Long]("n_bands") >= 3L))
     }
-    // raising l to an impossible level flags every group
-    Posture.withConf(spark, "graft.privacy.l" -> Some("1000")) {
-      assert(PrivacyOps.lDiversity(spark, sf("sf0.001")).collect()
-        .forall(!_.getAs[Boolean]("l_ok")))
-    }
+    // a fixture whose every group holds fewer than l=3 distinct bands —
+    // one homogeneous 5-row group among them — is flagged everywhere
+    val small = customerFixture("ldiv", Seq(
+      (1L, "AUTOMOBILE", 1L, 2100.0), (2L, "AUTOMOBILE", 1L, 2200.0),
+      (3L, "AUTOMOBILE", 1L, 2300.0), (4L, "AUTOMOBILE", 1L, 2400.0),
+      (5L, "AUTOMOBILE", 1L, 2900.0),
+      (6L, "BUILDING", 2L, 100.0), (7L, "BUILDING", 2L, 5100.0),
+      (8L, "MACHINERY", 3L, 700.0)))
+    val flagged = PrivacyOps.lDiversity(spark, small).collect()
+    assert(flagged.map(r => r.getAs[String]("qi_segment") ->
+      r.getAs[Long]("n_bands")).toMap ==
+      Map("AUTOMOBILE" -> 1L, "BUILDING" -> 2L, "MACHINERY" -> 1L))
+    assert(flagged.forall(!_.getAs[Boolean]("l_ok")))
   }
 
   test("t_closeness: EMD bounded in [0,1], verdict matches the integer gate") {
@@ -907,10 +926,6 @@ class OperatorSpec extends SparkSpec {
     assert(df.join(cellMin, Seq("cell", "vec_id")).filter(!col("kept")).isEmpty)
     assert(df.filter(!col("kept")).count() > 0) // non-degenerate at default τ
     df.unpersist()
-    // τ = 1.0 keeps everything (no identical vectors in the corpus)
-    Posture.withConf(spark, "graft.ann.cosine" -> Some("1.0"))(
-      assert(VectorOps.semdedup(spark, sf("sf0.001"))
-        .filter(!col("kept")).isEmpty))
   }
 
   test("bloom_semi_join: equals the plain semi-join; bloom prunes at the scan") {

@@ -600,11 +600,6 @@ class PlanSpec extends SparkSpec {
       assert(hints().isEmpty,
              "auto gate must not broadcast above the size threshold")
     }
-    // explicit overrides
-    Posture.withConf(spark, "graft.ssjoin.broadcast" -> Some("never"))(
-      assert(hints().isEmpty))
-    Posture.withConf(spark, "graft.ssjoin.broadcast" -> Some("force"))(
-      assert(hints().nonEmpty))
   }
 
   test("SF-scaling dim broadcasts go through the measured Dims gate") {
@@ -641,11 +636,6 @@ class PlanSpec extends SparkSpec {
       val p = planOf(OlapOps.q3Shipping(spark, d))
       assert(!p.contains("CartesianProduct"))
     }
-    // explicit overrides
-    Posture.withConf(spark, "graft.dims.broadcast" -> Some("never"))(
-      assert(hintCount(OlapOps.q3Shipping(spark, d)) == 0))
-    Posture.withConf(spark, "graft.dims.broadcast" -> Some("force"))(
-      assert(hintCount(OlapOps.q3Shipping(spark, d)) == 1))
   }
 
   test("q21 stacks semi + anti joins on one order-key partitioning") {

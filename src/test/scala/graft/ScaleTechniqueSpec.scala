@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{DedupOps, SkewOps}
+import graft.operators.{DedupOps, SkewOps, VectorOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cluster-scale join techniques, demonstrated and guarded: bucketed
@@ -177,12 +178,11 @@ class ScaleTechniqueSpec extends SparkSpec {
     labels.unpersist()
   }
 
-  test("minhash k/bands are session-tunable; s-curve explains production k=128") {
+  test("minhash banding: s-curve explains production k=128; wideband agrees on shared pairs") {
     import graft.operators.DedupOps
     // analytic s-curve 1-(1-s^r)^b at the 0.5 Jaccard threshold: dev
     // (b=4, r=4) catches ~23% of threshold pairs per the curve; the
-    // production choice k=128 → (b=32, r=4) catches ~87% — the reason
-    // the knob exists
+    // production choice k=128 → (b=32, r=4) catches ~87%
     val dev = DedupOps.lshCatchProbability(0.5, bands = 4, rows = 4)
     val prod = DedupOps.lshCatchProbability(0.5, bands = 32, rows = 4)
     assert(math.abs(dev - (1 - math.pow(1 - 0.0625, 4))) < 1e-12 &&
@@ -194,129 +194,47 @@ class ScaleTechniqueSpec extends SparkSpec {
     assert((1 to 32).map(b => DedupOps.lshCatchProbability(0.5, b, 4))
              .sliding(2).forall(p => p(0) < p(1)))
 
-    // conf-driven run at k=32/bands=8: still a valid dedup output (the
-    // exact-Jaccard verification is k-independent), and pairs found by
-    // both configs carry identical verified scores
-    spark.conf.set("graft.minhash.k", "32")
-    spark.conf.set("graft.minhash.bands", "8")
-    try {
-      val alt = DedupOps.dedupMinhashLsh(spark, sf("sf0.001")).cache()
-      assert(alt.filter(col("jaccard") < 0.5).isEmpty)
-      assert(alt.count() > 0)
-      spark.conf.unset("graft.minhash.k")
-      spark.conf.unset("graft.minhash.bands")
-      val base = DedupOps.dedupMinhashLsh(spark, sf("sf0.001"))
-      val disagree = alt
-        .select(col("doc1"), col("doc2"), col("jaccard").as("j_alt"))
-        .join(base, Seq("doc1", "doc2"))
-        .filter(col("jaccard") =!= col("j_alt"))
-      assert(disagree.isEmpty)
-      alt.unpersist()
-      // invalid banding is rejected up front
-      spark.conf.set("graft.minhash.k", "10")
-      spark.conf.set("graft.minhash.bands", "4")
-      intercept[IllegalArgumentException](
-        DedupOps.dedupMinhashLsh(spark, sf("sf0.001")))
-    } finally {
-      spark.conf.unset("graft.minhash.k")
-      spark.conf.unset("graft.minhash.bands")
-    }
+    // the wider banding (bands=8, rows=2): still a valid dedup output
+    // (the exact-Jaccard verification is banding-independent), and
+    // pairs found by both bandings carry identical verified scores
+    val alt = DedupOps.dedupMinhashWideband(spark, sf("sf0.001")).cache()
+    assert(alt.filter(col("jaccard") < 0.5).isEmpty)
+    assert(alt.count() > 0)
+    val shared = alt
+      .select(col("doc1"), col("doc2"), col("jaccard").as("j_alt"))
+      .join(DedupOps.dedupMinhashLsh(spark, sf("sf0.001")), Seq("doc1", "doc2"))
+    assert(!shared.isEmpty)
+    assert(shared.filter(col("jaccard") =!= col("j_alt")).isEmpty)
+    alt.unpersist()
   }
 
-  test("sign-bit LSH width is session-tunable; wider codes refine buckets") {
+  /** (query_id, rank) → cosine of a top-k neighbor frame. */
+  private def byRank(df: DataFrame): Map[(Long, Long), Double] = {
     val session = spark
     import session.implicits._
-    def pairs(): Set[(Long, Long)] =
-      graft.operators.VectorOps.embedNearDup(spark, sf("sf0.001"))
-        .select("vec1", "vec2").as[(Long, Long)].collect().toSet
-    val p8 = pairs() // default 8 bits
-    try {
-      spark.conf.set("graft.ann.bits", "12")
-      val p12 = pairs()
-      // a 12-bit bucket match implies an 8-bit prefix match, so wider
-      // codes can only LOSE candidates — the recall/volume trade the
-      // knob exists to make
-      assert(p12.subsetOf(p8))
-      spark.conf.set("graft.ann.bits", "0")
-      intercept[IllegalArgumentException](
-        graft.operators.VectorOps.embedNearDup(spark, sf("sf0.001")))
-    } finally spark.conf.unset("graft.ann.bits")
+    df.select("query_id", "rank", "cosine")
+      .as[(Long, Long, Double)].collect()
+      .map { case (q, r, c) => (q, r) -> c }.toMap
   }
 
-  test("multi-probe LSH probes Hamming-1 codes; never worsens any rank") {
-    val session = spark
-    import session.implicits._
-    def byRank(): Map[(Long, Long), Double] =
-      graft.operators.VectorOps.annLshBucketed(spark, sf("sf0.001"))
-        .select("query_id", "rank", "cosine")
-        .as[(Long, Long, Double)].collect()
-        .map { case (q, r, c) => (q, r) -> c }.toMap
-    val exact = byRank() // default: exact bucket only
-    try {
-      spark.conf.set("graft.ann.multiprobe", "1")
-      val probed = byRank()
-      // flipped-bit probes only ADD candidates
-      assert(exact.forall { case (k, c) => probed.get(k).forall(_ >= c - 1e-9) })
-      assert(probed.size >= exact.size)
-      spark.conf.set("graft.ann.multiprobe", "2")
-      intercept[IllegalArgumentException](
-        graft.operators.VectorOps.annLshBucketed(spark, sf("sf0.001")))
-    } finally spark.conf.unset("graft.ann.multiprobe")
+  test("sign-bit LSH: wider codes refine buckets, never improve any rank") {
+    val b8 = byRank(VectorOps.annLshBucketed(spark, sf("sf0.001")))
+    val b12 = byRank(VectorOps.annLshWideband(spark, sf("sf0.001")))
+    // a 12-bit bucket match implies an 8-bit prefix match, so wider
+    // codes can only LOSE candidates — the recall/volume trade the
+    // wider code makes: at every (query, rank) the 8-bit neighbor is at
+    // least as close
+    assert(b12.nonEmpty)
+    assert(b12.forall { case (k, c12) => b8.get(k).exists(_ >= c12 - 1e-9) })
   }
 
-  test("IVF nprobe is session-tunable; more probes never worsen any rank") {
-    val session = spark
-    import session.implicits._
-    def byRank(): Map[(Long, Long), Double] =
-      graft.operators.VectorOps.annIvf(spark, sf("sf0.001"))
-        .select("query_id", "rank", "cosine")
-        .as[(Long, Long, Double)].collect()
-        .map { case (q, r, c) => (q, r) -> c }.toMap
-    val one = byRank() // default nprobe=1
-    try {
-      spark.conf.set("graft.ann.nprobe", "3")
-      val three = byRank()
-      // probing more cells only ADDS candidates, so the cosine at every
-      // (query, rank) position can only improve or stay equal
-      assert(one.forall { case (k, c1) => three.get(k).forall(_ >= c1 - 1e-9) })
-      assert(three.nonEmpty)
-      spark.conf.set("graft.ann.nprobe", "0")
-      intercept[IllegalArgumentException](
-        graft.operators.VectorOps.annIvf(spark, sf("sf0.001")))
-    } finally spark.conf.unset("graft.ann.nprobe")
-  }
-
-  test("multi-probe flip set is bounded by the code length, not the bit knob") {
-    // graft.ann.bits > embedding dim truncates the bucket code to dim
-    // chars; flips past the code length used to degenerate to one
-    // corrupted code (substr past end is empty), silently replacing
-    // recall with duplicate join fan-out. The flip sequence must track
-    // length(bucket): a 3-char code probes exactly itself + 3 flips.
-    val session = spark
-    import session.implicits._
-    val codes = Seq("101").toDF("bucket")
-      .select(explode(graft.operators.VectorOps.probeCodes(col("bucket"), 1))
-        .as("p"))
-      .as[String].collect().toSeq
-    assert(codes == Seq("101", "001", "111", "100"))
-    assert(codes.distinct.size == 4 && codes.forall(_.length == 3))
-  }
-
-  test("near-dup cosine threshold is session-tunable; higher = subset") {
-    val session = spark
-    import session.implicits._
-    def pairs(): Set[(Long, Long)] =
-      graft.operators.VectorOps.embedNearDup(spark, sf("sf0.001"))
-        .select("vec1", "vec2").as[(Long, Long)].collect().toSet
-    val base = pairs() // default 0.3
-    try {
-      spark.conf.set("graft.ann.cosine", "0.5")
-      val strict = pairs()
-      assert(strict.subsetOf(base) && strict.size < base.size)
-      spark.conf.set("graft.ann.cosine", "1.5")
-      intercept[IllegalArgumentException](
-        graft.operators.VectorOps.embedNearDup(spark, sf("sf0.001")))
-    } finally spark.conf.unset("graft.ann.cosine")
+  test("IVF nprobe: more probes never worsen any rank") {
+    val one = byRank(VectorOps.annIvf(spark, sf("sf0.001")))
+    val two = byRank(VectorOps.annIvfProbed(spark, sf("sf0.001")))
+    // probing more cells only ADDS candidates, so the cosine at every
+    // (query, rank) position can only improve or stay equal
+    assert(two.nonEmpty)
+    assert(one.forall { case (k, c1) => two.get(k).exists(_ >= c1 - 1e-9) })
   }
 
   test("pointer-jumping on an empty pair set yields empty labels") {

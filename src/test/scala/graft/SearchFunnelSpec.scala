@@ -69,36 +69,6 @@ class SearchFunnelSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("perplexity_buckets: approx-cutoff scale branch matches the exact " +
-    "branch's shape and invariants") {
-    // the 100 TB memory-bound path (graft.perplexity.cutoffs=approx):
-    // percentile_approx cutoffs + broadcast-join bucket assignment —
-    // the conf-gated swap r14 wired. Default stays exact (the oracle
-    // hash gates that branch); this exercises the approx branch.
-    val exact = SearchOps.perplexityBuckets(spark, sf("sf0.001"))
-    Posture.withConf(spark, "graft.perplexity.cutoffs" -> Some("approx")) {
-      val df = SearchOps.perplexityBuckets(spark, sf("sf0.001")).cache()
-      // identical schema, and still a partition of the corpus
-      assert(df.schema == exact.schema)
-      val docs = Tables.documents(spark, sf("sf0.001"))
-      assert(df.agg(sum(col("n_docs"))).head.getLong(0) == docs.count())
-      // the approx plan must NOT collect per-language lists: the exact
-      // branch's sort_array(collect_list(...)) cutoff aggregate is
-      // replaced by the percentile_approx sketch. (docLogprob's
-      // per-DOC array_sort fold is bounded by document length and
-      // legitimately remains.)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("percentile_approx"))
-      assert(!plan.contains("sort_array"))
-      for (r <- df.collect()) {
-        assert(r.getAs[Double]("cut_low") <= r.getAs[Double]("cut_high"))
-        assert(r.getAs[Double]("min_logprob") <= r.getAs[Double]("max_logprob"))
-        assert(Set("head", "middle", "tail")(r.getAs[String]("bucket")))
-      }
-      df.unpersist()
-    }
-  }
-
   test("funnel_conversion: counts shrink down the funnel, head rate is 1") {
     val rows = FunnelOps
       .funnelConversion(spark, sf("sf0.001"))
