@@ -178,7 +178,7 @@ class ScaleTechniqueSpec extends SparkSpec {
     labels.unpersist()
   }
 
-  test("minhash banding: s-curve explains production k=128; wideband agrees on shared pairs") {
+  test("minhash banding: s-curve explains k=128; wideband agrees on shared pairs") {
     import graft.operators.DedupOps
     // analytic s-curve 1-(1-s^r)^b at the 0.5 Jaccard threshold: dev
     // (b=4, r=4) catches ~23% of threshold pairs per the curve; the
