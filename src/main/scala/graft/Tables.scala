@@ -38,24 +38,30 @@ import graft.plans.{GraftExtensions, SmallSortStrategy}
   */
 object Tables {
 
-  /** (file, length, modification time) of every file under a path. */
-  private type Listing = Seq[(String, Long, Long)]
+  /** (file, length, modification time) of every file under a path,
+    * sorted: the version of the files a memo derived from the path holds
+    * ([[graft.operators.FrameStore]], [[graft.operators.VersionedMemo]]).
+    */
+  private[graft] type Listing = Seq[(String, Long, Long)]
 
   private val schemas =
     new java.util.WeakHashMap[SparkSession, Map[String, (Listing, StructType)]]
 
-  private def listing(spark: SparkSession, path: String): Listing = {
-    val p = new Path(path)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+  /** The [[Listing]] of `path` (a file or a directory tree), empty when
+    * it does not exist. Walks with `listStatus`, never `listFiles`:
+    * `LocatedFileStatus` reads permissions, which Hadoop's local file
+    * system does by starting an `ls` per file (Spark's own leaf listing
+    * avoids it for the same reason).
+    */
+  private[graft] def listing(spark: SparkSession, path: String): Listing = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-    } catch { case _: FileNotFoundException => } // inference reports it
-    files.result().sorted
+    try walk(new Path(path)).sorted
+    catch { case _: FileNotFoundException => Nil } // inference reports it
   }
 
   private def parquet(spark: SparkSession, path: String): DataFrame = {

@@ -157,10 +157,8 @@ object AnomalyOps {
     * persisted once per dataset ([[FrameStore]]) and every alert-family
     * consumer reads it.
     */
-  private val alertStore = new FrameStore(4)
-
   private def scoredStore(spark: SparkSession, dir: String): DataFrame =
-    alertStore.getOrBuild(spark, dir)(scored(spark, dir))
+    FrameStore.shared.getOrBuild(spark, dir, "scored")(scored(spark, dir))
 
   /** Anomalies only, with the reference's alert fields: thresholds,
     * formatted description (`String.format`,

@@ -51,28 +51,16 @@ object CalibrationOps {
   private val IvfGrid = Seq(1, 2, 3)
   private val IvfCells = 10L
 
-  // the shared truth frames are tiny (one aggregate row; 100
-  // (query, neighbor) pairs) but expensive to derive — each is persisted
-  // once per dataset (FrameStore) so the per-grid-row union branches all
-  // reference ONE cached plan instead of re-running the truth subtree
-  // 4× each. The minhash truth now persists inside DedupOps.sampleTruth
-  // (r14) so lsh_recall shares the same build. Lazy on purpose:
-  // plan-only inspection (schema, explain) must not trigger cluster
-  // work, which an eager localCheckpoint would.
-  private val signTruthStore = new FrameStore(2)
-
-  // r14 (the truthStore idiom, §1.2/§5): ONE persisted (param_a,
-  // param_b, n_caught) frame holds all four minhash grid counts — each
-  // count is the identical per-row aggregate as before (same candidate
-  // generation, same sample filter, same exact-Jaccard verification),
-  // but the four union branches now FILTER one cached 4-row frame
-  // instead of each carrying its own banding + bucket + pair-expansion
-  // + verification subtree through planning and execution.
-  private val minhashCountsStore = new FrameStore(2)
-
+  // ONE persisted (param_a, param_b, n_caught) frame holds all four
+  // minhash grid counts — each count is the identical per-row aggregate
+  // (same candidate generation, same sample filter, same exact-Jaccard
+  // verification), but the four union branches FILTER one cached 4-row
+  // frame instead of each carrying its own banding + bucket +
+  // pair-expansion + verification subtree through planning and
+  // execution.
   private def minhashCaughtCounts(spark: SparkSession,
                                   dir: String): DataFrame =
-    minhashCountsStore.getOrBuild(spark, s"$dir#minhashCaught")(
+    FrameStore.shared.getOrBuild(spark, dir, "minhashCaughtCounts")(
       MinhashGrid.map { case (k, b) =>
         DedupOps
           .minhashLshPairsSampled(spark, dir, k, b, DedupOps.RecallSampleDocs)
@@ -81,25 +69,16 @@ object CalibrationOps {
                   col("n_caught"))
       }.reduce(_ unionByName _))
 
-  // r14: one persisted scored (hamming, cosine) candidate pass PER
-  // `bits` VALUE, shared by every probe row of that bits (4 at the
-  // shipped grid → the two probe rows of bits=4 and of bits=8 each
-  // read one cached pass instead of running an independent
-  // broadcast-nested-loop Hamming+cosine pass over the corpus). Keyed
-  // (dataset, bits); 4 slots hold both grid bits values for two
-  // concurrently exercised datasets.
-  private val signScoredStore = new FrameStore(4)
-
   def recallMatrix(spark: SparkSession, dir: String): DataFrame = {
     val t = DedupOps.sampleTruth(spark, dir)
     val counts = minhashCaughtCounts(spark, dir)
     val minhashRows = MinhashGrid.map { case (k, b) =>
-      // r13: sample filter pushed below the exact-Jaccard verification
+      // sample filter pushed below the exact-Jaccard verification
       // (identical match set — the filter commutes with pair-local
       // scoring; see minhashLshPairsSampled), so each grid row verifies
-      // only in-sample candidates instead of the whole corpus's.
-      // r14: the count comes from the shared [[minhashCaughtCounts]]
-      // frame — the same aggregate value, one cached build.
+      // only in-sample candidates instead of the whole corpus's. The
+      // count comes from the shared [[minhashCaughtCounts]] frame — the
+      // same aggregate value, one cached build.
       val caught = counts
         .filter(col("param_a") === k.toLong && col("param_b") === b.toLong)
         .select(col("n_caught"))
@@ -176,10 +155,13 @@ object CalibrationOps {
 
   /** Exact cosine top-5 truth — built ONCE and shared by every
     * `sign_lsh` and `ivf` grid row; only the candidate side depends on
-    * the row's parameters.
+    * the row's parameters. Tiny (100 (query, neighbor) pairs) but
+    * expensive to derive, so persisted per dataset, and lazily:
+    * plan-only inspection (schema, explain) must not trigger cluster
+    * work, which an eager localCheckpoint would.
     */
   private def signTruth(spark: SparkSession, dir: String): DataFrame =
-    signTruthStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "signTruth") {
       val emb = VectorOps.normed(spark, dir)
       top5(
         emb
@@ -201,7 +183,7 @@ object CalibrationOps {
     * from `(spark, dir)`, which with `bits` is the whole store key.
     */
   private def signScored(spark: SparkSession, dir: String, bits: Int): DataFrame =
-    signScoredStore.getOrBuild(spark, s"$dir#sign_bits=$bits") {
+    FrameStore.shared.getOrBuild(spark, dir, s"signScored bits=$bits") {
       val maxProbe = SignGrid.collect { case (b, p) if b == bits => p }.max
       val emb = VectorOps.normed(spark, dir)
       val qb = VectorOps.queryVecs(emb)

@@ -76,24 +76,18 @@ object DedupOps {
         transform(sequence(i + 1, size(ds)),
                   j => pair(element_at(ds, i), element_at(ds, j))))))
 
-  private val shingleStore = new FrameStore(2)
-
-  // per-(dataset, k) MinHash signature frames: the signature pass (k
-  // hash mixes per shingle) is the expensive stage of every LSH
-  // consumer, and recall_matrix sweeps band settings that SHARE a k —
-  // three of its four minhash grid rows reuse the k=16 frame. Persisted
-  // once per (dataset, k); at cluster scale this is the written
-  // signatures table between dedup stages. Capacity 4 = two datasets ×
-  // two k values in flight (tests touch sf0.001 and sf0.01).
-  private val sigStore = new FrameStore(4)
-
   /** MinHash signature frame (doc_id, sig) at an explicit k, persisted
     * per (dataset, k) — the single signature pass shared by
-    * [[lshScoredPairs]] across every band setting at that k.
+    * [[lshScoredPairs]] across every band setting at that k. The
+    * signature pass (k hash mixes per shingle) is the expensive stage
+    * of every LSH consumer, and recall_matrix sweeps band settings that
+    * SHARE a k — three of its four minhash grid rows reuse the k=16
+    * frame. At cluster scale this is the written signatures table
+    * between dedup stages.
     */
   private[graft] def minhashSigFrame(spark: SparkSession, dir: String,
                                      k: Int): DataFrame =
-    sigStore.getOrBuild(spark, s"$dir#k=$k") {
+    FrameStore.shared.getOrBuild(spark, dir, s"minhashSig k=$k") {
       shingled(spark, dir)
         .withColumn("sig",
                     graft.functions.TextExprs.minhashSignature(col("shingles"), k))
@@ -115,7 +109,7 @@ object DedupOps {
     */
 
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    shingleStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "shingled") {
       Tables
         .documents(spark, dir)
         .withColumn("shingles",
@@ -157,15 +151,13 @@ object DedupOps {
     * verification joins back to the (cheap) shingle sets only.
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    // persisted per dataset (the shingleStore idiom): the verified
+    // persisted per dataset (like the shingled frame): the verified
     // near-dup pair frame is consumed by FIVE declared paths —
     // dedup_minhash_lsh itself, dedup_cascade, dedup_verify_editdist,
     // lsh_recall, and the cluster-label pipeline — each of which would
     // otherwise re-run candidate generation + exact verification
-    lshPairsStore.getOrBuild(spark, s"$dir#lshPairs")(
+    FrameStore.shared.getOrBuild(spark, dir, "lshPairs")(
       minhashLshPairs(spark, dir, NumHashes, Bands))
-
-  private val lshPairsStore = new FrameStore(2)
 
   /** [[dedupMinhashLsh]] at the wider banding (k=16, bands=8, rows=2 —
     * higher recall, more candidate shuffle) under its own oracle
@@ -665,15 +657,6 @@ object DedupOps {
   def dedupCascade(spark: SparkSession, dir: String): DataFrame =
     cascadeVerdict(spark, dir).orderBy(col("doc_id"))
 
-  /** Per-dataset persisted verdict frame (doc_id, kept, reason) — three
-    * rows wide, so cheap to cache; shared by [[dedupCascade]],
-    * [[cascadeSavings]] and [[qualityByVerdict]] so the embedded LSH +
-    * SimHash pipelines run once per dataset, not once per consumer (at
-    * cluster scale this is the written verdict table every downstream
-    * stage joins against).
-    */
-  private val cascadeStore = new FrameStore(2)
-
   /** Survivor ids of the full dedup cascade — the doc set every
     * downstream curation stage starts from ([[PipelineOps]]'
     * `curation_manifest` consumes this against the same persisted
@@ -683,8 +666,15 @@ object DedupOps {
                                      dir: String): DataFrame =
     cascadeVerdict(spark, dir).filter(col("kept")).select(col("doc_id"))
 
+  /** Per-dataset persisted verdict frame (doc_id, kept, reason) — three
+    * rows wide, so cheap to cache; shared by [[dedupCascade]],
+    * [[cascadeSavings]] and [[qualityByVerdict]] so the embedded LSH +
+    * SimHash pipelines run once per dataset, not once per consumer (at
+    * cluster scale this is the written verdict table every downstream
+    * stage joins against).
+    */
   private def cascadeVerdict(spark: SparkSession, dir: String): DataFrame =
-    cascadeStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "cascadeVerdict") {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val exactDrop = dedupExact(spark, dir)
       .filter(col("n_copies") > 1)
@@ -907,13 +897,11 @@ object DedupOps {
     * and each call of [[dedupClustersImpl]] does EAGER work (pair
     * count + label derivation) — so without sharing, the whole
     * clustering ran once per consumer per bench run. Same idiom as
-    * [[cascadeStore]]: at cluster scale this is the written
+    * [[cascadeVerdict]]: at cluster scale this is the written
     * cluster-assignment table every downstream stage joins.
     */
-  private val clusterStore = new FrameStore(2)
-
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterStore.getOrBuild(spark, dir)(
+    FrameStore.shared.getOrBuild(spark, dir, "dedupClusters")(
       dedupClustersImpl(spark, dir, DriverUnionFindMaxPairs))
 
   /** Canonical-document selection per near-dup cluster — the decision
@@ -1213,8 +1201,6 @@ object DedupOps {
     */
   private val SpanTokens = 5
 
-  private val gramStore = new FrameStore(2)
-
   /** Duplicated-span fraction per document — the n-gram approximation of
     * exact-substring dedup ("Deduplicating Training Data Makes Language
     * Models Better", Lee et al., ACL '22): every positional
@@ -1261,7 +1247,7 @@ object DedupOps {
     * intermediate of [[dupSpanFraction]] and [[stripDupSpans]].
     */
   private def spanGrams(spark: SparkSession, dir: String): DataFrame =
-    gramStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "spanGrams") {
       spanToks(spark, dir)
         .filter(size(col("t")) >= SpanTokens)
         .select(col("doc_id"),
@@ -1500,11 +1486,9 @@ object DedupOps {
   // the truth aggregate is persisted HERE (per dataset) so both of its
   // consumers — recall_matrix's grid rows and lsh_recall — share one
   // build
-  private val sampleTruthStore = new FrameStore(2)
-
   private[operators] def sampleTruth(spark: SparkSession,
                                      dir: String): DataFrame =
-    sampleTruthStore.getOrBuild(spark, s"$dir#sampleTruth")(
+    FrameStore.shared.getOrBuild(spark, dir, "sampleTruth")(
       sampleTruthPlan(spark, dir))
 
   private def sampleTruthPlan(spark: SparkSession,

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
@@ -31,24 +29,20 @@ import org.apache.spark.sql.functions.broadcast
   * probe.
   */
 object Dims {
-  /** Per-JVM cache of base-table row counts. The probe is a real (if
-    * cheap) Spark job at plan-construction time: a zero-column parquet
-    * count that reads file footers, not data pages — and each
-    * (dir, table) pays it at most once per JVM. At full cluster scale
-    * even footer-listing a multi-billion-row dim is not free; there the
-    * gate reads the same upper bound from catalog statistics
-    * (table-level row counts every lakehouse catalog maintains) — the
-    * gate only needs an upper BOUND, not a fresh scan, which is why
-    * `baseRows` is a seam rather than inlined at the call sites.
-    */
-  private val rowCounts = TrieMap.empty[String, Long]
-
   /** Upper bound on the rows of any frame derived from `table` by
-    * filter/select/join-on-unique-key: the base table's row count.
+    * filter/select/join-on-unique-key: the base table's row count. The
+    * probe is a real (if cheap) Spark job at plan-construction time: a
+    * zero-column parquet count that reads file footers, not data pages —
+    * and each (dir, table) pays it once per file version
+    * ([[VersionedMemo]]). At full cluster scale even footer-listing a
+    * multi-billion-row dim is not free; there the gate reads the same
+    * upper bound from catalog statistics (table-level row counts every
+    * lakehouse catalog maintains) — the gate only needs an upper BOUND,
+    * not a fresh scan, which is why `baseRows` is a seam rather than
+    * inlined at the call sites.
     */
   def baseRows(spark: SparkSession, dir: String, table: String): Long =
-    rowCounts.getOrElseUpdate(
-      s"$dir/$table",
+    VersionedMemo(spark, dir, s"rows $table")(
       spark.read.parquet(s"$dir/$table.parquet").count())
 
   /** Gate a broadcast hint on the named base table's cached row count,

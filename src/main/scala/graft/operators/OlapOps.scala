@@ -314,10 +314,10 @@ object OlapOps {
     * broadcast (AQE), so the audit costs a scan per child table.
     */
   def fkIntegrity(spark: SparkSession, dir: String): DataFrame = {
-    // r14 (§1.2): total + orphan counts fused into ONE conditional
-    // aggregate over a left join against the DISTINCT parent keys —
-    // before, each edge scanned its child table twice (a count pass and
-    // an anti-join pass), and lineitem is the corpus-scale child.
+    // total + orphan counts fused into ONE conditional aggregate over
+    // a left join against the DISTINCT parent keys, so each edge scans
+    // its child table once (not a count pass plus an anti-join pass),
+    // and lineitem is the corpus-scale child.
     // Distinct parent keys make the left join row-preserving (a PK
     // duplicate can never double-count children), so count(1) is the
     // old total and count(match is null) the old anti-join count.
@@ -996,12 +996,11 @@ object OlapOps {
     * so the hash match proves the expansion lost no pair.
     */
   def basketPairs(spark: SparkSession, dir: String): DataFrame = {
-    // r13 (§2.4): collect_set replaces distinct()+collect_list — the
-    // same sorted distinct-parts array in ONE exchange keyed on
-    // l_orderkey (with map-side partial sets) instead of a distinct
-    // exchange on (orderkey, partkey) followed by a second exchange on
-    // orderkey (plan diff: 3 Exchange → 2, one lineitem-scale shuffle
-    // removed; plans/r13/basket_pairs_*.txt)
+    // collect_set, not distinct()+collect_list: the same sorted
+    // distinct-parts array in ONE exchange keyed on l_orderkey (with
+    // map-side partial sets) instead of a distinct exchange on
+    // (orderkey, partkey) followed by a second exchange on orderkey
+    // (3 Exchange → 2, one lineitem-scale shuffle fewer)
     val baskets = Tables
       .lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -1134,24 +1133,22 @@ object OlapOps {
     * [[Dims.gateTable]] gate (broadcast at dev scale, plain shuffled
     * join once the part count outgrows the bound).
     */
-  // r14 (§5): the distinct (orderkey, partkey) frame is consumed by
-  // THREE subtrees of basket_rules (basket count, item supports, pair
-  // supports) — each one re-scanned lineitem through the distinct
+  // the distinct (orderkey, partkey) frame is consumed by THREE
+  // subtrees of basket_rules (basket count, item supports, pair
+  // supports), each of which would re-scan lineitem through the distinct
   // exchange. Persisted per dataset so lineitem is scanned (and the
   // distinct computed) once; the consumers read the cached frame.
-  private val basketItemsStore = new FrameStore(2)
-
   private def basketItems(spark: SparkSession, dir: String): DataFrame =
-    basketItemsStore.getOrBuild(spark, s"$dir#basketItems")(
+    FrameStore.shared.getOrBuild(spark, dir, "basketItems")(
       Tables
         .lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_partkey"))
         .distinct())
 
   def basketRules(spark: SparkSession, dir: String): DataFrame = {
-    // r13 examined, left on the shared distinct() ON MEASUREMENT: the
-    // basket_pairs rewrite (collect_set, one exchange) was tried here
-    // too and REGRESSED 1.36 s → 1.65 s — with THREE consumers
+    // left on the shared distinct() ON MEASUREMENT: the basket_pairs
+    // rewrite (collect_set, one exchange) was tried here too and
+    // REGRESSED 1.36 s → 1.65 s — with THREE consumers
     // (basket count, item supports, pair supports) the shared
     // distinct's cheap codegen HashAggregate beats re-running the
     // ObjectHashAggregate set-build above the reused exchange per
@@ -1235,15 +1232,14 @@ object OlapOps {
       .filter(col("l_shipdate") >
         col("o_orderdate") + expr("INTERVAL 60 DAY"))
       .select(col("l_orderkey"), col("l_suppkey"))
-    // r14 A/B, MEASURED AND KEPT ON THE SEMI/ANTI FORM: the r13-deferred
-    // single-aggregation variant (per-(order, supplier) late-line counts
+    // MEASURED AND KEPT ON THE SEMI/ANTI FORM: the single-aggregation
+    // variant (per-(order, supplier) late-line counts
     // + a late-supplier window + a count_distinct(supplier) aggregate on
     // the 2-column lineitem projection, numwait = sum of late-line
     // counts) was implemented and probed same-box min-of-5 at sf0.1:
     // semi/anti 1.203 s vs single-aggregation 1.375 s — the
     // count_distinct's two-phase (orderkey, suppkey) expansion costs
-    // more than the semi join it replaces, exactly as the r13 note
-    // predicted. Keeping the classic rewrite: all three joins key on
+    // more than the semi join it replaces. Keeping the classic rewrite: all three joins key on
     // l_orderkey, so one hash partitioning serves end-to-end.
     val l2 = lines.select(col("l_orderkey").as("l2_orderkey"),
                           col("l_suppkey").as("l2_suppkey"))
@@ -1359,25 +1355,22 @@ object OlapOps {
     * set is the nation table, so plain lexicographic orientation
     * suffices.
     */
-  /** Persisted trade-edge frame (r13 optimization, guide §2.4/§5): the
-    * gated edge list is consumed by TWO queries (`trade_triangles`,
-    * `trade_reach`) and — worse — by THREE subtrees of the triangle
-    * query's single plan (e1 ⋈ e2 ⋈semi e3), each of which re-ran the
-    * full lineitem⋈orders⋈customer⋈supplier⋈nation aggregation before
-    * this round (plan evidence: `plans/r13/trade_triangles_before.txt`,
-    * 50 Exchange nodes / 2 independent lineitem scans; after: the
+  /** Gated undirected trade edges shared by [[tradeTriangles]] and
+    * [[tradeReach]]: nation pairs whose summed trade volume clears the
+    * data-adaptive 1.2× mean-pair gate (integer cross-multiplied).
+    *
+    * Persisted per dataset: the edge list is consumed by TWO queries
+    * and by THREE subtrees of the triangle query's single plan (e1 ⋈
+    * e2 ⋈semi e3), each of which would re-run the full
+    * lineitem⋈orders⋈customer⋈supplier⋈nation aggregation (unpersisted:
+    * 50 Exchange nodes and 2 independent lineitem scans; persisted: the
     * corpus-scale subtree appears once). The frame itself is bounded by
     * |nations|² — metadata scale — so persisting it is the written
     * edge-list table any production graph pass materializes.
     */
-  private val tradeEdgeStore = new FrameStore(2)
-
-  /** Gated undirected trade edges shared by [[tradeTriangles]] and
-    * [[tradeReach]]: nation pairs whose summed trade volume clears the
-    * data-adaptive 1.2× mean-pair gate (integer cross-multiplied).
-    */
   private def tradeGatedEdges(spark: SparkSession, dir: String): DataFrame =
-    tradeEdgeStore.getOrBuild(spark, dir)(tradeGatedEdgesPlan(spark, dir))
+    FrameStore.shared.getOrBuild(spark, dir, "tradeGatedEdges")(
+      tradeGatedEdgesPlan(spark, dir))
 
   private def tradeGatedEdgesPlan(spark: SparkSession, dir: String): DataFrame = {
     val trade = Tables
@@ -1419,7 +1412,7 @@ object OlapOps {
     // bounded by |nations|² (fixed-cardinality, the Dims doctrine for
     // nation-derived frames), so the wedge/close joins run broadcast
     // over the persisted edge list instead of three SortMergeJoin
-    // exchanges (guide §3.1; r13 — see plans/r13/trade_triangles_*.txt)
+    // exchanges (guide §3.1)
     val tris = edges
       .select(col("u").as("ta"), col("v").as("tb"))
       .join(broadcast(edges.select(col("u").as("tb2"), col("v").as("tc"))),

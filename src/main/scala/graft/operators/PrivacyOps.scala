@@ -86,7 +86,7 @@ object PrivacyOps {
     * partial aggregation absorbs any hot QI value map-side.
     */
   def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    val g0 = qiCounts.getOrBuild(spark, dir) {
+    val g0 = FrameStore.shared.getOrBuild(spark, dir, "qiCounts") {
       Tables
         .customer(spark, dir)
         .groupBy(col("c_mktsegment").as("qi_segment"),
@@ -125,9 +125,6 @@ object PrivacyOps {
 
   /** The l of [[lDiversity]]: distinct sensitive bands a group needs. */
   private val DiversityL = 3
-
-  /** QI group-count frame, shared by the three lattice levels. */
-  private val qiCounts = new FrameStore(4)
 
   /** l-diversity audit — k-anonymity's necessary companion: a group can
     * satisfy k yet leak its sensitive attribute if every member shares

@@ -45,10 +45,8 @@ object SearchOps {
     * Same idiom as DedupOps.shingleStore — at cluster scale this is the
     * written postings table every retrieval pipeline materializes.
     */
-  private val termStore = new FrameStore(2)
-
   private def termFreqs(spark: SparkSession, dir: String): DataFrame =
-    termStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "termFreqs") {
       Tables
         .documents(spark, dir)
         .select(col("doc_id"),
@@ -347,7 +345,7 @@ object SearchOps {
     // collected list, and `byLang` (the whole docLogprob pipeline:
     // vocabulary agg + posting join + per-doc fold) is evaluated once
     // (a separate cutoff aggregate + bucket join evaluates it twice: 26
-    // Exchange vs ~8; plans/r13/perplexity_buckets_*.txt). The k-th
+    // Exchange vs ~8). The k-th
     // element of the (lp, doc)-sorted list has the same lp as the k-th
     // of the lp-sorted list (ties permute equal values only), so the
     // cutoffs are exact. The list holds every (lp, doc) of a language

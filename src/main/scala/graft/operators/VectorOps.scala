@@ -157,10 +157,8 @@ object VectorOps {
     * every input from `(spark, dir)`, so no caller can hand it a frame
     * the key does not name.
     */
-  private val ivfRankStore = new FrameStore(2)
-
   private[operators] def ivfRanked(spark: SparkSession, dir: String): DataFrame =
-    ivfRankStore.getOrBuild(spark, s"$dir#ivfranked")(ivfRankedPlan(spark, dir))
+    FrameStore.shared.getOrBuild(spark, dir, "ivfRanked")(ivfRankedPlan(spark, dir))
 
   private def ivfRankedPlan(spark: SparkSession, dir: String): DataFrame = {
     val centroids = Tables
@@ -350,20 +348,17 @@ object VectorOps {
       .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
         .getField("c").as("centroid"))
 
-  /** Per-dataset persisted Lloyd assignment, shared by
-    * [[kmeansCentroids]] and [[semdedup]] (same rationale as
-    * DedupOps' cascade store: the iterative clustering runs once per
-    * dataset, and at cluster scale this is the written assignment table
-    * downstream curation stages join against).
-    */
-  private val assignStore = new FrameStore(2)
-
   /** (vec_id, v, cell) after [[KmeansIters]] deterministic Lloyd
     * iterations — see [[kmeansCentroids]] for init/tie-break rules.
+    * Persisted per dataset, shared by [[kmeansCentroids]] and
+    * [[semdedup]] (same rationale as DedupOps' cascade store: the
+    * iterative clustering runs once per dataset, and at cluster scale
+    * this is the written assignment table downstream curation stages
+    * join against).
     */
   private[operators] def kmeansAssign(spark: SparkSession,
                                       dir: String): DataFrame =
-    assignStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "kmeansAssign") {
       val emb = Tables
         .embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").as("v"))
@@ -496,14 +491,11 @@ object VectorOps {
       .select(col("vec_id"), col("m"), col("sv"),
               col("mm.code").as("code"), col("mm.d").as("qerr"))
 
-  private val pqCentsStore = new FrameStore(2)
-  private val pqStore = new FrameStore(2)
-
   /** TRAINED codebook table (m, code, centroid) after [[PqIters]]
     * Lloyd iterations — persisted per dataset.
     */
   private def pqCents(spark: SparkSession, dir: String): DataFrame =
-    pqCentsStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "pqCents") {
       val sub = subvectors(spark, dir)
       var cents = sub
         .filter(col("vec_id") < PqCodes)
@@ -519,7 +511,7 @@ object VectorOps {
     * consistent pair.
     */
   private def pqAssign(spark: SparkSession, dir: String): DataFrame =
-    pqStore.getOrBuild(spark, dir) {
+    FrameStore.shared.getOrBuild(spark, dir, "pqAssign") {
       pqAssignAgainst(subvectors(spark, dir), pqCents(spark, dir))
     }
 

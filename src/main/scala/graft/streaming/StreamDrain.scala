@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.functions.Rounding.round
+import graft.operators.VersionedMemo
 
 /** Oracle-gated streaming drains: queries whose Spark side actually
   * executes `writeStream` — the same micro-batch machinery, state
@@ -114,20 +115,21 @@ object StreamDrain {
     }
   }
 
-  /** Staged-input cache, shared across drains and runs within one JVM:
-    * the staged copy of a source table is immutable for a given
-    * (dir, variant, chunks), so the ~18 drains (×3 bench runs) share ONE
-    * staging write per variant instead of re-copying the table per drain
-    * per run. Augmented variants (sentinel, duplicated, delta) key their
-    * own entries. Cache dirs live for the JVM and are removed by the
-    * shutdown hook; per-run store/checkpoint dirs stay in [[tempWorkDir]].
-    */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** CONTRACT: the (dir, variant, chunks) key must uniquely determine
-    * the staged CONTENTS — a second caller reusing a variant name with
-    * a different `build` would silently be served the first staging.
+  /** Staged-input cache, shared across drains and runs: the staged
+    * copy of a source table is immutable for a given (dir, variant,
+    * chunks) and version of the files under `dir` ([[VersionedMemo]]),
+    * so the ~18 drains (×3 bench runs) share ONE staging write per
+    * variant instead of re-copying the table per drain per run.
+    * Augmented variants (sentinel, duplicated, delta) key their own
+    * entries. A staging built over older files is deleted when its
+    * replacement is built; the rest live for the JVM and are removed by
+    * the shutdown hook; per-run store/checkpoint dirs stay in
+    * [[tempWorkDir]].
+    *
+    * CONTRACT: the (variant, chunks) name must uniquely determine the
+    * staged CONTENTS for a given version of `dir` — a second caller
+    * reusing a variant name with a different `build` would silently be
+    * served the first staging.
     * Each variant string here belongs to exactly one staging recipe
     * (events: plain / dup / sentinel / delta / latedrop / shuffled /
     * ooo / ooo_session / dirty_session / dirty_join and the restart
@@ -135,15 +137,15 @@ object StreamDrain {
     * restart_join / restart; other tables: alerts / docs / ingestdocs /
     * bands); a new recipe takes a new name.
     */
-  private def stagedPath(dir: String, variant: String, chunks: Int)
-                        (build: String => Unit): String =
-    stagedCache.computeIfAbsent(s"$dir|$variant|$chunks", _ => {
+  private def stagedPath(spark: SparkSession, dir: String, variant: String,
+                         chunks: Int)(build: String => Unit): String =
+    VersionedMemo(spark, dir, s"stage $variant $chunks") {
       exitHook
       val stage = Files.createTempDirectory(workBase, s"graft_stage_$variant")
-      liveDirs.put(s"stage|$dir|$variant|$chunks", stage)
+      Option(liveDirs.put(s"stage|$dir|$variant|$chunks", stage)).foreach(deleteTree)
       build(stage.toString)
       stage.toString
-    })
+    }
 
   /** Copy the immutable chunk files of a cached staging into a per-run
     * stage dir (COPY_ATTRIBUTES preserves the deterministic mtimes that
@@ -157,9 +159,10 @@ object StreamDrain {
     * them in (metadata-scale, tmpfs) replaces those jobs (don't
     * recompute what you throw away).
     */
-  private def copyCachedChunks(dir: String, variant: String, chunks: Int,
-                               stage: String)(build: String => Unit): Unit = {
-    val cache = stagedPath(dir, variant, chunks)(build)
+  private def copyCachedChunks(spark: SparkSession, dir: String, variant: String,
+                               chunks: Int, stage: String)
+                              (build: String => Unit): Unit = {
+    val cache = stagedPath(spark, dir, variant, chunks)(build)
     val target = java.nio.file.Paths.get(stage)
     Files.createDirectories(target)
     import scala.jdk.CollectionConverters._
@@ -174,22 +177,6 @@ object StreamDrain {
     finally s.close()
   }
 
-  /** Per-(dataset, probe) cache of the drains' data-derived staging
-    * metadata — cut timestamps, sentinel bounds, fixture-validity
-    * booleans. These are deterministic 1-row driver probes over the
-    * input (the [[graft.operators.Dims]] row-count idiom, not query
-    * results); caching them means a min-of-N bench pays each probe
-    * once per JVM instead of once per run, while every drained result
-    * still computes from the staged parquet each run. `compute` must not
-    * itself call `cachedProbe` (the map forbids a recursive update):
-    * probes that need [[corpusBounds]] read it first.
-    */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def cachedProbe[T <: AnyRef](key: String)(compute: => T): T =
-    probeCache.computeIfAbsent(key, _ => compute).asInstanceOf[T]
-
   private def events(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -198,10 +185,15 @@ object StreamDrain {
   private val ByTime = Seq(col("ts"), col("event_id"))
 
   /** The corpus's event-time bounds (min, max) in epoch ms: the one
-    * bounds probe every cut, plant and sentinel derives from.
+    * bounds probe every cut, plant and sentinel derives from. It and the
+    * drains' other staging probes (cut timestamps, fixture-validity
+    * booleans) are deterministic 1-row driver probes over the input,
+    * memoized per file version ([[VersionedMemo]]): a min-of-N bench
+    * pays each once, while every drained result still computes from the
+    * staged parquet each run.
     */
   private def corpusBounds(spark: SparkSession, dir: String): (Long, Long) =
-    cachedProbe(s"bounds|$dir") {
+    VersionedMemo(spark, dir, "bounds") {
       val b = events(spark, dir).agg(min(col("ts")), max(col("ts"))).head()
       (b.getTimestamp(0).getTime, b.getTimestamp(1).getTime)
     }
@@ -312,10 +304,10 @@ object StreamDrain {
     * the cache misses) split by `order` into `chunks` range chunk files.
     * Returns the stage dir.
     */
-  private def staged(dir: String, variant: String, order: Seq[Column],
-                     chunks: Int = MultiBatchChunks)
+  private def staged(spark: SparkSession, dir: String, variant: String,
+                     order: Seq[Column], chunks: Int = MultiBatchChunks)
                     (frame: => DataFrame): String =
-    stagedPath(dir, variant, chunks)(stageChunked(frame, _, chunks, order))
+    stagedPath(spark, dir, variant, chunks)(stageChunked(frame, _, chunks, order))
 
   /** The cached event staging `variant` of `dir` (the events table
     * passed through `augment`) as `chunks` time-ranged chunk files.
@@ -328,7 +320,7 @@ object StreamDrain {
                          variant: String = "plain",
                          chunks: Int = MultiBatchChunks,
                          augment: DataFrame => DataFrame = identity): String =
-    staged(dir, variant, ByTime, chunks)(augment(events(spark, dir)))
+    staged(spark, dir, variant, ByTime, chunks)(augment(events(spark, dir)))
 
   /** [[eventStage]] read as an event stream, one chunk file per trigger. */
   private def stagedStream(spark: SparkSession, dir: String,
@@ -480,7 +472,7 @@ object StreamDrain {
     val stage = s"$work/staged_events"
     val ev = events(spark, dir)
     def pass(half: String, firstChunk: Int)(rows: => DataFrame): DataFrame = {
-      copyCachedChunks(dir, s"${name}_$half", 2, stage)(
+      copyCachedChunks(spark, dir, s"${name}_$half", 2, stage)(
         stageChunked(rows, _, 2, ByTime, firstChunk))
       drainToStore(spark, leg(EventPipeline.readEventFileStream(spark, stage)),
                    work, mode)
@@ -685,7 +677,7 @@ object StreamDrain {
     // start, so the drain streams DIRECTLY from the shared immutable
     // staging cache instead of re-staging per run
     val (mn, mx) = corpusBounds(spark, dir)
-    val stage = stagedPath(dir, "latedrop", MultiBatchChunks + 1) { d =>
+    val stage = stagedPath(spark, dir, "latedrop", MultiBatchChunks + 1) { d =>
       stageChunked(events(spark, dir), d, MultiBatchChunks, ByTime)
       val plants = spark.range(5).select(
         (col("id") - 1000000L).as("event_id"),
@@ -1178,10 +1170,10 @@ object StreamDrain {
       import spark.implicits._
       val ev = graft.Tables.events(spark, dir)
       // the fixed cut must split the corpus with a user on both sides,
-      // or the drain degenerates to a plain snapshot drain (cached per
-      // dataset — cachedProbe)
+      // or the drain degenerates to a plain snapshot drain (probed once
+      // per file version)
       val (seedUsers, deltaUsers, bothUsers) =
-        cachedProbe[(Long, Long, Long)](s"warmstart_users|$dir") {
+        VersionedMemo(spark, dir, "warmstart_users") {
           val r = ev.groupBy(col("user_id"))
             .agg(min(col("ts")).as("first"), max(col("ts")).as("last"))
             .agg(count(when(col("first") < cut, 1)),
@@ -1239,7 +1231,7 @@ object StreamDrain {
       // doc_id rides along only to give the chunk split a deterministic
       // total order; the token-count fold itself is order-free (exact
       // counts at k = 64 > vocab), so any ordering gates identically
-      val stage = staged(dir, "docs", Seq(col("doc_id"))) {
+      val stage = staged(spark, dir, "docs", Seq(col("doc_id"))) {
         graft.Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang"),
                   split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
@@ -1280,7 +1272,7 @@ object StreamDrain {
       // batch split (LshBucketFold), and the read-back's MaxBucket cap
       // recomputes FINAL bucket sizes — so the chunk order only needs to
       // be deterministic, not meaningful
-      val stage = staged(dir, "bands", Seq(col("doc_id"), col("band")))(
+      val stage = staged(spark, dir, "bands", Seq(col("doc_id"), col("band")))(
         graft.operators.DedupOps.defaultLshBands(spark, dir))
       import spark.implicits._
       val bandsIn = fileStream(spark, stage).as[BandKeyRow]
@@ -1316,7 +1308,7 @@ object StreamDrain {
   def streamDocDedupDrain(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       val work = tempWorkDir("graft_docdedup_drain")
-      val stage = staged(dir, "ingestdocs", Seq(col("doc_id"))) {
+      val stage = staged(spark, dir, "ingestdocs", Seq(col("doc_id"))) {
         graft.Tables.documents(spark, dir)
           .select(col("doc_id"),
                   md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
@@ -1376,7 +1368,7 @@ object StreamDrain {
   private def stagedAlerts(spark: SparkSession,
                            dir: String): Dataset[AnomalyAlert] = {
     import spark.implicits._
-    fileStream(spark, staged(dir, "alerts", ByTime)(
+    fileStream(spark, staged(spark, dir, "alerts", ByTime)(
       graft.operators.AnomalyOps.scoredAlerts(spark, dir))).as[AnomalyAlert]
   }
 
@@ -1496,9 +1488,8 @@ object StreamDrain {
     // fixture-specific date) and still verifies watermark restore +
     // exactly-once resume, with the spanning assertion applied only
     // when the corpus admits a spanning pane.
-    val midMs = corpusMidMs(spark, dir)
     val (cutTs, paneSpans) =
-      cachedProbe[(java.sql.Timestamp, Boolean)](s"restart_kpi_cut|$dir") {
+      VersionedMemo(spark, dir, "restart_kpi_cut") {
         val byType = Window.partitionBy(col("event_type"))
           .orderBy(col("ts"), col("event_id"))
         val closePair = events(spark, dir)
@@ -1512,7 +1503,7 @@ object StreamDrain {
                   unix_millis(col("ts")).as("b"))
           .collect()
         (new java.sql.Timestamp(closePair.headOption
-           .fold(midMs)(r => (r.getLong(0) + r.getLong(1)) / 2)),
+           .fold(corpusMidMs(spark, dir))(r => (r.getLong(0) + r.getLong(1)) / 2)),
          closePair.nonEmpty)
       }
     val (drained, c1) =
@@ -1545,12 +1536,11 @@ object StreamDrain {
     * on a gap STRICTLY below the 30-minute timeout ([start, start +
     * gap)), so a pause of exactly the gap would straddle a session
     * boundary and make the spanning-session require fail spuriously.
-    * A 1-row driver lookup, cached per dataset (cachedProbe).
+    * A 1-row driver lookup, memoized per file version.
     */
   private def sessionPauseCut(spark: SparkSession,
-                              dir: String): java.sql.Timestamp = {
-    val midMs = corpusMidMs(spark, dir)
-    cachedProbe(s"session_pause_cut|$dir") {
+                              dir: String): java.sql.Timestamp =
+    VersionedMemo(spark, dir, "session_pause_cut") {
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val pause = events(spark, dir)
@@ -1558,7 +1548,7 @@ object StreamDrain {
         .filter(col("prev").isNotNull &&
           (unix_millis(col("ts")) - unix_millis(col("prev")))
             .between(lit(2L), lit(SessionGapMs - 1)) &&
-          unix_millis(col("prev")) >= midMs)
+          unix_millis(col("prev")) >= corpusMidMs(spark, dir))
         .orderBy(col("prev"), col("ts"), col("event_id"))
         .limit(1)
         .select(unix_millis(col("prev")).as("a"),
@@ -1570,7 +1560,6 @@ object StreamDrain {
                 "spanning session")
       new java.sql.Timestamp((pause(0).getLong(0) + pause(0).getLong(1)) / 2)
     }
-  }
 
   /** A session that began before `cut` and ended past it: its end is its
     * last event + the gap, so ending at or after cut + gap means a
@@ -1619,7 +1608,7 @@ object StreamDrain {
     */
   private def clickPurchaseCut(spark: SparkSession, dir: String,
                                afterMs: Option[Long]): java.sql.Timestamp =
-    cachedProbe(s"click_purchase_cut|$dir|${afterMs.getOrElse("")}") {
+    VersionedMemo(spark, dir, s"click_purchase_cut ${afterMs.getOrElse("")}") {
       val ev = events(spark, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("cu"), col("ts").as("cts"),
@@ -1694,10 +1683,9 @@ object StreamDrain {
     withRocksDb(spark) {
       // corpus min/max midpoint — data-derived, so a fixture with a
       // different date range still splits into two non-trivial passes
-      // (fixture-validity probe cached per dataset — cachedProbe)
-      val midMs = corpusMidMs(spark, dir)
-      val cut = cachedProbe[java.sql.Timestamp](s"restart_cut|$dir") {
-        val cutTs = new java.sql.Timestamp(midMs)
+      // (fixture-validity probe memoized per file version)
+      val cut = VersionedMemo(spark, dir, "restart_cut") {
+        val cutTs = new java.sql.Timestamp(corpusMidMs(spark, dir))
         val ev = events(spark, dir)
         val spanning = ev.filter(col("ts") < lit(cutTs)).select("user_id")
           .intersect(ev.filter(col("ts") >= lit(cutTs)).select("user_id"))
@@ -1785,7 +1773,7 @@ object StreamDrain {
     // injected in foreachBatch, not via file visibility), so the drain
     // streams DIRECTLY from the shared immutable staging cache — no
     // per-run staging jobs
-    val stage = stagedPath(dir, "dirty_session", 3) { d =>
+    val stage = stagedPath(spark, dir, "dirty_session", 3) { d =>
       val ev = events(spark, dir)
       stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 1, ByTime)
       stageChunked(
@@ -1832,7 +1820,7 @@ object StreamDrain {
     // re-derived from rolled-back buffers). The whole file set is
     // visible from the start (crash injected in foreachBatch), so the
     // drain streams DIRECTLY from the shared staging cache.
-    val stage = stagedPath(dir, "dirty_join", 5) { d =>
+    val stage = stagedPath(spark, dir, "dirty_join", 5) { d =>
       val ev = events(spark, dir)
       stageChunked(ev.filter(col("ts") < lit(cutTs)), d, 2, ByTime)
       stageChunked(ev.filter(col("ts") >= lit(cutTs)), d, 3, ByTime,
@@ -2332,7 +2320,7 @@ object StreamDrain {
   /** The cached OOO staging `variant` of `dir`, plus its `_moved` sidecar. */
   private def oooStagedAs(spark: SparkSession, dir: String, variant: String)
                          (build: String => Unit): (String, DataFrame) = {
-    val stage = stagedPath(dir, variant, MultiBatchChunks)(build)
+    val stage = stagedPath(spark, dir, variant, MultiBatchChunks)(build)
     (stage, spark.read.parquet(s"$stage/_moved"))
   }
 
@@ -2596,7 +2584,7 @@ object StreamDrain {
 
   /** The cached shuffled staging for `dir`. */
   private def shuffledStaged(spark: SparkSession, dir: String): String =
-    stagedPath(dir, "shuffled", MultiBatchChunks)(
+    stagedPath(spark, dir, "shuffled", MultiBatchChunks)(
       buildShuffledStage(spark, dir, _))
 
   /** The EWMA leg — an order-DEPENDENT per-key fold — over the

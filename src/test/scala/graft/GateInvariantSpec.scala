@@ -119,6 +119,36 @@ class GateInvariantSpec extends SparkSpec {
     assert(count("readEventFileStream(") > 0, "no drain reads through readEventFileStream")
   }
 
+  test("cache validity: one frame store, a fork-free listing, no dir-keyed drain or Dims memo") {
+    // Every memo of data derived from a dataset dir follows one rule
+    // (valid while the dir's files keep their version): frames go
+    // through the one FrameStore.shared, values through VersionedMemo,
+    // and the version comes from Tables.listing's listStatus walk
+    // (listFiles builds a LocatedFileStatus, whose permission read
+    // starts a process per file on the local file system). Guard: the
+    // constructor occurs once, listFiles never, and the only concurrent
+    // map Dims and StreamDrain declare is StreamDrain's work-dir
+    // registry. Every expected count is pinned exactly, so a scan that
+    // stops matching fails too.
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .map(p => p.getFileName.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    def count(pattern: String): Int = sources.map { case (_, text) =>
+      java.util.regex.Pattern.quote(pattern).r.findAllMatchIn(text).size }.sum
+    assert(count("new FrameStore(") == 1)
+    assert(count("listFiles(") == 0)
+    val map = "TrieMap|ConcurrentHashMap"
+    val declared = s"""private val (\\w+) =\\s*new [\\w.]*(?:$map)""".r
+    for ((file, maps) <- Seq("Dims.scala" -> Nil, "StreamDrain.scala" -> Seq("liveDirs"))) {
+      val text = sources.collectFirst { case (`file`, t) => t }.get
+      assert(declared.findAllMatchIn(text).map(_.group(1)).toList == maps, file)
+      assert(map.r.findAllMatchIn(text).size == maps.size, s"$file mentions a concurrent map")
+    }
+  }
+
   test("session conf: src/main reads exactly the seven graft.* bounds and secrets") {
     // Algorithm parameters are constants that their oracles pin. The
     // graft.* keys left are size and memory bounds a deployment sets to
@@ -143,16 +173,15 @@ class GateInvariantSpec extends SparkSpec {
   }
 
   test("every query output is scalar-only (driver's row sorter dies on nested types)") {
-    val dir = sf("sf0.001")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) =>
-        val schema = q(spark, dir).schema
-        schema.fields.collect {
-          case f if f.dataType.isInstanceOf[ArrayType] ||
-            f.dataType.isInstanceOf[MapType] ||
-            f.dataType.isInstanceOf[StructType] =>
-            s"$name.${f.name}: ${f.dataType.simpleString}"
-        }
+    val frames = RegisteredFrames(spark, sf("sf0.001"))
+    assert(frames.size == SparkEntry.queries.size)
+    val offenders = frames.flatMap { q =>
+      q.schema.fields.collect {
+        case f if f.dataType.isInstanceOf[ArrayType] ||
+          f.dataType.isInstanceOf[MapType] ||
+          f.dataType.isInstanceOf[StructType] =>
+          s"${q.name}.${f.name}: ${f.dataType.simpleString}"
+      }
     }
     assert(offenders.isEmpty, s"nested output columns: $offenders")
   }

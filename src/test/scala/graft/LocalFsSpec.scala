@@ -182,39 +182,55 @@ class LocalFsSpec extends SparkSpec {
       out.asScala.toSeq
     }
 
+  /** Commands of the processes started while `body` ran, recorded by
+    * JFR, including the two marker processes (named under `work`) that
+    * bracket it.
+    */
+  private def started(work: NioPath)(body: => Unit): Seq[String] = {
+    val commands = new ConcurrentLinkedQueue[String]()
+    val rs = new RecordingStream()
+    // a marker process: once its event is in, so is every earlier one
+    def mark(name: String): Unit = {
+      val marker = work.resolve(name).toString
+      assert(new ProcessBuilder("test", "-e", marker).start().waitFor() == 1)
+      eventually(timeout(Span(60, Seconds))) {
+        assert(commands.asScala.exists(_.contains(marker)))
+      }
+    }
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => { commands.add(e.getString("command")); () })
+      rs.startAsync()
+      mark(s"start-${System.nanoTime}")
+      body
+      mark(s"end-${System.nanoTime}")
+    } finally rs.close()
+    commands.asScala.toSeq
+  }
+
   test("a RocksDB anomaly drain starts no process under its checkpoint") {
     val work = Files.createTempDirectory("graft_localfs_jfr")
-    /** Commands of the processes started while `body` ran. */
-    def started(body: => Unit): Seq[String] = {
-      val commands = new ConcurrentLinkedQueue[String]()
-      val rs = new RecordingStream()
-      // a marker process: once its event is in, so is every earlier one
-      def mark(name: String): Unit = {
-        val marker = work.resolve(name).toString
-        assert(new ProcessBuilder("test", "-e", marker).start().waitFor() == 1)
-        eventually(timeout(Span(60, Seconds))) {
-          assert(commands.asScala.exists(_.contains(marker)))
-        }
-      }
-      try {
-        rs.enable("jdk.ProcessStart")
-        rs.onEvent("jdk.ProcessStart", e => { commands.add(e.getString("command")); () })
-        rs.startAsync()
-        mark(s"start-${System.nanoTime}")
-        body
-        mark(s"end-${System.nanoTime}")
-      } finally rs.close()
-      commands.asScala.toSeq
-    }
     def underCheckpoint(name: String, fs: Option[String]): Seq[String] = {
       stage(work.resolve(s"$name-in"), 0 until 4)
       val ckpt = work.resolve(s"$name-ckpt")
-      started(drain(work.resolve(s"$name-in"), ckpt, fs)).filter(_.contains(ckpt.toString))
+      started(work)(drain(work.resolve(s"$name-in"), ckpt, fs)).filter(_.contains(ckpt.toString))
     }
     val own = underCheckpoint("own", None)
     assert(own.isEmpty, own.groupBy(_.split(' ').head).map { case (c, s) => s"$c x${s.size}" })
     // the guard is live: the stock file system forks on the same drain
     assert(underCheckpoint("stock", Some(StockFs)).nonEmpty)
+  }
+
+  test("a Tables.events load and count start no process on the table's files") {
+    // Tables lists the table's files on every load (the version its
+    // schema memo and every dataset memo key on); the listing must not
+    // build LocatedFileStatus, whose permission read starts an `ls` per
+    // file on the local file system. Other sessions' cleanup may start
+    // processes meanwhile, so only commands naming the dataset count.
+    val work = Files.createTempDirectory("graft_localfs_events_jfr")
+    val dir = sf("sf0.001")
+    val forks = started(work)(Tables.events(spark, dir).count()).filter(_.contains(dir))
+    assert(forks.isEmpty, forks.groupBy(_.split(' ').head).map { case (c, s) => s"$c x${s.size}" })
   }
 
   /** File names under a checkpoint, relative, with UUIDs masked. */

@@ -450,11 +450,10 @@ class PlanSpec extends SparkSpec {
     // cross-frame combination must be a broadcast of a tiny side
     // (BroadcastNestedLoopJoin over a one-row stats frame is fine) or a
     // keyed join — an unkeyed CartesianProduct is always a scale bug
-    val dir = sf("sf0.001")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) Some(name) else None
+    val frames = RegisteredFrames(spark, sf("sf0.001"))
+    assert(frames.size == SparkEntry.queries.size)
+    val offenders = frames.collect {
+      case f if f.executedPlan.contains("CartesianProduct") => f.name
     }
     assert(offenders.isEmpty, s"CartesianProduct in: $offenders")
   }
